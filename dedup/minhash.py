@@ -250,11 +250,11 @@ def compute_bands(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     algorithm choice (§4-2): compare 16 hashes, not 128 components.
 
     When the signatures carry the precomputed `bands` column
-    (compute_signatures emits it since r8), this is a pure JVM posexplode —
-    no second Python crossing, no Arrow round trip of the 128-long
-    signature arrays. The Python fallback keeps decoded checkpoint tables
-    (SIGNATURE_SCHEMA, no bands column) and hand-built test frames working,
-    bit-identically (same band_hashes kernel either way).
+    (compute_signatures and pipeline.decode_signature_blocks emit it), this
+    is a pure JVM posexplode — no second Python crossing, no Arrow round
+    trip of the 128-long signature arrays. The Python fallback keeps
+    hand-built SIGNATURE_SCHEMA frames working, bit-identically (same
+    band_hashes kernel either way).
     """
     bands, rows, seed = cfg.bands, cfg.rows_per_band, cfg.seed
     if "bands" in sig_df.columns:

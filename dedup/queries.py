@@ -2075,16 +2075,23 @@ QUERIES = {
     **{k: v for k, v in QUERIES.items() if k not in ORACLES},
 }
 
+
+def _require(ok: bool, msg: str) -> None:
+    """An assert that still runs under `python -O`."""
+    if not ok:
+        raise RuntimeError(msg)
+
+
 # Fail LOUDLY the moment oracle-backed queries outgrow the driver's window —
 # the 51st would silently fall out of the recorded correctness results, the
 # exact truncation the reorder above exists to prevent. When this trips,
 # either the window grew (relax the bound) or the registry needs curating.
 _DRIVER_SNAPSHOT_WINDOW = 50
-assert len(ORACLES) <= _DRIVER_SNAPSHOT_WINDOW, (
+_require(len(ORACLES) <= _DRIVER_SNAPSHOT_WINDOW, (
     f"{len(ORACLES)} oracle-backed queries exceed the driver's "
     f"first-{_DRIVER_SNAPSHOT_WINDOW} correctness snapshot window; the "
     "overflow would be silently unrecorded"
-)
-assert set(ORACLES) <= set(QUERIES), (
+))
+_require(set(ORACLES) <= set(QUERIES), (
     f"oracle entries without a queries() entry: {set(ORACLES) - set(QUERIES)}"
-)
+))

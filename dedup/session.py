@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -101,6 +102,10 @@ def get_spark(
     return b.getOrCreate()
 
 
+# materialize's private-API fallback warns once per process
+_rewrap_warned = False
+
+
 def materialize(df, eager: bool = False):
     """Cut lineage and compute a multi-consumer intermediate exactly once.
 
@@ -138,9 +143,18 @@ def materialize(df, eager: bool = False):
             ck._jdf.queryExecution().toRdd(), ck._jdf.schema(), False
         )
         return DataFrame(jdf, spark)
-    except Exception:
+    except Exception as e:
         # private-API drift in a future Spark: checkpoint semantics are
         # unchanged, only the stats hygiene is lost
+        global _rewrap_warned
+        if not _rewrap_warned:
+            _rewrap_warned = True
+            warnings.warn(
+                "materialize: re-wrapping the checkpoint without its origin "
+                f"size estimate failed ({e!r}); checkpoints keep inherited "
+                "stats and may be statically broadcast",
+                RuntimeWarning, stacklevel=2,
+            )
         return ck
 
 

@@ -19,7 +19,7 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -57,6 +57,14 @@ METRICS_SCHEMA = StructType(
         StructField("created_at", LongType(), False),
     ]
 )
+
+
+def metrics_row(stage: str, config_hash: str, wall_ms: int,
+                rows_in: int | None = None, rows_out: int | None = None,
+                dropped_candidates: int | None = None) -> tuple:
+    """One METRICS_SCHEMA row, stamped with the current time."""
+    return (stage, config_hash, rows_in, rows_out, dropped_candidates,
+            int(wall_ms), int(time.time() * 1000))
 
 
 class Warehouse:
@@ -130,10 +138,15 @@ class Warehouse:
             self._save_manifest(m)
             self.record_lineage(name, config_hash, "written", rows, tbl)
             return rows
-        path = self._path(name)
-        df.write.mode(mode).parquet(path)
-        rows = self.spark.read.parquet(path).count()
+        # the row count is observed on the write action itself (no re-read
+        # of the table); an append adds it to the manifest's prior total
+        written = Observation()
+        df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+            mode).parquet(self._path(name))
         m = self._load_manifest()
+        rows = written.get["rows"]
+        if mode == "append":
+            rows += m["tables"].get(name, {}).get("rows", 0)
         m["tables"][name] = dict(
             config_hash=config_hash, status="complete", rows=rows,
             snapshot=str(uuid.uuid4())[:8], ts=int(time.time() * 1000),
@@ -152,10 +165,14 @@ class Warehouse:
             return
         df.write.mode("append").parquet(self._path(name))
 
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, schema: StructType | None = None) -> DataFrame:
+        """`schema`, when known, spares the Parquet footer-inference job."""
         if self.use_iceberg:
             return self.spark.table(self._iceberg_table(name))
-        return self.spark.read.parquet(self._path(name))
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(self._path(name))
 
     def exists(self, name: str) -> bool:
         if self.use_iceberg:
@@ -228,12 +245,12 @@ class Warehouse:
     def record_metrics(self, stage: str, config_hash: str, wall_ms: int,
                        rows_in: int | None = None, rows_out: int | None = None,
                        dropped_candidates: int | None = None) -> None:
-        row = [
-            (stage, config_hash, rows_in, rows_out, dropped_candidates,
-             int(wall_ms), int(time.time() * 1000))
-        ]
-        df = self.spark.createDataFrame(row, METRICS_SCHEMA)
-        self.append(df, "metrics")
+        self.append_metrics([metrics_row(stage, config_hash, wall_ms, rows_in,
+                                         rows_out, dropped_candidates)])
+
+    def append_metrics(self, rows: list[tuple]) -> None:
+        """Append buffered `metrics_row` tuples in one write."""
+        self.append(self.spark.createDataFrame(rows, METRICS_SCHEMA), "metrics")
 
     def metrics(self) -> DataFrame:
         return self.read("metrics")

@@ -84,3 +84,32 @@ def test_materialize_strips_origin_stats(spark):
         "static planner will mis-broadcast kernel-output checkpoints"
     )
     assert m.count() == 5000
+
+
+def test_rewrap_fallback_warns_once(spark, monkeypatch):
+    """When the private re-wrap fails, materialize still returns a working
+    checkpoint and says so once per process, not once per call."""
+    import warnings
+
+    from dedup import session
+
+    class FailingRewrap:
+        def __init__(self, j):
+            self._j = j
+
+        def internalCreateDataFrame(self, *a):
+            raise RuntimeError("re-wrap unavailable")
+
+        def __getattr__(self, name):
+            return getattr(self._j, name)
+
+    df = spark.range(10)
+    monkeypatch.setattr(session, "_rewrap_warned", False)
+    monkeypatch.setattr(spark, "_jsparkSession",
+                        FailingRewrap(spark._jsparkSession))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert session.materialize(df, eager=True).count() == 10
+        assert session.materialize(df, eager=True).count() == 10
+    hits = [w for w in caught if "re-wrapping the checkpoint" in str(w.message)]
+    assert len(hits) == 1, [str(w.message) for w in caught]

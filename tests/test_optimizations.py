@@ -63,6 +63,21 @@ class TestFusedBands:
         assert plan.count("MapInPandas") == 1, plan
         assert "Generate posexplode" in plan, plan
 
+    def test_decoded_checkpoint_bands_in_the_jvm(self, spark, corpus,
+                                                 tmp_path):
+        """A decoded signature checkpoint bands like fresh kernel output:
+        the decode is the plan's only Python pass and the bands are a JVM
+        posexplode of the decoded `bands` column."""
+        from dedup.pipeline import decode_signature_blocks, signature_blocks
+
+        path = str(tmp_path / "ckpt")
+        sigs = compute_signatures(key_docs(corpus), CFG).drop("bands")
+        signature_blocks(sigs, CFG).write.parquet(path)
+        decoded = decode_signature_blocks(spark.read.parquet(path), CFG)
+        plan = physical_plan(compute_bands(decoded, CFG))
+        assert plan.count("MapInPandas") == 1, plan
+        assert "Generate posexplode" in plan, plan
+
 
 class TestCarryVec:
     def test_carried_vector_matches_as_double_join(self, spark):

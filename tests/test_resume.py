@@ -43,6 +43,8 @@ class TestCheckpointRoundtrip:
             assert a[k]["minhash"] == b[k]["minhash"]
             assert a[k]["simhash"] == b[k]["simhash"]
             assert a[k]["content_sha"] == b[k]["content_sha"]
+            # decoded blocks carry the kernel's fused band hashes
+            assert a[k]["bands"] == b[k]["bands"]
 
     def test_empty_partitions_emit_valid_blocks(self, spark):
         empty = spark.createDataFrame(

@@ -1,0 +1,112 @@
+"""Warehouse-mode run_dedup: the write counts rows on its own action, a run
+lands its stage metrics in one append, a resumed run gives the fresh run's
+labels, and the Spark jobs each mode submits are pinned."""
+
+from __future__ import annotations
+
+import uuid
+
+import pytest
+
+from dedup.config import DedupConfig
+from dedup.fixtures import make_corpus
+from dedup.pipeline import exact_stage, key_docs, run_dedup, signature_input
+from dedup.warehouse import Warehouse
+
+CFG = DedupConfig()
+STAGES = ["exact", "signatures", "lsh", "verify", "cluster"]
+
+# Spark jobs one run_dedup submits on the fixture below, AQE stage jobs
+# included. AQE submits some stages before it settles a join's strategy,
+# so identical runs differ by a few jobs: over ten fresh/resume pairs on a
+# 4-core host the fresh run took 28-30 jobs and the full resume 29-31 (the
+# layout before fused decoded bands and observed counts took 43-44 and
+# 52-53). The pins add two jobs of headroom to the highest count seen.
+MAX_FRESH_JOBS = 32
+MAX_RESUME_JOBS = 33
+
+
+@pytest.fixture()
+def corpus(spark, tmp_path):
+    """make_corpus landed as Parquet, the way the CLI reads a corpus."""
+    pdf, _ = make_corpus(n_base=40, seed=7)
+    path = str(tmp_path / "corpus.parquet")
+    spark.createDataFrame(pdf).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _labels(df) -> dict[str, str]:
+    return {r["doc_key"]: r["cluster_id"] for r in df.collect()}
+
+
+def _count_jobs(spark, fn):
+    """(fn's result, number of Spark jobs fn submitted)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestWriteRowCounts:
+    def test_empty_frame_records_zero_rows(self, spark, tmp_path):
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        empty = spark.range(5).where("id < 0")
+        assert wh.write(empty, "t", "cfg") == 0
+        assert wh._load_manifest()["tables"]["t"]["rows"] == 0
+
+    def test_append_records_table_total(self, spark, tmp_path):
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        assert wh.write(spark.range(7), "t", "cfg") == 7
+        assert wh.write(spark.range(5), "t", "cfg", mode="append") == 12
+        assert wh._load_manifest()["tables"]["t"]["rows"] == 12
+        assert wh.read("t").count() == 12
+        # an overwrite resets the total
+        assert wh.write(spark.range(3), "t", "cfg") == 3
+
+
+class TestRunDedupWarehouse:
+    def test_one_metrics_append_per_run(self, spark, corpus, tmp_path):
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        appends = []
+        orig = wh.append
+
+        def append(df, name):
+            appends.append(name)
+            return orig(df, name)
+
+        wh.append = append
+        run_dedup(spark, corpus, CFG, warehouse=wh)
+        assert appends.count("metrics") == 1
+        rows = wh.metrics().collect()
+        assert sorted(r["stage"] for r in rows) == sorted(STAGES)
+        assert all(r["config_hash"] == CFG.config_hash() for r in rows)
+        by_stage = {r["stage"]: r for r in rows}
+        reps, _ = exact_stage(key_docs(corpus))
+        assert (by_stage["signatures"]["rows_out"]
+                == signature_input(reps, CFG).count())
+        assert by_stage["lsh"]["dropped_candidates"] >= 0
+
+    def test_job_counts_fresh_and_resume(self, spark, corpus, tmp_path):
+        root = str(tmp_path / "wh")
+        fresh, fresh_jobs = _count_jobs(
+            spark, lambda: run_dedup(spark, corpus, CFG,
+                                     warehouse=Warehouse(spark, root)))
+        fresh = _labels(fresh)
+        # every signature is checkpointed now: a full resume
+        resumed, resume_jobs = _count_jobs(
+            spark, lambda: run_dedup(spark, corpus, CFG,
+                                     warehouse=Warehouse(spark, root)))
+        assert _labels(resumed) == fresh
+        assert fresh_jobs <= MAX_FRESH_JOBS, fresh_jobs
+        assert resume_jobs <= MAX_RESUME_JOBS, resume_jobs
+        # the resume appended nothing: no second signature lineage entry
+        appended = [e for e in Warehouse(spark, root)._load_manifest()["lineage"]
+                    if e["status"] == "appended"]
+        assert len(appended) == 1
