@@ -19,7 +19,7 @@ closed-form oracle in tests.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from dedup.session import materialize
 
@@ -48,18 +48,18 @@ def connected_components(
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    e = materialize(e, eager=True)
-    stats = e.agg(
-        F.count("*").alias("c"),
-        F.coalesce(
-            # octet_length, not length: the budget is in BYTES and multi-byte
-            # UTF-8 keys would undercount by up to 4x with a character count
-            # (ADVICE r2)
-            F.sum(F.octet_length(F.col("u").cast("string")).cast("long")
-                  + F.octet_length(F.col("v").cast("string")).cast("long")),
-            F.lit(0),
-        ).alias("bytes"),
-    ).collect()[0]
+    # the cutover stats are observed on the cut's own action (no count job);
+    # octet_length, not length: the budget is in BYTES and multi-byte UTF-8
+    # keys would undercount by up to 4x with a character count (ADVICE r2)
+    key_bytes = (F.octet_length(F.col("u").cast("string")).cast("long")
+                 + F.octet_length(F.col("v").cast("string")).cast("long"))
+    seen = Observation()
+    e = materialize(
+        e.observe(seen, F.count(F.lit(1)).alias("c"),
+                  F.coalesce(F.sum(key_bytes), F.lit(0)).alias("bytes")),
+        eager=True,
+    )
+    stats = seen.get
     if stats["c"] <= driver_threshold and stats["bytes"] <= driver_byte_budget:
         pairs = [(r["u"], r["v"]) for r in e.collect()]
         labels = numpy_connected_components(pairs)

@@ -550,11 +550,27 @@ def decode_signature_blocks(ckpt: DataFrame, cfg: DedupConfig) -> DataFrame:
     return ckpt.mapInPandas(decode, SIGNATURE_BANDS_SCHEMA)
 
 
+def read_signature_checkpoint(wh: Warehouse, cfg: DedupConfig,
+                              table: str = "checkpoint_signatures"
+                              ) -> DataFrame:
+    """This config's checkpointed signatures, decoded lazily with their
+    bands (the listing is taken now, the decode runs per action)."""
+    return decode_signature_blocks(
+        wh.read(table, CHECKPOINT_SCHEMA).where(
+            (F.col("stage") == SIG_STAGE)
+            & (F.col("config_hash") == cfg.config_hash())
+        ),
+        cfg,
+    )
+
+
 def signatures_with_resume(
     rep_docs: DataFrame, cfg: DedupConfig, wh: Warehouse | None,
     table: str = "checkpoint_signatures",
     restrict_to_input: bool = True,
     observation: Observation | None = None,
+    signed_keys: DataFrame | None = None,
+    recover: bool = True,
 ) -> DataFrame:
     """Compute signatures for rep_docs, resuming from checkpointed
     SignatureBlocks: already-checkpointed doc_keys are anti-joined away and
@@ -568,7 +584,9 @@ def signatures_with_resume(
     cut's own action (`observation`, filled by the time this returns when
     `wh` is given: "signed" = rows signed and appended, "rows" = rows in
     the cut), so no count job runs, and an empty remainder skips the
-    append.
+    append. The lineage entry for an append is recorded before the append,
+    so the lineage total of signed rows never falls short of what the
+    checkpoint holds.
 
     When a checkpoint exists its blocks are decoded with their bands
     recomputed, so they band through the JVM like fresh rows. Batch runs
@@ -577,38 +595,47 @@ def signatures_with_resume(
     decoded blocks through one shared exchange — so STALE checkpoint
     signatures (docs renamed/removed since the previous run) never reach
     the result and a phantom doc can never bridge two live docs into one
-    cluster (ADVICE r1). Streaming accumulation passes restrict_to_input=False: the
-    cut holds only the new rows and the result is their union with the
-    whole lazily-decoded checkpoint, listed before the append, so the two
-    parts are disjoint and no O(corpus) copy is made per micro-batch.
+    cluster (ADVICE r1).
+
+    Streaming epochs pass restrict_to_input=False and get a one-cut epoch:
+    the result is the cut alone — this epoch's new signatures plus any
+    checkpointed rows whose keys are missing from `signed_keys` (the doc
+    keys the caller already accounts for; the stream passes its band
+    table's keys). rep_docs are anti-joined against `signed_keys` and those
+    leftover rows, so nothing is signed twice. `recover=False` states that
+    the checkpoint holds no row outside `signed_keys`: the blocks are then
+    not decoded at all, and the epoch costs work in proportion to the
+    micro-batch. With recover=True and no `signed_keys`, every checkpointed
+    row is a leftover, so the cut carries the whole accumulated state.
     """
     if wh is None:
         return compute_signatures(rep_docs, cfg)
     cfg_hash = cfg.config_hash()
     prior = kept = None
-    if wh.exists(table):
-        prior = decode_signature_blocks(
-            wh.read(table, CHECKPOINT_SCHEMA).where(
-                (F.col("stage") == SIG_STAGE)
-                & (F.col("config_hash") == cfg_hash)
-            ),
-            cfg,
-        )
-    if prior is None:
-        todo = rep_docs
-    elif restrict_to_input:
-        # the anti-join is a left join + null filter so that it and the
-        # semi-join below read the decoded blocks through one exchange; the
-        # semi-join is an inner join so the kept columns stay non-nullable
-        # like the kernel's (nullable ones cost the fixture's downstream
-        # plan about three more Spark jobs)
-        packed = prior.select("doc_key", F.struct(*prior.columns).alias("_prior"))
-        todo = (rep_docs.join(packed, "doc_key", "left")
-                .where(F.col("_prior").isNull()).drop("_prior"))
-        kept = (rep_docs.select("doc_key").join(packed, "doc_key")
-                .select("_prior.*"))
+    if wh.exists(table) and (restrict_to_input or recover):
+        prior = read_signature_checkpoint(wh, cfg, table)
+    todo = rep_docs
+    if restrict_to_input:
+        if prior is not None:
+            # the anti-join is a left join + null filter so that it and the
+            # semi-join below read the decoded blocks through one exchange;
+            # the semi-join is an inner join so the kept columns stay
+            # non-nullable like the kernel's (nullable ones cost the
+            # fixture's downstream plan about three more Spark jobs)
+            packed = prior.select("doc_key",
+                                  F.struct(*prior.columns).alias("_prior"))
+            todo = (rep_docs.join(packed, "doc_key", "left")
+                    .where(F.col("_prior").isNull()).drop("_prior"))
+            kept = (rep_docs.select("doc_key").join(packed, "doc_key")
+                    .select("_prior.*"))
     else:
-        todo = rep_docs.join(prior.select("doc_key"), "doc_key", "left_anti")
+        if signed_keys is not None:
+            todo = todo.join(signed_keys, "doc_key", "left_anti")
+        if prior is not None:
+            kept = prior
+            if signed_keys is not None:
+                kept = kept.join(signed_keys, "doc_key", "left_anti")
+            todo = todo.join(kept.select("doc_key"), "doc_key", "left_anti")
     sigs = compute_signatures(todo, cfg).withColumn("_new", F.lit(True))
     if kept is not None:
         sigs = sigs.unionByName(kept.withColumn("_new", F.lit(False)))
@@ -620,17 +647,14 @@ def signatures_with_resume(
     )
     signed = obs.get["signed"]
     if signed > 0:
+        wh.record_lineage(SIG_STAGE, cfg_hash, "appended", signed, table)
         # header-only rows from empty partitions are valid but add nothing
         wh.append(
             signature_blocks(out.where("_new").drop("bands", "_new"), cfg)
             .where(F.col("rows_used") > 0),
             table,
         )
-        wh.record_lineage(SIG_STAGE, cfg_hash, "appended", signed, table)
-    out = out.drop("_new")
-    if prior is None or kept is not None:
-        return out
-    return out.unionByName(prior)
+    return out.drop("_new")
 
 
 # ---------------------------------------------------------------------------

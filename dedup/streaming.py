@@ -2,38 +2,53 @@
 
 The batch pipeline's sketch state is mergeable (update/merge associative,
 SURVEY §2.1 #2-3), so incremental ingest is just: for every micro-batch,
-fold exact dups, compute signatures for doc_keys not already checkpointed
-(signatures_with_resume's anti-join makes this idempotent), and append the
-per-partition SignatureBlock rows. A late or replayed file cannot corrupt
-state — recomputed signatures are identical (deterministic kernels) and the
-block decode dedupes by doc_key.
+fold exact dups, compute signatures for doc_keys not already signed, and
+append the per-partition SignatureBlock rows. A late or replayed file cannot
+corrupt state — recomputed signatures are identical (deterministic kernels),
+and the resume anti-join against the already-signed keys stops a replayed
+doc from being signed twice.
+
+Each epoch makes one pass over its micro-batch: the keyed, exact-folded
+batch is cut once (one eager `materialize`, whose observed row count is the
+epoch's input count) and every consumer reads that cut — the signature
+input and the exact-pair, doc-key and sha-rep appends. Each state table is
+read once per epoch with its known schema, so no read runs a Parquet
+footer-inference job.
 
 `ingest_stream` uses a file source + foreachBatch + Trigger.AvailableNow, the
 recommended incremental-batch pattern. LSH candidate generation is
-INCREMENTAL (VERDICT r2 #7): each round bands only the NEW signatures, finds
-new-vs-new pairs through the capped generator and new-vs-old pairs through an
-equi-join against the accumulated band table, then appends the new bands —
-per-round pair-generation work scales with the batch, not the corpus. The
-combined (old + new) bucket size gates both paths: a bucket that grows over
-the cap stops emitting NEW pairs; pairs emitted while it was under the cap
-are retained (a batch run over the final corpus would drop the whole bucket
-— documented divergence, see stream_clusters). Clustering folds the
-accumulated pair tables (cheap: pairs only).
+INCREMENTAL (VERDICT r2 #7): each round bands only its signature-kernel cut
+(the fused `bands`, a JVM posexplode), finds its new-vs-new and new-vs-old
+pairs through one capped+salted join against new + accumulated bands, then
+appends the new bands — per-round pair-generation work scales with the
+batch, not the corpus. The combined (old + new) bucket size gates every
+pair: a bucket that grows over the cap stops emitting NEW pairs; pairs
+emitted while it was under the cap are retained (a batch run over the
+final corpus would drop the whole bucket — documented divergence, see
+stream_clusters). Clustering folds the accumulated pair tables (cheap:
+pairs only).
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from dedup.ann import HOT_BUCKET_MIN, _cosine
 from dedup.config import DedupConfig
-from dedup.lsh import candidate_pairs
+# candidate_pairs and exact_stage stay module attributes here although the
+# stream no longer calls them: perfbench/trace.py wraps them by name
+from dedup.lsh import candidate_pairs  # noqa: F401
 from dedup.minhash import compute_bands, with_doc_key
-from dedup.pipeline import exact_stage, signature_input, signatures_with_resume
+from dedup.pipeline import (  # noqa: F401
+    SIG_STAGE,
+    exact_stage,
+    read_signature_checkpoint,
+    signature_input,
+    signatures_with_resume,
+)
 from dedup.session import materialize
 from dedup.verify import verified_pairs
 from dedup.warehouse import Warehouse
@@ -54,67 +69,97 @@ SHA_REP_TABLE = "stream_sha_reps"
 FP_TABLE = "stream_fingerprints"
 SUBSTR_TABLE = "stream_substring_pairs"
 
+# the columns each state table is read by: a read with its schema runs no
+# Parquet footer-inference job
+SHA_REP_SCHEMA = "content_sha string, doc_key string, config_hash string"
+BAND_SCHEMA = ("doc_key string, band_id int, band_hash bigint, "
+               "config_hash string")
+PAIR_SCHEMA = "key_a string, key_b string"
+DOC_KEY_SCHEMA = "doc_key string"
+LABEL_SCHEMA = "doc_key string, cluster_id string, ver int"
+# replicas a hot band bucket's new rows spread over (lsh.candidate_pairs'
+# default)
+BAND_SALTS = 8
+
+
+def _read_state(wh: Warehouse, name: str, schema: str,
+                cfg_hash: str) -> DataFrame | None:
+    """This config's rows of a state table, or None before its first
+    append. The file listing is taken here, so rows appended later in the
+    epoch never reach the returned frame."""
+    if not wh.exists(name):
+        return None
+    return wh.read(name, schema).where(F.col("config_hash") == cfg_hash)
+
+
+def _fold_batch(keyed: DataFrame, prior_reps: DataFrame | None) -> DataFrame:
+    """One row per micro-batch doc: (doc_key, content_sha, content,
+    new_rep, partner).
+
+    The representative of a sha is its minimum doc_key in the batch. Across
+    batches (ADVICE r1) a verbatim copy of an EARLIER doc must fold into an
+    exact pair against the prior representative instead of being re-signed,
+    so the fold joins the accumulated sha-rep table — not the signature
+    checkpoint: short/empty docs never sign, but their verbatim copies
+    across batches are still exact dups exactly as the batch pipeline sees
+    them. `new_rep` marks representatives whose sha no earlier batch holds:
+    they are this batch's sha reps and the only rows that may be signed, so
+    `content` is kept on those rows only. `partner` is the key a doc forms
+    an exact pair with — its batch representative, or for a representative
+    the prior one — and null when there is none."""
+    reps = keyed.groupBy("content_sha").agg(F.min("doc_key").alias("rep_key"))
+    if prior_reps is None:
+        reps = reps.withColumn("prior_key", F.lit(None).cast("string"))
+    else:
+        prior = prior_reps.groupBy("content_sha").agg(
+            F.min("doc_key").alias("prior_key")
+        )
+        reps = reps.join(prior, "content_sha", "left")
+    is_rep = F.col("doc_key") == F.col("rep_key")
+    new_rep = is_rep & F.col("prior_key").isNull()
+    partner = F.when(~is_rep, F.col("rep_key")).when(
+        F.col("doc_key") != F.col("prior_key"), F.col("prior_key")
+    )
+    return keyed.join(reps, "content_sha").select(
+        "doc_key",
+        "content_sha",
+        F.when(new_rep, F.col("content")).alias("content"),
+        new_rep.alias("new_rep"),
+        partner.alias("partner"),
+    )
+
 
 def _incremental_candidates(
-    new_sigs: DataFrame, wh: Warehouse, cfg: DedupConfig, epoch_id: int
-) -> DataFrame:
-    """Band the NEW signatures and return this round's candidate pairs plus
-    the band rows to commit: new-vs-new via the capped/salted generator plus
-    new-vs-old via one equi-join against the accumulated band table — each
-    pair is discovered in the round its LATER member is banded. The CALLER
-    appends the returned bands after persisting the pairs (crash-ordering).
-    Returns ((key_a, key_b, n_bands_hit), band_rows)."""
-    cfg_hash = cfg.config_hash()
-    new_bands = materialize(compute_bands(new_sigs, cfg), eager=True)
-    return_bands = new_bands.withColumn(
-        "config_hash", F.lit(cfg_hash)
-    ).withColumn("epoch", F.lit(int(epoch_id)))
-    old = None
-    if wh.exists(BAND_TABLE):
-        old = wh.read(BAND_TABLE).where(F.col("config_hash") == cfg_hash).select(
-            "band_id", "band_hash", "doc_key"
-        )
+    sigs: DataFrame, old: DataFrame | None, cfg: DedupConfig
+) -> tuple[DataFrame, DataFrame]:
+    """Band this epoch's signature cut and return its candidate pairs plus
+    the band rows to commit. New-vs-new and new-vs-old pairs come from one
+    capped+salted join of the new bands against new + accumulated bands
+    (`old`), so each pair is discovered in the round its LATER member is
+    banded. The combined (old + new) bucket size gates both, matching the
+    batch path's drop semantics. The CALLER appends the returned bands after
+    persisting the pairs (crash-ordering). Returns
+    ((key_a, key_b, n_bands_hit), band_rows)."""
+    # a JVM posexplode of the cut's fused bands: cheap to re-derive per
+    # consumer, so no band checkpoint of its own
+    new_bands = compute_bands(sigs, cfg)
+    both = new_bands.withColumn("is_new", F.lit(True))
     if old is not None:
         # at-least-once appends: a foreachBatch retry may have written the
         # same band rows twice — dedupe on read, like stream_exact_pairs
-        old = old.dropDuplicates(["band_id", "band_hash", "doc_key"])
-        # combined-size cap: a bucket's total population (old + new) gates
-        # pair emission, matching the batch path's drop semantics
-        old_sz = old.groupBy("band_id", "band_hash").agg(
-            F.count("*").alias("sz_old")
+        old = old.select("doc_key", "band_id", "band_hash").dropDuplicates()
+        both = both.unionByName(old.withColumn("is_new", F.lit(False)))
+    pairs = (
+        _new_vs_all_join(new_bands, both, ["band_id", "band_hash"],
+                         cfg.band_bucket_cap, BAND_SALTS, "doc_key")
+        .select(
+            F.least("a.doc_key", "b.doc_key").alias("key_a"),
+            F.greatest("a.doc_key", "b.doc_key").alias("key_b"),
         )
-        new_sz = new_bands.groupBy("band_id", "band_hash").agg(
-            F.count("*").alias("sz_new")
-        )
-        eligible = (
-            new_sz.join(old_sz, ["band_id", "band_hash"], "left")
-            .where(
-                F.col("sz_new") + F.coalesce(F.col("sz_old"), F.lit(0))
-                <= cfg.band_bucket_cap
-            )
-            .select("band_id", "band_hash")
-        )
-        gated = new_bands.join(eligible, ["band_id", "band_hash"])
-        pairs_new, _ = candidate_pairs(gated, cfg)
-        cross = (
-            gated.alias("n")
-            .join(old.alias("o"), ["band_id", "band_hash"])
-            .where(F.col("n.doc_key") != F.col("o.doc_key"))
-            .select(
-                F.least("n.doc_key", "o.doc_key").alias("key_a"),
-                F.greatest("n.doc_key", "o.doc_key").alias("key_b"),
-            )
-            .groupBy("key_a", "key_b")
-            .agg(F.count("*").alias("n_bands_hit"))
-        )
-        pairs = pairs_new.unionByName(cross)
-    else:
-        pairs, _ = candidate_pairs(new_bands, cfg)
-    # materialize the pair set BEFORE this round's bands land in the table:
-    # `old` was listed pre-append, and the caller appends the verified pairs
-    # before committing the bands (crash-ordering: see ingest_stream)
-    pairs = materialize(pairs, eager=True)
-    return pairs, return_bands
+        .groupBy("key_a", "key_b")
+        .agg(F.count("*").alias("n_bands_hit"))
+    )
+    return pairs, new_bands
 
 
 def _corpus_stream(spark: SparkSession, input_dir: str,
@@ -161,128 +206,130 @@ def ingest_stream(
     reads it through readStream.table — Iceberg's incremental snapshot
     scan replaces the file-source listing, offsets are snapshot ids in the
     same checkpoint location, and everything downstream is identical (the
-    north rule's deployment: the corpus IS the lake table)."""
+    north rule's deployment: the corpus IS the lake table).
+
+    Crash recovery: an epoch that dies between its signature append and its
+    band append leaves docs signed but unbanded, and on replay the
+    cross-batch sha fold may hide them from the batch. The band append is
+    therefore followed by a lineage watermark — the total of signature rows
+    the band table now covers — and an epoch whose signature lineage total
+    exceeds the watermark (or finds the band table gone) decodes the
+    checkpoint and bands the leftover rows. The totals come from the
+    manifest, so the check itself runs no Spark job; the signature lineage
+    entry is recorded before its append, so a crash can only make the check
+    recover needlessly, never miss a leftover."""
     key_cols = key_cols or ["repo", "path", "commit"]
+    cfg_hash = cfg.config_hash()
     stream = _corpus_stream(spark, input_dir, input_format)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         t0 = time.time()
-        keyed = with_doc_key(batch_df, key_cols)
-        rep_docs, exact_pairs = exact_stage(keyed)
+        epoch = F.lit(int(epoch_id))
+        # each state table is read once, before any of this epoch's appends
+        prior_reps = _read_state(wh, SHA_REP_TABLE, SHA_REP_SCHEMA, cfg_hash)
+        old_bands = _read_state(wh, BAND_TABLE, BAND_SCHEMA, cfg_hash)
 
-        # cross-batch exact fold (ADVICE r1): a verbatim copy of a doc from
-        # an EARLIER batch must not be re-signed — and must fold into an
-        # exact pair against the prior representative. The fold runs BEFORE
-        # the min_content_len filter and joins the accumulated sha-rep table
-        # (not the signature checkpoint): short/empty docs never sign, but
-        # their verbatim copies across batches are still exact dups exactly
-        # as the batch pipeline sees them.
-        if wh.exists(SHA_REP_TABLE):
-            prior_reps = (
-                wh.read(SHA_REP_TABLE)
-                .where(F.col("config_hash") == cfg.config_hash())
-                .select("content_sha", "doc_key")
-            )
-        elif wh.exists("checkpoint_signatures"):
-            # legacy warehouse built before the sha-rep table existed: fall
-            # back to the signature checkpoint as the fold source (the
-            # pre-upgrade behavior — it misses sub-min_content_len docs,
-            # which the sha-rep appends cover from this batch onward), so
-            # verbatim copies of already-ingested docs still fold instead of
-            # being silently re-signed
-            from dedup.pipeline import SIG_STAGE, decode_signature_blocks
-
-            prior_reps = decode_signature_blocks(
-                wh.read("checkpoint_signatures").where(
-                    (F.col("stage") == SIG_STAGE)
-                    & (F.col("config_hash") == cfg.config_hash())
-                ),
-                cfg,
-            ).select("content_sha", "doc_key")
-        else:
-            prior_reps = None
-        if prior_reps is not None:
-            prior = prior_reps.groupBy("content_sha").agg(
-                F.min("doc_key").alias("prior_key")
-            )
-            hit = rep_docs.join(prior, "content_sha")
-            # canonical orientation key_a < key_b (ADVICE r2): a new doc_key
-            # can sort below the checkpointed prior_key, and an unordered
-            # pair would survive read_stream_exact_pairs' distinct() in both
-            # orientations across epochs
-            cross = hit.where(F.col("doc_key") != F.col("prior_key")).select(
-                F.least("prior_key", "doc_key").alias("key_a"),
-                F.greatest("prior_key", "doc_key").alias("key_b"),
-            )
-            exact_pairs = exact_pairs.unionByName(cross)
-            rep_docs = rep_docs.join(prior, "content_sha", "left_anti")
-        new_sha_reps = rep_docs.select("content_sha", "doc_key").withColumn(
-            "config_hash", F.lit(cfg.config_hash())
+        # the one cut of the micro-batch; its observed row count replaces
+        # an emptiness probe and a count job
+        seen = Observation()
+        batch = materialize(
+            _fold_batch(with_doc_key(batch_df, key_cols), prior_reps)
+            .observe(seen, F.count(F.lit(1)).alias("rows")),
+            eager=True,
         )
-        rep_docs = signature_input(rep_docs, cfg)
+        n_in = seen.get["rows"]
+        if n_in == 0:
+            return
 
-        # restrict_to_input=False: the accumulated checkpoint is the state;
-        # consumers read it whole (batch semantics don't apply per micro-batch).
-        # The append runs inside; the returned frame is a lazy decode of the
-        # checkpoint table — no O(corpus) copy per micro-batch.
-        all_sigs = signatures_with_resume(
-            rep_docs, cfg, wh, restrict_to_input=False
+        signed_before = sum(
+            e["rows"] for e in wh.lineage(SIG_STAGE, cfg_hash, "appended")
         )
-
-        # incremental LSH (VERDICT r2 #7): band every SIGNED doc not yet in
-        # the accumulated band table. Deriving the work-list from the
-        # signature checkpoint (not from this batch's rep_docs) makes crash
-        # recovery self-healing: if a previous epoch died between the
-        # signature append and the band append, its docs are signed but
-        # unbanded, the cross-batch sha fold hides them from rep_docs on
-        # replay, and ONLY this anti-join still picks them up.
-        new_keys = all_sigs.select("doc_key")
-        if wh.exists(BAND_TABLE):
-            banded = (
-                wh.read(BAND_TABLE)
-                .where(F.col("config_hash") == cfg.config_hash())
-                .select("doc_key")
-                .distinct()
+        marks = (wh.lineage(BAND_TABLE, cfg_hash, "banded")
+                 if old_bands is not None else [])
+        covered = marks[-1]["rows"] if marks else 0
+        signed = Observation()
+        # the band table's keys are the already-signed docs; when the
+        # lineage says the checkpoint holds more, its leftover rows (signed
+        # but unbanded by a crashed epoch) join this epoch's cut
+        sigs = signatures_with_resume(
+            signature_input(batch.where("new_rep"), cfg), cfg, wh,
+            restrict_to_input=False, observation=signed,
+            signed_keys=(None if old_bands is None
+                         else old_bands.select("doc_key").distinct()),
+            recover=signed_before > covered,
+        )
+        signed_total = signed_before + signed.get["signed"]
+        to_band = signed.get["rows"] > 0
+        if to_band:
+            pairs, new_bands = _incremental_candidates(sigs, old_bands, cfg)
+            # cut once: the pairs feed both the key list and the verify
+            # join, and an epoch without pairs skips the decode
+            n_pairs = Observation()
+            pairs = materialize(
+                pairs.observe(n_pairs, F.count(F.lit(1)).alias("rows")),
+                eager=True,
             )
-            new_keys = new_keys.join(banded, "doc_key", "left_anti")
-        new_sigs = all_sigs.join(new_keys, "doc_key", "left_semi")
-        pairs, new_bands = _incremental_candidates(new_sigs, wh, cfg, epoch_id)
-        # crash-ordering: pairs FIRST, bands LAST. The band append is the
-        # commit point — a crash in between leaves the docs unbanded, so the
-        # next epoch recomputes their pairs (duplicates are deduped on read,
-        # the same at-least-once discipline as stream_exact_pairs).
+            if n_pairs.get["rows"] > 0:
+                # the one decode of the epoch: the checkpoint (this
+                # epoch's rows included) restricted to the pairs' keys
+                keys = pairs.select(F.col("key_a").alias("doc_key")).union(
+                    pairs.select(F.col("key_b").alias("doc_key"))
+                )
+                pair_sigs = read_signature_checkpoint(wh, cfg).join(
+                    keys, "doc_key", "left_semi"
+                )
+                # crash-ordering: pairs FIRST, bands LAST. The band append
+                # is the commit point — a crash in between leaves the docs
+                # unbanded, so the next epoch recomputes their pairs
+                # (duplicates are deduped on read, the same at-least-once
+                # discipline as stream_exact_pairs).
+                wh.append(
+                    verified_pairs(pairs, pair_sigs, cfg)
+                    .withColumn("epoch", epoch),
+                    "stream_verified_pairs",
+                )
         wh.append(
-            verified_pairs(pairs, all_sigs, cfg)
-            .withColumn("epoch", F.lit(int(epoch_id))),
-            "stream_verified_pairs",
-        )
-        wh.append(
-            exact_pairs.withColumn("epoch", F.lit(int(epoch_id))),
+            batch.where(F.col("partner").isNotNull())
+            .select(
+                F.least("partner", "doc_key").alias("key_a"),
+                F.greatest("partner", "doc_key").alias("key_b"),
+            )
+            .withColumn("epoch", epoch),
             "stream_exact_pairs",
         )
         # every ingested doc_key (pre exact-fold, pre length filter) so
         # cluster readers can attach singletons exactly like the batch path
-        wh.append(keyed.select("doc_key"), "stream_doc_keys")
-        wh.append(new_bands, BAND_TABLE)
+        wh.append(batch.select("doc_key"), "stream_doc_keys")
+        if to_band:
+            wh.append(
+                new_bands.withColumn("config_hash", F.lit(cfg_hash))
+                .withColumn("epoch", epoch),
+                BAND_TABLE,
+            )
+        if signed_total > covered:
+            wh.record_lineage(BAND_TABLE, cfg_hash, "banded", signed_total,
+                              BAND_TABLE)
         # sha-rep append LAST: a crash anywhere above leaves this batch's
         # shas out of the fold table, so the replay re-runs the full fold
         # (re-emitted pairs dedupe on read; re-signing is stopped by the
         # signature resume anti-join). Appending earlier could let a replay
         # see its own shas as "prior" and skip a cross-batch pair.
-        wh.append(new_sha_reps.withColumn("epoch", F.lit(int(epoch_id))),
-                  SHA_REP_TABLE)
-        n_in = batch_df.count()
+        wh.append(
+            batch.where("new_rep")
+            .select("content_sha", "doc_key",
+                    F.lit(cfg_hash).alias("config_hash"))
+            .withColumn("epoch", epoch),
+            SHA_REP_TABLE,
+        )
         wh.record_lineage(
-            "stream_ingest", cfg.config_hash(), f"epoch-{epoch_id}",
+            "stream_ingest", cfg_hash, f"epoch-{epoch_id}",
             rows=n_in, table="checkpoint_signatures",
         )
         # same observability as the batch pipeline's per-stage metrics: one
         # row per epoch with the ingest wall and row count, so a stalled or
         # regressing stream is visible from the warehouse alone
         wh.record_metrics(
-            "stream_ingest", cfg.config_hash(),
+            "stream_ingest", cfg_hash,
             int((time.time() - t0) * 1000), rows_in=n_in,
         )
 
@@ -304,7 +351,10 @@ def read_stream_verified_pairs(wh: Warehouse) -> DataFrame:
     """Verified near-dup pairs accumulated by the incremental LSH rounds,
     deduped on read (at-least-once appends, same discipline as
     read_stream_exact_pairs)."""
-    return wh.read("stream_verified_pairs").select("key_a", "key_b").distinct()
+    return (
+        wh.read("stream_verified_pairs", PAIR_SCHEMA)
+        .select("key_a", "key_b").distinct()
+    )
 
 
 LABEL_TABLE = "stream_cluster_labels"
@@ -316,15 +366,7 @@ LABEL_COMPACT_EVERY = 16
 
 def _reconciled_labels(stored: DataFrame) -> DataFrame:
     """Merge-on-read view of the label delta log: latest generation wins
-    per doc_key. Pre-delta-log tables (no `ver` column) read as gen 0 —
-    and so do ROWS with a null ver inside a mixed-schema table (a legacy
-    no-ver table that later generations were appended onto: parquet schema
-    merge surfaces the legacy rows with ver=NULL, and max_by skips rows
-    whose ordering key is null, which would silently reconcile every
-    untouched legacy doc to a NULL cluster_id)."""
-    if "ver" not in stored.columns:
-        stored = stored.withColumn("ver", F.lit(0))
-    stored = stored.withColumn("ver", F.coalesce(F.col("ver"), F.lit(0)))
+    per doc_key."""
     return (
         stored.groupBy("doc_key")
         .agg(F.max_by("cluster_id", "ver").alias("cluster_id"))
@@ -405,12 +447,13 @@ def stream_clusters(spark: SparkSession, wh: Warehouse, cfg: DedupConfig
         # return the same empty (doc_key, cluster_id) frame the batch path
         # yields on an empty corpus instead of raising on a missing table.
         return wh.spark.createDataFrame([], "doc_key string, cluster_id string")
-    edges = wh.spark.createDataFrame([], "key_a string, key_b string")
+    edges = wh.spark.createDataFrame([], PAIR_SCHEMA)
     if wh.exists("stream_exact_pairs"):
         edges = edges.unionByName(read_stream_exact_pairs(wh))
     if wh.exists("stream_verified_pairs"):
         edges = edges.unionByName(read_stream_verified_pairs(wh))
-    members = wh.read("stream_doc_keys").select("doc_key").distinct()
+    members = wh.read("stream_doc_keys", DOC_KEY_SCHEMA).select(
+        "doc_key").distinct()
     cfg_hash = cfg.config_hash()
     have_prior = wh.exists(LABEL_TABLE)
     if have_prior and not wh.is_complete(LABEL_TABLE, cfg_hash):
@@ -423,24 +466,7 @@ def stream_clusters(spark: SparkSession, wh: Warehouse, cfg: DedupConfig
         have_prior = False
     gen = 0
     if have_prior:
-        stored = wh.read(LABEL_TABLE)
-        if "ver" not in stored.columns:
-            # one-time migration of a pre-delta-log table: appending
-            # ver-stamped deltas onto it would create a MIXED-schema
-            # parquet dir — legacy rows then surface ver=NULL under schema
-            # merge (max_by would reconcile them to NULL cluster_ids), or
-            # the ver column vanishes entirely depending on which footer
-            # the reader samples. Rewrite once as generation 0 instead;
-            # eager materialize first because overwrite deletes the files
-            # the lazy plan reads.
-            migrated = materialize(
-                stored.select("doc_key", "cluster_id").withColumn(
-                    "ver", F.lit(0)
-                ),
-                eager=True,
-            )
-            wh.write(migrated, LABEL_TABLE, cfg_hash)
-            stored = wh.read(LABEL_TABLE)
+        stored = wh.read(LABEL_TABLE, LABEL_SCHEMA)
         gen = int(
             stored.agg(F.coalesce(F.max("ver"), F.lit(0))).collect()[0][0]
         )
@@ -457,19 +483,31 @@ def stream_clusters(spark: SparkSession, wh: Warehouse, cfg: DedupConfig
             .select(
                 "doc_key",
                 F.coalesce("new_label", "cluster_id").alias("cluster_id"),
+                F.coalesce(F.col("new_label") != F.col("cluster_id"),
+                           F.lit(False)).alias("changed"),
             )
         )
         # nodes first seen in this quotient graph (new docs with edges)
-        fresh = comp.join(prior.select("doc_key"), "doc_key", "left_anti")
-        labels = attach_singletons(relabeled.unionByName(fresh), members)
+        fresh = comp.join(
+            prior.select("doc_key"), "doc_key", "left_anti"
+        ).withColumn("changed", F.lit(True))
+        # docs in no component and without a prior label are new singletons
+        labels = attach_singletons(
+            relabeled.unionByName(fresh), members
+        ).withColumn("changed", F.coalesce("changed", F.lit(True)))
     else:
-        labels = attach_singletons(connected_components(edges), members)
+        labels = attach_singletons(
+            connected_components(edges), members
+        ).withColumn("changed", F.lit(True))
     # lineage cut before writing to the table the plan may be reading from
-    labels = materialize(labels.select("doc_key", "cluster_id"), eager=True)
+    labels = materialize(
+        labels.select("doc_key", "cluster_id", "changed"), eager=True
+    )
     if not have_prior or gen + 1 >= LABEL_COMPACT_EVERY:
         # first generation, or periodic compaction: fold the delta log into
         # one overwrite (rare — 1 in LABEL_COMPACT_EVERY calls)
-        wh.write(labels.withColumn("ver", F.lit(0)), LABEL_TABLE, cfg_hash)
+        wh.write(labels.select("doc_key", "cluster_id")
+                 .withColumn("ver", F.lit(0)), LABEL_TABLE, cfg_hash)
     else:
         # changed-component upsert (VERDICT r4 #2): append ONLY rows whose
         # label changed this call (new docs, or docs whose component
@@ -479,9 +517,9 @@ def stream_clusters(spark: SparkSession, wh: Warehouse, cfg: DedupConfig
         # leaves a partial generation whose missing labels re-enter the
         # quotient graph through their persisted edges next call, the same
         # idempotence argument as the pair tables.
-        delta = labels.join(prior, ["doc_key", "cluster_id"], "left_anti")
-        wh.append(delta.withColumn("ver", F.lit(gen + 1)), LABEL_TABLE)
-    return labels
+        wh.append(labels.where("changed").select("doc_key", "cluster_id")
+                  .withColumn("ver", F.lit(gen + 1)), LABEL_TABLE)
+    return labels.select("doc_key", "cluster_id")
 
 
 def read_stream_exact_pairs(wh: Warehouse) -> DataFrame:
@@ -490,10 +528,11 @@ def read_stream_exact_pairs(wh: Warehouse) -> DataFrame:
     The underlying table is AT-LEAST-ONCE: foreachBatch retries may append
     the same pair rows again (only the signature path is idempotent by
     anti-join), so consumers must read through this distinct() — the same
-    dedupe-on-read discipline as decode_signature_blocks' dropDuplicates.
+    dedupe-on-read discipline as every accumulated pair table here.
     """
     return (
-        wh.read("stream_exact_pairs").select("key_a", "key_b").distinct()
+        wh.read("stream_exact_pairs", PAIR_SCHEMA)
+        .select("key_a", "key_b").distinct()
     )
 
 
@@ -540,7 +579,7 @@ def stream_substring_pairs(
         )
     keyed = with_doc_key(corpus, key_cols)
     reps = (
-        wh.read(SHA_REP_TABLE)
+        wh.read(SHA_REP_TABLE, SHA_REP_SCHEMA)
         .where(F.col("config_hash") == cfg_hash)
         .select("doc_key")
         .distinct()
@@ -620,15 +659,15 @@ ASSET_FEAT_TABLE = "stream_asset_features"
 ASSET_PAIR_TABLE = "stream_asset_pairs"
 
 
-def salted_new_vs_all_pairs(
+def _new_vs_all_join(
     new_f: DataFrame,
     both: DataFrame,
+    bucket_cols: list[str],
     bucket_cap: int,
     salts: int,
-    threshold: float,
-    id_col: str = "asset_id",
+    id_col: str,
 ) -> DataFrame:
-    """Capped+salted new-vs-(new+stored) bucket join for incremental vector
+    """Capped+salted new-vs-(new+stored) bucket join for incremental
     dedup — capped_bucket_self_join's discipline (dedup/ann.py:196) in the
     asymmetric shape: bucket sizes are counted over the COMBINED old+new
     population first (members never buffer for over-cap buckets); hot
@@ -638,15 +677,16 @@ def salted_new_vs_all_pairs(
     split one join key; cold buckets join plain at salt 0. Exactly one
     replica matches each stored row, so no pair duplicates from salting.
 
-    `new_f` is (id_col, bucket, v); `both` is the same plus `is_new`
-    (new rows pair a<b once, old rows pair against every new id). Returns
-    (id_a, id_b, cosine) with cosine ≥ threshold, deduped; ids keep the
-    caller's type (string asset ids, numeric vec ids)."""
-    sz = both.groupBy("bucket").agg(F.count("*").alias("sz"))
+    `new_f` holds the new rows, `both` the same plus the stored rows and an
+    `is_new` flag (new rows pair a<b once, old rows pair against every new
+    id). Returns the joined rows, the new side aliased "a" and the
+    new+stored side "b"; each (new, other) match appears once per shared
+    bucket."""
+    sz = both.groupBy(*bucket_cols).agg(F.count("*").alias("sz"))
     eligible = sz.where((F.col("sz") >= 2) & (F.col("sz") <= bucket_cap))
     hot = F.col("sz") >= HOT_BUCKET_MIN
     gated_new = (
-        new_f.join(eligible, "bucket")
+        new_f.join(eligible, bucket_cols)
         .withColumn(
             "salt",
             F.explode(
@@ -657,7 +697,7 @@ def salted_new_vs_all_pairs(
         .drop("sz")
     )
     gated_all = (
-        both.join(eligible, "bucket")
+        both.join(eligible, bucket_cols)
         .withColumn(
             "salt",
             F.when(hot, F.pmod(F.xxhash64(id_col), F.lit(salts)).cast("int"))
@@ -666,18 +706,32 @@ def salted_new_vs_all_pairs(
         .drop("sz")
     )
     a_first = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    return gated_new.alias("a").join(
+        gated_all.alias("b"),
+        on=[F.col(f"a.{c}") == F.col(f"b.{c}") for c in bucket_cols + ["salt"]]
+        + [
+            F.when(F.col("b.is_new"), a_first).otherwise(
+                F.col(f"a.{id_col}") != F.col(f"b.{id_col}")
+            )
+        ],
+    )
+
+
+def salted_new_vs_all_pairs(
+    new_f: DataFrame,
+    both: DataFrame,
+    bucket_cap: int,
+    salts: int,
+    threshold: float,
+    id_col: str = "asset_id",
+) -> DataFrame:
+    """Incremental vector pairs through _new_vs_all_join over one `bucket`
+    column: `new_f` is (id_col, bucket, v); `both` is the same plus
+    `is_new`. Returns (id_a, id_b, cosine) with cosine ≥ threshold,
+    deduped; ids keep the caller's type (string asset ids, numeric vec
+    ids)."""
     return (
-        gated_new.alias("a")
-        .join(
-            gated_all.alias("b"),
-            on=[
-                F.col("a.bucket") == F.col("b.bucket"),
-                F.col("a.salt") == F.col("b.salt"),
-                F.when(F.col("b.is_new"), a_first).otherwise(
-                    F.col(f"a.{id_col}") != F.col(f"b.{id_col}")
-                ),
-            ],
-        )
+        _new_vs_all_join(new_f, both, ["bucket"], bucket_cap, salts, id_col)
         .select(
             F.least(f"a.{id_col}", f"b.{id_col}").alias("id_a"),
             F.greatest(f"a.{id_col}", f"b.{id_col}").alias("id_b"),
@@ -889,19 +943,22 @@ def stream_vector_pairs(
     return read_stream_vector_pairs(
         wh, dim=dim, n_bits=n_bits, seed=seed, threshold=threshold,
         bucket_cap=bucket_cap,
+        id_type=vectors.schema[id_col].dataType.simpleString(),
     )
 
 
 def read_stream_vector_pairs(
     wh: Warehouse, dim: int = 64, n_bits: int = 12, seed: int = 42,
-    threshold: float = 0.9, bucket_cap: int = 2000,
+    threshold: float = 0.9, bucket_cap: int = 2000, id_type: str = "bigint",
 ) -> DataFrame:
     """Accumulated vector pairs, deduped on read (replays re-emit identical
-    rows — the cosine is deterministic)."""
+    rows — the cosine is deterministic). `id_type` types the ids of the
+    empty frame a warehouse without the table yields: pass the type of the
+    ids given to stream_vector_pairs."""
     params = f"vhp{n_bits}:d{dim}:s{seed}:t{threshold}:c{bucket_cap}"
     if not wh.exists(VEC_PAIR_TABLE):
         return wh.spark.createDataFrame(
-            [], "vec_a bigint, vec_b bigint, cosine double"
+            [], f"vec_a {id_type}, vec_b {id_type}, cosine double"
         )
     return (
         wh.read(VEC_PAIR_TABLE)

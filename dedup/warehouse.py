@@ -107,6 +107,13 @@ class Warehouse:
         )
         self._save_manifest(m)
 
+    def lineage(self, stage: str, config_hash: str, status: str) -> list[dict]:
+        """Recorded lineage entries of one stage and config with the given
+        status, oldest first (a manifest read: no Spark job)."""
+        return [e for e in self._load_manifest()["lineage"]
+                if (e["stage"], e["config_hash"], e["status"])
+                == (stage, config_hash, status)]
+
     # -- tables --------------------------------------------------------------
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -165,8 +172,10 @@ class Warehouse:
             return
         df.write.mode("append").parquet(self._path(name))
 
-    def read(self, name: str, schema: StructType | None = None) -> DataFrame:
-        """`schema`, when known, spares the Parquet footer-inference job."""
+    def read(self, name: str,
+             schema: StructType | str | None = None) -> DataFrame:
+        """`schema` (a StructType or DDL string), when known, spares the
+        Parquet footer-inference job."""
         if self.use_iceberg:
             return self.spark.table(self._iceberg_table(name))
         reader = self.spark.read

@@ -23,3 +23,28 @@ def spark():
     )
     yield s
     s.stop()
+
+
+def _last_job_id(sc) -> int:
+    """Id of the newest Spark job (ids are sequential), -1 before any."""
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.nonEmpty() else -1
+
+
+def _count_jobs(spark, fn):
+    """(fn's result, number of Spark jobs fn submitted).
+
+    Counted by job id, not job group: a streaming query runs its
+    foreachBatch jobs under its own group."""
+    sc = spark.sparkContext
+    before = _last_job_id(sc)
+    out = fn()
+    return out, _last_job_id(sc) - before
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """`count_jobs(fn)` -> (fn's result, Spark jobs fn submitted)."""
+    return lambda fn: _count_jobs(spark, fn)

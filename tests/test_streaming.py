@@ -203,6 +203,70 @@ class TestStreamingIngest:
         }
         assert got == want, "recovery lost pairs for signed-but-unbanded docs"
 
+    def test_partial_crash_replay_bands_leftover_signatures(
+        self, spark, tmp_path
+    ):
+        """An epoch that dies at its band append, after its signatures and
+        pairs landed, leaves the band table behind the checkpoint while
+        every other state table is intact. The replay must detect the lag
+        from the manifest's lineage totals, band the leftover signatures
+        without signing them again, and still cluster like run_dedup."""
+        from dedup.pipeline import run_dedup
+        from dedup.streaming import BAND_TABLE, stream_clusters
+
+        pdf, _ = make_corpus(n_base=30, seed=13)
+        half = len(pdf) // 2
+        in_dir = str(tmp_path / "in_crash")
+        os.makedirs(in_dir)
+        wh = Warehouse(spark, str(tmp_path / "wh_crash"))
+        ckpt = str(tmp_path / "ck_crash")
+
+        def signed_keys():
+            return decode_signature_blocks(
+                wh.read("checkpoint_signatures"), CFG
+            ).select("doc_key")
+
+        spark.createDataFrame(pdf.iloc[:half]).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        ingest_stream(spark, in_dir, wh, CFG, ckpt)
+
+        spark.createDataFrame(pdf.iloc[half:]).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        append = wh.append
+
+        def crashing_append(df, name):
+            if name == BAND_TABLE:
+                raise RuntimeError("crash at the band append")
+            return append(df, name)
+
+        wh.append = crashing_append
+        with pytest.raises(Exception, match="crash at the band append"):
+            ingest_stream(spark, in_dir, wh, CFG, ckpt)
+        wh.append = append
+        banded = wh.read(BAND_TABLE).select("doc_key").distinct()
+        assert signed_keys().join(banded, "doc_key", "left_anti").count() > 0, (
+            "the crash must leave signed but unbanded docs"
+        )
+
+        # replay of the failed epoch
+        ingest_stream(spark, in_dir, wh, CFG, ckpt)
+        keys = signed_keys()
+        assert keys.count() == keys.distinct().count(), "a doc was signed twice"
+        banded = wh.read(BAND_TABLE).select("doc_key").distinct()
+        assert keys.join(banded, "doc_key", "left_anti").count() == 0
+
+        got = {
+            r["doc_key"]: r["cluster_id"]
+            for r in stream_clusters(spark, wh, CFG).collect()
+        }
+        want = {
+            r["doc_key"]: r["cluster_id"]
+            for r in run_dedup(spark, spark.createDataFrame(pdf), CFG).collect()
+        }
+        assert got == want, "replay lost pairs of the crashed epoch"
+
     def test_incremental_cluster_maintenance(self, spark, tmp_path):
         """VERDICT r3 #4: stream_clusters persists its label table and the
         next call union-finds only the quotient graph (new edges contracted
@@ -450,95 +514,8 @@ class TestStreamingIngest:
 
 
 class TestUpgradePaths:
-    """Warehouses written by earlier releases must keep working: no silent
-    label corruption, no silently-skipped cross-batch folds."""
-
-    def test_legacy_label_table_migrated_not_mixed_schema(
-        self, spark, tmp_path
-    ):
-        """A pre-delta-log label table (no `ver` column) must be migrated
-        to generation 0 BEFORE deltas are appended: a mixed-schema parquet
-        dir surfaces legacy rows with ver=NULL (max_by would reconcile
-        untouched docs to NULL cluster_ids) or drops the ver column
-        entirely, depending on which footer the reader samples."""
-        from dedup.pipeline import run_dedup
-        from dedup.streaming import LABEL_TABLE, stream_clusters
-
-        pdf1, _ = make_corpus(n_base=30, seed=31)
-        pdf2, _ = make_corpus(n_base=6, seed=888)
-        pdf2 = pdf2.copy()
-        pdf2["path"] = "up/" + pdf2["path"]
-        in_dir = str(tmp_path / "in_up")
-        os.makedirs(in_dir)
-        wh = Warehouse(spark, str(tmp_path / "wh_up"))
-        ckpt = str(tmp_path / "ck_up")
-
-        spark.createDataFrame(pdf1).coalesce(1).write.mode("append").parquet(in_dir)
-        ingest_stream(spark, in_dir, wh, CFG, ckpt)
-        stream_clusters(spark, wh, CFG)
-        # simulate the previous release's table: same labels, no ver column
-        legacy = wh.read(LABEL_TABLE).select("doc_key", "cluster_id")
-        legacy = legacy.toPandas()
-        wh.write(
-            spark.createDataFrame(legacy), LABEL_TABLE, CFG.config_hash()
-        )
-        assert "ver" not in wh.read(LABEL_TABLE).columns
-
-        spark.createDataFrame(pdf2).coalesce(1).write.mode("append").parquet(in_dir)
-        ingest_stream(spark, in_dir, wh, CFG, ckpt)
-        labels = stream_clusters(spark, wh, CFG)
-
-        got = {r["doc_key"]: r["cluster_id"] for r in labels.collect()}
-        assert None not in got.values(), "NULL cluster_id leaked from legacy rows"
-        full = pd.concat([pdf1, pdf2], ignore_index=True)
-        want = {
-            r["doc_key"]: r["cluster_id"]
-            for r in run_dedup(spark, spark.createDataFrame(full), CFG).collect()
-        }
-        assert got == want
-        # the stored table is now uniformly ver-stamped (no mixed schema)
-        stored = wh.read(LABEL_TABLE)
-        assert "ver" in stored.columns
-        assert stored.where(F.col("ver").isNull()).count() == 0
-
-    def test_legacy_warehouse_without_sha_rep_table_still_folds(
-        self, spark, tmp_path
-    ):
-        """A warehouse built before stream_sha_reps existed must fall back
-        to the signature checkpoint as the cross-batch fold source: a
-        verbatim copy of an already-ingested doc still emits an exact pair
-        and is not re-signed."""
-        from dedup.streaming import SHA_REP_TABLE, read_stream_exact_pairs
-
-        pdf, _ = make_corpus(n_base=20, seed=61)
-        in_dir = str(tmp_path / "in_leg")
-        os.makedirs(in_dir)
-        wh = Warehouse(spark, str(tmp_path / "wh_leg"))
-        ckpt = str(tmp_path / "ck_leg")
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(in_dir)
-        ingest_stream(spark, in_dir, wh, CFG, ckpt)
-        # simulate the previous release: fold table never existed
-        wh.drop(SHA_REP_TABLE)
-        n_pairs_before = read_stream_exact_pairs(wh).count()
-
-        # batch 2: one verbatim copy of a batch-1 doc under a new path
-        copy = pdf.iloc[[0]].copy()
-        copy["path"] = "copy/" + copy["path"]
-        spark.createDataFrame(copy).coalesce(1).write.mode("append").parquet(in_dir)
-        ingest_stream(spark, in_dir, wh, CFG, ckpt)
-
-        pairs = read_stream_exact_pairs(wh)
-        assert pairs.count() == n_pairs_before + 1, (
-            "cross-batch verbatim copy did not fold on a legacy warehouse"
-        )
-        # the fold pairs the copy against the sha group's REPRESENTATIVE
-        # (min doc_key over batch-1 docs with this content), which need not
-        # be doc 0 itself — assert the copy participates in exactly one
-        # new pair
-        copy_key = key_docs(spark.createDataFrame(copy)).collect()[0]["doc_key"]
-        assert pairs.where(
-            (F.col("key_a") == copy_key) | (F.col("key_b") == copy_key)
-        ).count() == 1
+    """State maintained across many calls stays bounded: the label delta
+    log folds back into one generation."""
 
     def test_label_log_compacts_periodically(self, spark, tmp_path, monkeypatch):
         """Every LABEL_COMPACT_EVERY calls the delta log folds back into a
@@ -579,6 +556,60 @@ class TestUpgradePaths:
             for r in run_dedup(spark, spark.createDataFrame(full), CFG).collect()
         }
         assert got == want
+# Spark jobs of one ingest_stream epoch on a prior state, and of the
+# stream_clusters call after it, on the fixture below (AQE stage jobs
+# included; AQE can vary identical runs by a job or two). Over ten runs on
+# a 4-core host the epoch took 30 jobs and stream_clusters 19-20 (the
+# layout that re-ran the micro-batch per consumer and decoded the
+# checkpoint three times took 63-64 and 27-28 over three runs). The pins
+# add two jobs of headroom to the highest count seen.
+MAX_EPOCH_JOBS = 32
+MAX_CLUSTER_JOBS = 22
+
+
+class TestStreamingJobs:
+    def test_jobs_per_epoch_and_cluster_call_pinned(
+        self, spark, tmp_path, count_jobs
+    ):
+        from dedup.pipeline import run_dedup
+        from dedup.streaming import stream_clusters
+
+        pdf, _ = make_corpus(n_base=40, seed=77)
+        # shuffled, so the last ten docs pair with docs already ingested
+        pdf = pdf.sample(frac=1.0, random_state=3).reset_index(drop=True)
+        in_dir = str(tmp_path / "in_jobs")
+        os.makedirs(in_dir)
+        wh = Warehouse(spark, str(tmp_path / "wh_jobs"))
+        ckpt = str(tmp_path / "ck_jobs")
+
+        # the prior state: everything but the last ten docs, clustered
+        spark.createDataFrame(pdf.iloc[:-10]).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        ingest_stream(spark, in_dir, wh, CFG, ckpt)
+        stream_clusters(spark, wh, CFG)
+
+        spark.createDataFrame(pdf.iloc[-10:]).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        n_verified = wh.read("stream_verified_pairs").count()
+        _, epoch_jobs = count_jobs(
+            lambda: ingest_stream(spark, in_dir, wh, CFG, ckpt))
+        # the pinned epoch runs every step: it verifies new pairs
+        assert wh.read("stream_verified_pairs").count() > n_verified
+        labels, cluster_jobs = count_jobs(
+            lambda: stream_clusters(spark, wh, CFG))
+
+        got = {r["doc_key"]: r["cluster_id"] for r in labels.collect()}
+        want = {
+            r["doc_key"]: r["cluster_id"]
+            for r in run_dedup(spark, spark.createDataFrame(pdf), CFG).collect()
+        }
+        assert got == want
+        assert epoch_jobs <= MAX_EPOCH_JOBS, epoch_jobs
+        assert cluster_jobs <= MAX_CLUSTER_JOBS, cluster_jobs
+
+
 class TestStreamingSoak:
     def test_fifty_batch_soak_bounded_log_and_batch_parity(
         self, spark, tmp_path
@@ -938,6 +969,24 @@ class TestStreamingAssets:
         assert wh.read(VEC_STATE_TABLE).count() == n_state
         assert key(again.collect()) == want
         assert key(read_stream_vector_pairs(wh).collect()) == want
+
+    def test_string_vector_ids_on_empty_warehouse(self, spark, tmp_path):
+        """String vector ids keep their type end to end, including the
+        empty frame a warehouse without the pair table yields."""
+        from dedup.streaming import read_stream_vector_pairs, stream_vector_pairs
+
+        wh = Warehouse(spark, str(tmp_path / "wh_vec_str"))
+        empty = read_stream_vector_pairs(wh, id_type="string")
+        assert empty.count() == 0
+        assert dict(empty.dtypes)["vec_a"] == "string"
+        assert dict(empty.dtypes)["vec_b"] == "string"
+
+        none = spark.createDataFrame(
+            [], "vec_id string, embedding array<float>"
+        )
+        got = stream_vector_pairs(spark, wh, none)
+        assert got.count() == 0
+        assert dict(got.dtypes)["vec_a"] == "string"
 
     def test_asset_state_param_hash_isolated(self, spark, tmp_path):
         """Changing the hyperplane/threshold params starts a fresh state

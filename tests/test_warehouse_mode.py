@@ -4,8 +4,6 @@ labels, and the Spark jobs each mode submits are pinned."""
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 
 from dedup.config import DedupConfig
@@ -37,21 +35,6 @@ def corpus(spark, tmp_path):
 
 def _labels(df) -> dict[str, str]:
     return {r["doc_key"]: r["cluster_id"] for r in df.collect()}
-
-
-def _count_jobs(spark, fn):
-    """(fn's result, number of Spark jobs fn submitted)."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job-start events reach the status store through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class TestWriteRowCounts:
@@ -93,16 +76,17 @@ class TestRunDedupWarehouse:
                 == signature_input(reps, CFG).count())
         assert by_stage["lsh"]["dropped_candidates"] >= 0
 
-    def test_job_counts_fresh_and_resume(self, spark, corpus, tmp_path):
+    def test_job_counts_fresh_and_resume(self, spark, corpus, tmp_path,
+                                         count_jobs):
         root = str(tmp_path / "wh")
-        fresh, fresh_jobs = _count_jobs(
-            spark, lambda: run_dedup(spark, corpus, CFG,
-                                     warehouse=Warehouse(spark, root)))
+        fresh, fresh_jobs = count_jobs(
+            lambda: run_dedup(spark, corpus, CFG,
+                              warehouse=Warehouse(spark, root)))
         fresh = _labels(fresh)
         # every signature is checkpointed now: a full resume
-        resumed, resume_jobs = _count_jobs(
-            spark, lambda: run_dedup(spark, corpus, CFG,
-                                     warehouse=Warehouse(spark, root)))
+        resumed, resume_jobs = count_jobs(
+            lambda: run_dedup(spark, corpus, CFG,
+                              warehouse=Warehouse(spark, root)))
         assert _labels(resumed) == fresh
         assert fresh_jobs <= MAX_FRESH_JOBS, fresh_jobs
         assert resume_jobs <= MAX_RESUME_JOBS, resume_jobs
