@@ -15,7 +15,8 @@ Modules:
     shingle    — normalization + token 5-gram shingling (batch/vectorized)
     minhash    — Spark-facing MinHash signature stage (pandas UDFs)
     simhash    — Spark-facing SimHash fingerprint stage
-    lsh        — band hashing, salted repartitioning, candidate pair generation
+    buckets    — the one bucket-join operator: count → cap → salt
+    lsh        — band-bucket candidate pair generation + recall audit
     verify     — candidate pair verification (signature similarity)
     cluster    — union-find connected components (large-star/small-star joins)
     suffix     — partitioned suffix-array exact long-substring pass

@@ -1,37 +1,20 @@
-"""LSH candidate generation: band buckets → pairs, with explicit skew defense.
+"""LSH candidate generation: band buckets → pairs.
 
-Skew is the north-rule hazard (SURVEY §7.4-2): a hot band bucket (license
-headers, empty files, one giant repo) makes the within-bucket self-join
-quadratic in one task. Three defenses, in order:
-
-1. sha256-exact dedup BEFORE MinHash (pipeline.py) — verbatim copies never
-   reach LSH at all.
-2. bucket cap: buckets larger than cfg.band_bucket_cap are dropped from pair
-   generation and their pair count is recorded in metrics — the compensative
-   accounting discipline of the reference's svAdjustment_ (§2.3-5): mass we
-   subtract is tracked, never silently lost.
-3. salted self-join for hot-but-eligible buckets: the left side keeps one salt,
-   the right side is replicated to all salts, so a size-m bucket fans out to
-   `salts` parallel tasks instead of one m² task.
+The bucket join and its skew defenses (sha-exact pre-fold, bucket cap with
+compensative accounting, salted hot buckets) live in dedup/buckets.py; this
+module adds the band-table specifics and the recall audit.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from dedup.buckets import audit, recall_floor, self_join
 from dedup.config import DedupConfig
 from dedup.session import materialize
 
-HOT_BUCKET_MIN = 64  # buckets below this use the plain join path
-
-
-def bucket_sizes(bands_df: DataFrame) -> DataFrame:
-    """Per-(band_id, band_hash) doc counts — map-side partial aggregation,
-    no skew risk."""
-    return bands_df.groupBy("band_id", "band_hash").agg(
-        F.count("*").alias("bucket_size")
-    )
+BAND_COLS = ["band_id", "band_hash"]
 
 
 def lsh_audit(bands_df: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -44,146 +27,38 @@ def lsh_audit(bands_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     One row: (n_buckets, n_multi_buckets, n_dropped_buckets,
     eligible_pair_slots, dropped_pair_slots, candidate_recall_floor).
     """
-    # INTEGER slot arithmetic (ADVICE r4): bucket_size*(bucket_size-1) DIV 2
-    # is exact bigint — the previous double-based form silently loses
-    # precision once pair slots exceed 2^53. Bigint overflows loudly under
-    # ANSI beyond ~4.3e9-row buckets instead of diverging silently.
-    # Sums are coalesced to 0 so an EMPTY band table yields an all-zero
-    # audit row, not nulls that poison downstream comparisons.
-    slots = F.expr("bucket_size * (bucket_size - 1) DIV 2")
-    over = F.col("bucket_size") > cfg.band_bucket_cap
-    multi = F.col("bucket_size") >= 2
-    return bucket_sizes(bands_df).agg(
-        F.count("*").alias("n_buckets"),
-        F.coalesce(F.sum(multi.cast("long")), F.lit(0))
-        .alias("n_multi_buckets"),
-        F.coalesce(F.sum(over.cast("long")), F.lit(0))
-        .alias("n_dropped_buckets"),
-        F.coalesce(
-            F.sum(F.when(multi & ~over, slots).otherwise(F.lit(0))), F.lit(0)
-        ).alias("eligible_pair_slots"),
-        F.coalesce(
-            F.sum(F.when(over, slots).otherwise(F.lit(0))), F.lit(0)
-        ).alias("dropped_pair_slots"),
-    ).withColumn(
-        "candidate_recall_floor",
-        F.round(
-            F.col("eligible_pair_slots")
-            / F.greatest(
-                F.col("eligible_pair_slots") + F.col("dropped_pair_slots"),
-                F.lit(1),
-            ),
-            6,
-        ),
+    return audit(bands_df, BAND_COLS, cfg.band_bucket_cap).select(
+        "n_buckets", "n_multi_buckets", "n_dropped_buckets",
+        "eligible_pair_slots", "dropped_pair_slots",
+        recall_floor("eligible_pair_slots", "dropped_pair_slots")
+        .alias("candidate_recall_floor"),
     )
 
 
 def candidate_pairs(
     bands_df: DataFrame,
     cfg: DedupConfig,
-    salts: int = 8,
     materialize_bands: bool = True,
+    observation: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """(pairs, dropped) from band buckets.
+    """(pairs, dropped) from band buckets through buckets.self_join.
 
     pairs:   (key_a, key_b, n_bands_hit) with key_a < key_b, distinct
     dropped: (band_id, band_hash, bucket_size) for capped buckets — the
              compensative record (recall auditing, SURVEY §2.3-5)
 
-    TWO passes so no task ever buffers an uncapped bucket: pass 1 is the
-    map-side-combinable count per bucket (skew-safe: partial counts shuffle,
-    not members); over-cap buckets are recorded and anti-filtered BEFORE any
-    member list is ever collected. Pass 2 joins the eligible bucket sizes
-    back onto the band rows and routes: small buckets group + explode their
-    C(n,2) pairs JVM-side in place (group memory bounded by HOT_BUCKET_MIN),
-    hot-but-eligible buckets (rare) go through the salted self-join so one
-    bucket can't pin a task. A degenerate 10^7-member bucket (boilerplate
-    that survives the sha-exact pre-fold) therefore costs one counter, never
-    a multi-GB collect_set buffer.
+    materialize_bands=False: callers whose band table is already a cheap
+    JVM explode over materialized signatures (r8 fused bands —
+    pipeline.run_dedup, the registry's sig-consumer queries) skip the band
+    checkpoint. `observation` receives the dropped pair slots (buckets.gate).
     """
-    # the band table is consumed by BOTH passes (bucket counts + the member
-    # join) and each pass would otherwise re-run the upstream banding kernel
-    # through Python — ReuseExchange does not fire across the differing join
-    # shapes (measured 2x on the flagship). localCheckpoint materializes the
-    # 24-byte-per-row band table once, without the plan-cache aliasing
-    # hazard a persist() inside a library operator would create.
-    # materialize_bands=False: callers whose band table is already a cheap
-    # JVM explode over materialized/persisted signatures (r8 fused bands —
-    # pipeline.run_dedup, the registry's sig-consumer queries) skip the
-    # extra checkpoint pass; re-deriving bands from the signature store
-    # costs one projection, not a Python kernel re-run.
     if materialize_bands:
         bands_df = materialize(bands_df, eager=False)
-    sizes = bucket_sizes(bands_df)
-    # no persist here: within one action Catalyst reuses the aggregation
-    # across the dropped/eligible branches, and persisting inside the
-    # operator would silently serve stale cached plans to later queries
-    dropped = sizes.where(F.col("bucket_size") > cfg.band_bucket_cap).select(
-        "band_id", "band_hash", "bucket_size"
-    )
-    eligible = sizes.where(
-        (F.col("bucket_size") >= 2) & (F.col("bucket_size") <= cfg.band_bucket_cap)
-    )
-    rows = bands_df.join(eligible, ["band_id", "band_hash"])
-
-    cold = (
-        rows.where(F.col("bucket_size") < HOT_BUCKET_MIN)
-        .groupBy("band_id", "band_hash")
-        .agg(F.array_sort(F.collect_set("doc_key")).alias("ks"))
-    )
-    pairs_expr = F.flatten(
-        F.expr(
-            "transform(ks, (x, i) -> "
-            "transform(slice(ks, i + 2, size(ks) - i - 1), "
-            "y -> struct(x AS key_a, y AS key_b)))"
-        )
-    )
-    cold_pairs = cold.select(F.explode(pairs_expr).alias("p")).select(
-        "p.key_a", "p.key_b"
-    )
-    hot_rows = rows.where(F.col("bucket_size") >= HOT_BUCKET_MIN).select(
-        "band_id", "band_hash", "doc_key"
-    )
-    hot_pairs = _salted_self_join(hot_rows, salts)
-
+    pairs, dropped = self_join(bands_df, BAND_COLS, "doc_key", [],
+                               cfg.band_bucket_cap, observation)
     pairs = (
-        cold_pairs.unionByName(hot_pairs)
+        pairs.select(F.col("id_a").alias("key_a"), F.col("id_b").alias("key_b"))
         .groupBy("key_a", "key_b")
         .agg(F.count("*").alias("n_bands_hit"))
     )
     return pairs, dropped
-
-
-def _plain_self_join(bands: DataFrame) -> DataFrame:
-    a, b = bands.alias("a"), bands.alias("b")
-    return a.join(
-        b,
-        on=[
-            F.col("a.band_id") == F.col("b.band_id"),
-            F.col("a.band_hash") == F.col("b.band_hash"),
-            F.col("a.doc_key") < F.col("b.doc_key"),
-        ],
-    ).select(F.col("a.doc_key").alias("key_a"), F.col("b.doc_key").alias("key_b"))
-
-
-def _salted_self_join(bands: DataFrame, salts: int) -> DataFrame:
-    """Salted repartitioning for hot buckets: each pair (a,b) is produced
-    exactly once — at the salt of its left member — while the join key
-    (band_id, band_hash, salt) spreads one hot bucket across `salts` tasks."""
-    if salts < 2:
-        return _plain_self_join(bands)
-    left = bands.withColumn(
-        "salt", F.pmod(F.xxhash64("doc_key"), F.lit(salts)).cast("int")
-    )
-    right = bands.withColumn(
-        "salt", F.explode(F.array(*[F.lit(s) for s in range(salts)]))
-    )
-    return left.alias("a").join(
-        right.alias("b"),
-        on=[
-            F.col("a.band_id") == F.col("b.band_id"),
-            F.col("a.band_hash") == F.col("b.band_hash"),
-            F.col("a.salt") == F.col("b.salt"),
-            F.col("a.doc_key") < F.col("b.doc_key"),
-        ],
-    ).select(F.col("a.doc_key").alias("key_a"), F.col("b.doc_key").alias("key_b"))

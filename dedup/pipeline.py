@@ -11,7 +11,7 @@ Stage graph (M1..M5 of SURVEY §7.3):
           │        appended as per-partition SignatureBlock sketch rows;
           │        resume anti-joins done keys, signs only the rest, and
           │        decodes prior blocks with their bands recomputed
-          ├─ bands → candidate_pairs (capped + salted, lsh.py)
+          ├─ bands → candidate_pairs (capped + salted, buckets.py)
           ├─ verified_pairs (zip_with/aggregate, verify.py)
           └─ connected_components (star contraction, cluster.py) → clusters
 
@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from dedup.buckets import audit, dropped_slots, self_join
 from dedup.cluster import attach_singletons, connected_components
 from dedup.config import DedupConfig
 from dedup.lsh import candidate_pairs
@@ -202,10 +203,10 @@ def cleaned_corpus_from_present(keyed: DataFrame, clusters: DataFrame
 
 # a sha present in more repos than this is boilerplate (LICENSE, __init__.py,
 # generated lockfiles) — dropped from pair generation and accounted for in
-# repo_shared_content_audit, the same compensative-cap discipline as every
-# bucket join in the engine (lsh.py band buckets, ann.py cells). The cap also
-# bounds the sha self-join fan-out: ≤ cap·(cap−1)/2 pair rows per sha, so no
-# join key can concentrate a partition regardless of how viral a file is.
+# repo_shared_content_audit: the sha self-join is buckets.self_join, like
+# every bucket join in the engine. The cap also bounds the sha self-join
+# fan-out: ≤ cap·(cap−1)/2 pair rows per sha, so no join key can
+# concentrate a partition regardless of how viral a file is.
 REPO_SPREAD_CAP = 256
 
 
@@ -222,25 +223,34 @@ def repo_sha_sets(keyed: DataFrame) -> DataFrame:
     )
 
 
+def _repo_pairs(ds: DataFrame, key: str, cap: int) -> DataFrame:
+    """(repo_a, repo_b), repo_a < repo_b, once per shared `key` value
+    whose spread is at most `cap` repos."""
+    pairs, _ = self_join(ds, [key], "repo", [], cap)
+    return pairs.select(F.col("id_a").alias("repo_a"),
+                        F.col("id_b").alias("repo_b"))
+
+
+def _spread_audit(ds: DataFrame, key: str, cap: int, n_multi: str
+                  ) -> DataFrame:
+    """Conservation identity for a repo-spread cap: every `key` value held
+    by ≥ 2 repos (`n_multi` of them) is eligible or dropped, and max_spread
+    shows how hot the hottest value was."""
+    multi, dropped = F.col("n_multi_buckets"), F.col("n_dropped_buckets")
+    return audit(ds, [key], cap).select(
+        multi.alias(n_multi),
+        (multi - dropped).alias("n_eligible"),
+        dropped.alias("n_dropped"),
+        F.col("max_multi_size").alias("max_spread"),
+    )
+
+
 def _repo_similarity_plan(ds: DataFrame, cap: int) -> DataFrame:
     """Pure plan construction downstream of the (repo, sha) distinct —
     split out (unmaterialized) so tests can assert the WHOLE physical plan,
     including the content→sha projection a localCheckpoint would hide
     behind a Scan ExistingRDD."""
-    spread = ds.groupBy("content_sha").agg(F.count("*").alias("n_repos"))
-    eligible = spread.where(
-        (F.col("n_repos") >= 2) & (F.col("n_repos") <= cap)
-    ).select("content_sha")
-    e = ds.join(eligible, "content_sha")
-    pairs = (
-        e.alias("a")
-        .join(e.alias("b"), "content_sha")
-        .where(F.col("a.repo") < F.col("b.repo"))
-        .select(
-            F.col("a.repo").alias("repo_a"), F.col("b.repo").alias("repo_b")
-        )
-    )
-    shared = pairs.groupBy("repo_a", "repo_b").agg(
+    shared = _repo_pairs(ds, "content_sha", cap).groupBy("repo_a", "repo_b").agg(
         F.count("*").alias("shared_shas")
     )
     tot = ds.groupBy("repo").agg(F.count("*").alias("n_shas"))
@@ -279,9 +289,8 @@ def repo_shared_content(keyed: DataFrame, cap: int = REPO_SPREAD_CAP,
     first projection is sha/repo-keyed — content never flows past
     key_docs (and with ingest-stored shas is never read at all).
     (repo, sha) distinct and the per-repo totals are map-side-combinable
-    group-bys; the sha spread pass gates the self-join BEFORE any pair
-    buffers exist (count-then-join, the lsh.py two-pass order), and the cap
-    bounds per-key fan-out so the join needs no salting. The final totals
+    group-bys; the sha self-join is buckets.self_join, whose spread count
+    gates it BEFORE any pair buffers exist. The final totals
     joins are repo-keyed equi-joins against one narrow row per repo — AQE
     broadcasts them when small, SMJ otherwise; pair rows carry two repo ids
     and three longs, nothing wider.
@@ -304,18 +313,7 @@ def repo_shared_content_audit(keyed: DataFrame,
         ds = keyed.select("repo", "content_sha").dropDuplicates(
             ["repo", "content_sha"]
         )
-    spread = ds.groupBy("content_sha").agg(F.count("*").alias("n_repos"))
-    multi = spread.where(F.col("n_repos") >= 2)
-    return multi.agg(
-        F.count("*").alias("n_multi_repo_shas"),
-        F.coalesce(
-            F.sum((F.col("n_repos") <= cap).cast("long")), F.lit(0)
-        ).alias("n_eligible"),
-        F.coalesce(
-            F.sum((F.col("n_repos") > cap).cast("long")), F.lit(0)
-        ).alias("n_dropped"),
-        F.coalesce(F.max("n_repos"), F.lit(0)).alias("max_spread"),
-    )
+    return _spread_audit(ds, "content_sha", cap, "n_multi_repo_shas")
 
 
 # estimated lane: a repo pair whose ONLY shared shas are boilerplate
@@ -378,20 +376,7 @@ def repo_similarity_estimated(
         if ds is None:
             ds = repo_sha_sets(keyed)
         s = materialize(repo_kmv_sketches(ds, k))
-    spread = s.groupBy("h").agg(F.count("*").alias("n_repos"))
-    eligible = spread.where(
-        (F.col("n_repos") >= 2) & (F.col("n_repos") <= hash_cap)
-    ).select("h")
-    e = s.join(eligible, "h")
-    cand = (
-        e.alias("a")
-        .join(e.alias("b"), "h")
-        .where(F.col("a.repo") < F.col("b.repo"))
-        .select(
-            F.col("a.repo").alias("repo_a"), F.col("b.repo").alias("repo_b")
-        )
-        .distinct()
-    )
+    cand = _repo_pairs(s, "h", hash_cap).distinct()
     a_rows = cand.join(
         s.select(F.col("repo").alias("repo_a"), "h"), "repo_a"
     ).select("repo_a", "repo_b", "h", F.lit(1).alias("in_a"),
@@ -431,18 +416,7 @@ def repo_estimated_audit(
         if ds is None:
             ds = repo_sha_sets(keyed)
         s = repo_kmv_sketches(ds, k)
-    spread = s.groupBy("h").agg(F.count("*").alias("n_repos"))
-    multi = spread.where(F.col("n_repos") >= 2)
-    return multi.agg(
-        F.count("*").alias("n_multi_repo_hashes"),
-        F.coalesce(
-            F.sum((F.col("n_repos") <= hash_cap).cast("long")), F.lit(0)
-        ).alias("n_eligible"),
-        F.coalesce(
-            F.sum((F.col("n_repos") > hash_cap).cast("long")), F.lit(0)
-        ).alias("n_dropped"),
-        F.coalesce(F.max("n_repos"), F.lit(0)).alias("max_spread"),
-    )
+    return _spread_audit(s, "h", hash_cap, "n_multi_repo_hashes")
 
 
 def repo_similarity_recovered(
@@ -677,12 +651,10 @@ def run_dedup(
     cfg = cfg or DedupConfig()
     cfg_hash = cfg.config_hash()
     # stage metrics are buffered and land in ONE metrics-table append
-    metrics = []
+    metrics = {}
 
     def _metric(stage, t0, **kw):
-        if warehouse is not None:
-            metrics.append(metrics_row(stage, cfg_hash,
-                                       int((time.time() - t0) * 1000), **kw))
+        metrics[stage] = (int((time.time() - t0) * 1000), kw)
 
     # a corpus ingested via warehouse.ingest_corpus carries a stored
     # content_sha column: the exact fold then never hashes content at all
@@ -720,18 +692,12 @@ def run_dedup(
     # sigs is checkpointed above, so the band explode is a cheap projection
     # per consumer — no separate band checkpoint needed (r8 fused bands)
     bands = compute_bands(sigs, cfg)
-    pairs, dropped = candidate_pairs(bands, cfg, materialize_bands=False)
-    if warehouse is not None:
-        # compensative accounting: pairs lost to bucket caps are recorded
-        # (SURVEY §2.3-5), not silently dropped
-        n_dropped = dropped.agg(
-            F.coalesce(
-                # exact bigint pair-slot arithmetic, same as lsh_audit
-                F.sum(F.expr("bucket_size * (bucket_size - 1) DIV 2")),
-                F.lit(0),
-            )
-        ).collect()[0][0]
-        _metric("lsh", t0, dropped_candidates=int(n_dropped))
+    # compensative accounting: pairs lost to bucket caps are recorded
+    # (SURVEY §2.3-5), observed on the count pass the clustering runs
+    dropped = Observation() if warehouse is not None else None
+    pairs, capped = candidate_pairs(bands, cfg, materialize_bands=False,
+                                    observation=dropped)
+    _metric("lsh", t0)
 
     t0 = time.time()
     ver = verified_pairs(pairs, sigs, cfg)
@@ -746,7 +712,12 @@ def run_dedup(
     _metric("cluster", t0)
 
     if warehouse is not None:
-        warehouse.append_metrics(metrics)
+        # no signed rows, no buckets: 0 without reading the observation,
+        # which AQE leaves unfilled on an empty input
+        metrics["lsh"][1]["dropped_candidates"] = (
+            dropped_slots(dropped, capped) if observed.get["rows"] else 0)
+        warehouse.append_metrics([metrics_row(stage, cfg_hash, ms, **kw)
+                                  for stage, (ms, kw) in metrics.items()])
         warehouse.write(clusters, "clusters", cfg_hash)
         clusters = warehouse.read("clusters", clusters.schema)
     return clusters

@@ -15,8 +15,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dedup.ann import brute_force_topk, ivf_cell_audit, ivf_topk, lsh_topk
+from dedup.buckets import bucket_sizes
 from dedup.config import DedupConfig
-from dedup.lsh import bucket_sizes, candidate_pairs
+from dedup.lsh import BAND_COLS, candidate_pairs
 from dedup.minhash import compute_bands, compute_signatures, with_doc_key
 from dedup.pipeline import exact_stage, key_docs, run_dedup, signature_input
 from dedup.session import materialize
@@ -1012,18 +1013,29 @@ GROUP BY sha256(coalesce(text, ''))
 """
 
 
+def _rep_signatures(keyed: DataFrame) -> DataFrame:
+    """Signatures of the exact-fold representatives long enough to sign."""
+    rep_docs, _ = exact_stage(keyed, need_pairs=False)
+    return compute_signatures(signature_input(rep_docs, CFG), CFG)
+
+
+def _lsh_candidates(keyed: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(sigs, LSH candidate pairs). The signatures are cut once: the band
+    count pass, both join branches and verify each read them, and the cut
+    keeps the shingle/MinHash kernel to one execution (dedup/buckets.py)."""
+    sigs = materialize(_rep_signatures(keyed), eager=False)
+    pairs, _ = candidate_pairs(compute_bands(sigs, CFG), CFG,
+                               materialize_bands=False)
+    return sigs, pairs
+
+
 def q_candidate_planted_recall(spark, sf_dir):
     """RECALL ORACLE for LSH candidate generation (VERDICT r2 #4): every
     planted whitespace-mutated copy (identical token stream, different sha)
     must surface as a candidate pair with its original — all 16 bands
     collide by construction. SQL enumerates the planted ids."""
-    corpus = _planted_near_corpus(spark, sf_dir)
-    keyed = key_docs(corpus)
-    rep_docs, _ = exact_stage(keyed, need_pairs=False)
-    rep_docs = signature_input(rep_docs, CFG)
-    sigs = materialize(compute_signatures(rep_docs, CFG), eager=False)
-    pairs, _ = candidate_pairs(compute_bands(sigs, CFG), CFG,
-                               materialize_bands=False)
+    keyed = key_docs(_planted_near_corpus(spark, sf_dir))
+    _, pairs = _lsh_candidates(keyed)
     return _planted_pair_ids(pairs, keyed)
 
 
@@ -1031,13 +1043,8 @@ def q_verified_planted_recall(spark, sf_dir):
     """RECALL ORACLE for the verify stage: the planted whitespace-mutated
     pairs carry estimated Jaccard exactly 1, so every one must survive
     signature verification at any threshold."""
-    corpus = _planted_near_corpus(spark, sf_dir)
-    keyed = key_docs(corpus)
-    rep_docs, _ = exact_stage(keyed, need_pairs=False)
-    rep_docs = signature_input(rep_docs, CFG)
-    sigs = materialize(compute_signatures(rep_docs, CFG), eager=False)
-    pairs, _ = candidate_pairs(compute_bands(sigs, CFG), CFG,
-                               materialize_bands=False)
+    keyed = key_docs(_planted_near_corpus(spark, sf_dir))
+    sigs, pairs = _lsh_candidates(keyed)
     return _planted_pair_ids(verified_pairs(pairs, sigs, CFG), keyed)
 
 
@@ -1045,12 +1052,9 @@ def q_simhash_planted_recall(spark, sf_dir):
     """RECALL ORACLE for the SimHash path: the planted whitespace-mutated
     copies have identical shingle streams, so fingerprints match at Hamming
     0 — every planted pair must fall within the radius join."""
-    corpus = _planted_near_corpus(spark, sf_dir)
-    keyed = key_docs(corpus)
-    rep_docs, _ = exact_stage(keyed, need_pairs=False)
-    rep_docs = signature_input(rep_docs, CFG)
-    sigs = compute_signatures(rep_docs, CFG)
-    return _planted_pair_ids(simhash_candidate_pairs(sigs, CFG), keyed)
+    keyed = key_docs(_planted_near_corpus(spark, sf_dir))
+    return _planted_pair_ids(
+        simhash_candidate_pairs(_rep_signatures(keyed), CFG), keyed)
 
 
 SQL_CANDIDATE_PLANTED_RECALL = _SQL_PLANTED_IDS
@@ -1084,11 +1088,8 @@ def q_corpus_sketch_counts(spark, sf_dir):
     but a per-lang distinct-sha count would tally it once per language."""
     from dedup.minhash import minhash_sketch_by_group
 
-    corpus = documents_as_corpus(spark, sf_dir)
-    keyed = key_docs(corpus)
-    rep_docs, _ = exact_stage(keyed, need_pairs=False)
-    rep_docs = signature_input(rep_docs, CFG)
-    sigs = compute_signatures(rep_docs, CFG)
+    keyed = key_docs(documents_as_corpus(spark, sf_dir))
+    sigs = _rep_signatures(keyed)
     langs = keyed.select("doc_key", "lang")
     return minhash_sketch_by_group(sigs.join(langs, "doc_key"), "lang", CFG).select(
         "group_key", "n_docs"
@@ -1217,7 +1218,7 @@ def q_lsh_bucket_size_sum(spark, sf_dir):
     signature-eligible representatives — which SQL states without knowing
     any hash (same representative discipline as minhash_band_parity)."""
     bands = q_minhash_bands(spark, sf_dir)
-    return bucket_sizes(bands).agg(
+    return bucket_sizes(bands, BAND_COLS).agg(
         F.sum("bucket_size").cast("long").alias("total_band_rows")
     )
 
@@ -1395,47 +1396,29 @@ def q_dedup_audit(spark, sf_dir):
     from dedup.lsh import lsh_audit
 
     keyed = key_docs(documents_as_corpus(spark, sf_dir))
-    rep_docs, _ = exact_stage(keyed, need_pairs=False)
-    rep_docs = signature_input(rep_docs, CFG)
-    sigs = compute_signatures(rep_docs, CFG)
-    return lsh_audit(compute_bands(sigs, CFG), CFG)
+    return lsh_audit(compute_bands(_rep_signatures(keyed), CFG), CFG)
 
 
 def q_minhash_bands(spark, sf_dir):
     """LSH band table over the documents corpus (dedup stage 3)."""
     keyed = key_docs(documents_as_corpus(spark, sf_dir))
-    rep_docs, _ = exact_stage(keyed, need_pairs=False)
-    rep_docs = signature_input(rep_docs, CFG)
-    return compute_bands(compute_signatures(rep_docs, CFG), CFG)
+    return compute_bands(_rep_signatures(keyed), CFG)
 
 
 def q_lsh_bucket_sizes(spark, sf_dir):
     """Band-bucket size histogram (skew observability)."""
     bands = q_minhash_bands(spark, sf_dir)
-    return bucket_sizes(bands).where(F.col("bucket_size") > 1)
+    return bucket_sizes(bands, BAND_COLS).where(F.col("bucket_size") > 1)
 
 
 def q_candidate_pairs(spark, sf_dir):
-    """LSH candidate pairs (dedup stage 3 output). The two-pass bucket cap
-    consumes the bands twice; checkpointing the signatures keeps the
-    shingle/MinHash kernel to one execution (run_dedup persists instead)."""
-    keyed = key_docs(documents_as_corpus(spark, sf_dir))
-    rep_docs, _ = exact_stage(keyed, need_pairs=False)
-    rep_docs = signature_input(rep_docs, CFG)
-    sigs = materialize(compute_signatures(rep_docs, CFG), eager=False)
-    pairs, _ = candidate_pairs(compute_bands(sigs, CFG), CFG,
-                               materialize_bands=False)
-    return pairs
+    """LSH candidate pairs (dedup stage 3 output)."""
+    return _lsh_candidates(key_docs(documents_as_corpus(spark, sf_dir)))[1]
 
 
 def q_verified_pairs(spark, sf_dir):
     """Signature-verified near-dup pairs (dedup stage 4 output)."""
-    keyed = key_docs(documents_as_corpus(spark, sf_dir))
-    rep_docs, _ = exact_stage(keyed, need_pairs=False)
-    rep_docs = signature_input(rep_docs, CFG)
-    sigs = materialize(compute_signatures(rep_docs, CFG), eager=False)
-    pairs, _ = candidate_pairs(compute_bands(sigs, CFG), CFG,
-                               materialize_bands=False)
+    sigs, pairs = _lsh_candidates(key_docs(documents_as_corpus(spark, sf_dir)))
     return verified_pairs(pairs, sigs, CFG)
 
 
@@ -1447,10 +1430,7 @@ def q_near_dup_clusters(spark, sf_dir):
 def q_simhash_pairs(spark, sf_dir):
     """SimHash Hamming-radius near-dup pairs (pigeonhole block join)."""
     keyed = key_docs(documents_as_corpus(spark, sf_dir))
-    rep_docs, _ = exact_stage(keyed, need_pairs=False)
-    rep_docs = signature_input(rep_docs, CFG)
-    sigs = compute_signatures(rep_docs, CFG)
-    return simhash_candidate_pairs(sigs, CFG)
+    return simhash_candidate_pairs(_rep_signatures(keyed), CFG)
 
 
 def q_asset_exact_dups(spark, sf_dir):

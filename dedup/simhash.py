@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dedup.buckets import self_join
 from dedup.config import DedupConfig
 from dedup.session import materialize
 
@@ -38,57 +39,22 @@ def simhash_blocks(sig_df: DataFrame, n_blocks: int) -> DataFrame:
     )
 
 
-def simhash_candidate_pairs(sig_df: DataFrame, cfg: DedupConfig,
-                            salts: int = 8) -> DataFrame:
+def simhash_candidate_pairs(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     """All pairs with Hamming(simhash_a, simhash_b) <= cfg.simhash_max_hamming.
 
     Pigeonhole over max_hamming+1 blocks guarantees completeness. The block
-    self-join follows the full count-cap-salt discipline (same as lsh.py): a
-    degenerate block value (e.g. all-zero fingerprints) is dropped by the
-    count pass before any member row is buffered, and hot-but-eligible
-    blocks spread across `salts` tasks (left side keeps one salt, right side
-    replicates) so one popular block value can't pin a task.
+    self-join is buckets.self_join over (block_id, block_val) capped at
+    cfg.band_bucket_cap: a degenerate block value (e.g. all-zero
+    fingerprints) is dropped by the count pass.
     """
-    from dedup.lsh import HOT_BUCKET_MIN
-
     n_blocks = cfg.simhash_max_hamming + 1
-    # the block table feeds both the count pass and the member join; one
-    # materialization, same rationale as lsh.candidate_pairs
+    # the block table feeds the count pass and both join branches
     blocks = materialize(simhash_blocks(sig_df, n_blocks), eager=False)
-    sizes = blocks.groupBy("block_id", "block_val").agg(F.count("*").alias("sz"))
-    eligible = sizes.where(
-        (F.col("sz") >= 2) & (F.col("sz") <= cfg.band_bucket_cap)
-    )
-    rows = blocks.join(eligible, ["block_id", "block_val"])
-    cold = rows.where(F.col("sz") < HOT_BUCKET_MIN).drop("sz")
-    hot = rows.where(F.col("sz") >= HOT_BUCKET_MIN).drop("sz")
-
-    def self_join(left: DataFrame, right: DataFrame, extra: list) -> DataFrame:
-        return left.alias("a").join(
-            right.alias("b"),
-            on=[
-                F.col("a.block_id") == F.col("b.block_id"),
-                F.col("a.block_val") == F.col("b.block_val"),
-                F.col("a.doc_key") < F.col("b.doc_key"),
-            ] + extra,
-        ).select(
-            F.col("a.doc_key").alias("key_a"),
-            F.col("b.doc_key").alias("key_b"),
-            F.col("a.simhash").alias("simhash_a"),
-            F.col("b.simhash").alias("simhash_b"),
-        )
-
-    cold_pairs = self_join(cold, cold, [])
-    hot_left = hot.withColumn(
-        "salt", F.pmod(F.xxhash64("doc_key"), F.lit(salts)).cast("int")
-    )
-    hot_right = hot.withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
-    )
-    hot_pairs = self_join(hot_left, hot_right,
-                          [F.col("a.salt") == F.col("b.salt")])
-    pairs = cold_pairs.unionByName(hot_pairs).distinct()
-    return pairs.withColumn(
-        "hamming",
-        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
-    ).where(F.col("hamming") <= cfg.simhash_max_hamming).select("key_a", "key_b", "hamming")
+    pairs, _ = self_join(blocks, ["block_id", "block_val"], "doc_key",
+                         ["simhash"], cfg.band_bucket_cap)
+    return pairs.distinct().select(
+        F.col("id_a").alias("key_a"),
+        F.col("id_b").alias("key_b"),
+        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+        .alias("hamming"),
+    ).where(F.col("hamming") <= cfg.simhash_max_hamming)

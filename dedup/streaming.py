@@ -36,11 +36,12 @@ import time
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from dedup.ann import HOT_BUCKET_MIN, _cosine
+from dedup.ann import cosine_verified
+from dedup.buckets import probe_join
 from dedup.config import DedupConfig
 # candidate_pairs and exact_stage stay module attributes here although the
 # stream no longer calls them: perfbench/trace.py wraps them by name
-from dedup.lsh import candidate_pairs  # noqa: F401
+from dedup.lsh import BAND_COLS, candidate_pairs  # noqa: F401
 from dedup.minhash import compute_bands, with_doc_key
 from dedup.pipeline import (  # noqa: F401
     SIG_STAGE,
@@ -77,9 +78,6 @@ BAND_SCHEMA = ("doc_key string, band_id int, band_hash bigint, "
 PAIR_SCHEMA = "key_a string, key_b string"
 DOC_KEY_SCHEMA = "doc_key string"
 LABEL_SCHEMA = "doc_key string, cluster_id string, ver int"
-# replicas a hot band bucket's new rows spread over (lsh.candidate_pairs'
-# default)
-BAND_SALTS = 8
 
 
 def _read_state(wh: Warehouse, name: str, schema: str,
@@ -134,10 +132,9 @@ def _incremental_candidates(
 ) -> tuple[DataFrame, DataFrame]:
     """Band this epoch's signature cut and return its candidate pairs plus
     the band rows to commit. New-vs-new and new-vs-old pairs come from one
-    capped+salted join of the new bands against new + accumulated bands
-    (`old`), so each pair is discovered in the round its LATER member is
-    banded. The combined (old + new) bucket size gates both, matching the
-    batch path's drop semantics. The CALLER appends the returned bands after
+    join of the new bands against new + accumulated bands (`old`, see
+    _new_vs_all), so each pair is discovered in the round its LATER member
+    is banded. The CALLER appends the returned bands after
     persisting the pairs (crash-ordering). Returns
     ((key_a, key_b, n_bands_hit), band_rows)."""
     # a JVM posexplode of the cut's fused bands: cheap to re-derive per
@@ -150,8 +147,8 @@ def _incremental_candidates(
         old = old.select("doc_key", "band_id", "band_hash").dropDuplicates()
         both = both.unionByName(old.withColumn("is_new", F.lit(False)))
     pairs = (
-        _new_vs_all_join(new_bands, both, ["band_id", "band_hash"],
-                         cfg.band_bucket_cap, BAND_SALTS, "doc_key")
+        _new_vs_all(new_bands, both, BAND_COLS, cfg.band_bucket_cap,
+                    "doc_key")
         .select(
             F.least("a.doc_key", "b.doc_key").alias("key_a"),
             F.greatest("a.doc_key", "b.doc_key").alias("key_b"),
@@ -657,89 +654,115 @@ def read_stream_substring_pairs(wh: Warehouse, cfg: DedupConfig) -> DataFrame:
 
 ASSET_FEAT_TABLE = "stream_asset_features"
 ASSET_PAIR_TABLE = "stream_asset_pairs"
+VEC_STATE_TABLE = "stream_vector_state"
+VEC_PAIR_TABLE = "stream_vector_pairs"
+# (state table, pair table, pair columns, metrics stage) of each vector lane
+ASSET_LANE = (ASSET_FEAT_TABLE, ASSET_PAIR_TABLE, ("asset_a", "asset_b"),
+              "stream_assets")
+VEC_LANE = (VEC_STATE_TABLE, VEC_PAIR_TABLE, ("vec_a", "vec_b"),
+            "stream_vectors")
 
 
-def _new_vs_all_join(
+def _new_vs_all(
     new_f: DataFrame,
     both: DataFrame,
     bucket_cols: list[str],
     bucket_cap: int,
-    salts: int,
     id_col: str,
 ) -> DataFrame:
-    """Capped+salted new-vs-(new+stored) bucket join for incremental
-    dedup — capped_bucket_self_join's discipline (dedup/ann.py:196) in the
-    asymmetric shape: bucket sizes are counted over the COMBINED old+new
-    population first (members never buffer for over-cap buckets); hot
-    eligible buckets (≥ HOT_BUCKET_MIN) assign the stored+new side one salt
-    by id hash while the new side replicates to all `salts` replicas, so a
-    single hot bucket spans `salts` tasks instead of relying on AQE to
-    split one join key; cold buckets join plain at salt 0. Exactly one
-    replica matches each stored row, so no pair duplicates from salting.
-
-    `new_f` holds the new rows, `both` the same plus the stored rows and an
-    `is_new` flag (new rows pair a<b once, old rows pair against every new
-    id). Returns the joined rows, the new side aliased "a" and the
-    new+stored side "b"; each (new, other) match appears once per shared
-    bucket."""
-    sz = both.groupBy(*bucket_cols).agg(F.count("*").alias("sz"))
-    eligible = sz.where((F.col("sz") >= 2) & (F.col("sz") <= bucket_cap))
-    hot = F.col("sz") >= HOT_BUCKET_MIN
-    gated_new = (
-        new_f.join(eligible, bucket_cols)
-        .withColumn(
-            "salt",
-            F.explode(
-                F.when(hot, F.sequence(F.lit(0), F.lit(salts - 1)))
-                .otherwise(F.array(F.lit(0)))
-            ),
-        )
-        .drop("sz")
-    )
-    gated_all = (
-        both.join(eligible, bucket_cols)
-        .withColumn(
-            "salt",
-            F.when(hot, F.pmod(F.xxhash64(id_col), F.lit(salts)).cast("int"))
-            .otherwise(F.lit(0)),
-        )
-        .drop("sz")
-    )
-    a_first = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    return gated_new.alias("a").join(
-        gated_all.alias("b"),
-        on=[F.col(f"a.{c}") == F.col(f"b.{c}") for c in bucket_cols + ["salt"]]
-        + [
-            F.when(F.col("b.is_new"), a_first).otherwise(
-                F.col(f"a.{id_col}") != F.col(f"b.{id_col}")
-            )
-        ],
-    )
+    """New rows joined to new + stored rows through buckets.probe_join:
+    `both` holds `new_f` plus the stored rows and an `is_new` flag, and its
+    COMBINED bucket sizes gate the join, matching the batch path's drop
+    semantics. New rows pair a < b once, stored rows pair against every
+    new id. The new side is aliased "a", the new+stored side "b"; each
+    (new, other) match appears once per shared bucket."""
+    joined, _ = probe_join(new_f, both, bucket_cols, id_col, bucket_cap,
+                           floor=2)
+    a, b = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    return joined.where(F.when(F.col("b.is_new"), a < b).otherwise(a != b))
 
 
 def salted_new_vs_all_pairs(
     new_f: DataFrame,
     both: DataFrame,
     bucket_cap: int,
-    salts: int,
     threshold: float,
     id_col: str = "asset_id",
 ) -> DataFrame:
-    """Incremental vector pairs through _new_vs_all_join over one `bucket`
+    """Incremental vector pairs through _new_vs_all over one `bucket`
     column: `new_f` is (id_col, bucket, v); `both` is the same plus
     `is_new`. Returns (id_a, id_b, cosine) with cosine ≥ threshold,
     deduped; ids keep the caller's type (string asset ids, numeric vec
     ids)."""
-    return (
-        _new_vs_all_join(new_f, both, ["bucket"], bucket_cap, salts, id_col)
-        .select(
-            F.least(f"a.{id_col}", f"b.{id_col}").alias("id_a"),
-            F.greatest(f"a.{id_col}", f"b.{id_col}").alias("id_b"),
-            F.round(_cosine(F.col("a.v"), F.col("b.v")), 4).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-        .dropDuplicates(["id_a", "id_b"])
+    a, b = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    return cosine_verified(
+        _new_vs_all(new_f, both, ["bucket"], bucket_cap, id_col).select(
+            F.least(a, b).alias("id_a"), F.greatest(a, b).alias("id_b"),
+            F.col("a.v").alias("v_a"), F.col("b.v").alias("v_b"),
+        ),
+        threshold,
     )
+
+
+def _stream_vector_lane(wh: Warehouse, lane: tuple, params: str,
+                        items: DataFrame, prepare, id_col: str, vec_col: str,
+                        dim: int, n_bits: int, seed: int, threshold: float,
+                        bucket_cap: int) -> None:
+    """One incremental vector-LSH round: take the items not yet in the
+    (id, bucket, vector) state under `params`, `prepare` them into
+    (id_col, vec_col) rows (the asset lane decodes here), bucket them with
+    the same seeded hyperplanes as the batch path, pair new-vs-new plus
+    new-vs-stored under the combined bucket cap, cosine-verify, append.
+    `lane` is (state table, pair table, pair columns, metrics stage).
+
+    Crash ordering: pairs append FIRST, state LAST (the commit point); a
+    replay re-pairs the round's items and dedupes on read. `params` gates
+    state reuse like config_hash on the document tables — changing the
+    hyperplanes, threshold or cap starts a fresh state lineage instead of
+    mixing geometries. A bucket is gated on its old+new population when
+    its later member arrives, so incremental recall under caps is a
+    superset of batch, never a subset."""
+    from dedup.ann import as_double, hyperplane_buckets
+
+    state_table, pair_table, pair_cols, stage = lane
+    t0 = time.time()
+
+    def join_side(state: DataFrame) -> DataFrame:
+        return state.select(id_col, "bucket",
+                            as_double(F.col(vec_col)).alias("v"))
+
+    old_f = None
+    if wh.exists(state_table):
+        stored = (
+            wh.read(state_table)
+            .where(F.col("param_hash") == params)
+            .select(id_col, "bucket", vec_col)
+            .dropDuplicates([id_col])
+        )
+        items = items.join(stored.select(id_col), id_col, "left_anti")
+        old_f = join_side(stored)
+    new_vecs = materialize(prepare(items), eager=True)
+    new_state = new_vecs.join(
+        hyperplane_buckets(new_vecs, n_bits=n_bits, dim=dim, seed=seed,
+                           id_col=id_col, vec_col=vec_col),
+        id_col,
+    )
+    new_f = join_side(new_state)
+    both = new_f.withColumn("is_new", F.lit(True))
+    if old_f is not None:
+        both = both.unionByName(old_f.withColumn("is_new", F.lit(False)))
+    raw = salted_new_vs_all_pairs(
+        new_f, both, bucket_cap, threshold, id_col
+    ).select(
+        F.col("id_a").alias(pair_cols[0]),
+        F.col("id_b").alias(pair_cols[1]),
+        "cosine",
+    )
+    n_new = new_vecs.select(id_col).distinct().count()
+    wh.append(raw.withColumn("param_hash", F.lit(params)), pair_table)
+    wh.append(new_state.withColumn("param_hash", F.lit(params)), state_table)
+    wh.record_metrics(stage, params, int((time.time() - t0) * 1000),
+                      rows_in=n_new)
 
 
 def stream_asset_pairs(
@@ -750,118 +773,59 @@ def stream_asset_pairs(
     seed: int = 42,
     threshold: float = 0.92,
     bucket_cap: int = 2000,
-    salts: int = 8,
 ) -> DataFrame:
     """Incremental perceptual asset dedup — the multimodal surface joins the
-    streaming story: decode features ONLY for assets not yet in the
-    accumulated state (the decode kernel is the expensive part — payload
-    bytes never re-cross the Arrow boundary for known assets), bucket the
-    new vectors with the SAME seeded hyperplanes as the batch path, pair
-    new-vs-new plus new-vs-old against the stored (asset_id, bucket,
-    embedding) state under a COMBINED bucket cap, cosine-verify with the
-    identical rounded threshold, and append.
+    streaming story (_stream_vector_lane): decode features ONLY for assets
+    not yet in the accumulated state (the decode kernel is the expensive
+    part — payload bytes never re-cross the Arrow boundary for known
+    assets), and pair them against the stored (asset_id, bucket, embedding)
+    state at the batch path's rounded threshold.
 
     The state rows are compact (FEATURE_DIM floats + a bucket int per
     asset) — unlike the substring pass there is NO input-retention contract:
     old payloads are never re-read, the stored embedding is the verify-side
-    operand. Buckets are persisted WITH the features so no kernel ever
-    reruns over old assets.
-
-    Crash-ordering: pairs append FIRST, features LAST (the commit point);
-    a replay re-pairs the round's assets and dedupes on read
-    (read_stream_asset_pairs), the same at-least-once discipline as every
-    pair table. param_hash gates state reuse exactly like config_hash on
-    the document tables — changing hyperplanes/threshold/cap starts a
-    fresh state lineage instead of mixing geometries.
-
-    Cap semantics match suffix.incremental_anchored_candidates: a bucket is
-    gated on its old+new population at the time its later member arrives,
-    so incremental recall under caps is a superset of batch, never a
-    subset. Hot-but-eligible buckets follow capped_bucket_self_join's
-    salt discipline (ann.py:196): the stored+new side keeps one salt
-    (pmod of its id hash), the new side replicates across `salts` replicas,
-    so one hot bucket spans `salts` tasks instead of betting on AQE
-    skew-splitting a single join key; cold buckets join plain at salt 0.
+    operand. Cap semantics match suffix.incremental_anchored_candidates.
 
     Returns the ACCUMULATED deduped pair set (asset_a, asset_b, cosine)."""
-    from dedup.ann import as_double, hyperplane_buckets
     from dedup.multimodal import FEATURE_DIM, extract_features
 
-    params = f"hp{n_bits}:s{seed}:t{threshold}:c{bucket_cap}"
-    t0 = time.time()
-    work = assets
-    old_state = None
-    if wh.exists(ASSET_FEAT_TABLE):
-        stored = (
-            wh.read(ASSET_FEAT_TABLE)
-            .where(F.col("param_hash") == params)
-            .select("asset_id", "bucket", "embedding")
-            .dropDuplicates(["asset_id"])
-        )
-        work = assets.join(
-            stored.select("asset_id"), "asset_id", "left_anti"
-        )
-        old_state = stored
-    new_feats = materialize(
-        extract_features(work).select("asset_id", "embedding"), eager=True
-    )
-    new_state = new_feats.join(
-        hyperplane_buckets(new_feats, n_bits=n_bits, dim=FEATURE_DIM,
-                           seed=seed, id_col="asset_id"),
-        "asset_id",
-    )
-    new_f = new_state.select(
-        "asset_id", "bucket", as_double(F.col("embedding")).alias("v")
-    )
-    if old_state is None:
-        both = new_f.withColumn("is_new", F.lit(True))
-    else:
-        old_f = old_state.select(
-            "asset_id", "bucket", as_double(F.col("embedding")).alias("v")
-        )
-        both = new_f.withColumn("is_new", F.lit(True)).unionByName(
-            old_f.withColumn("is_new", F.lit(False))
-        )
-    raw = salted_new_vs_all_pairs(
-        new_f, both, bucket_cap, salts, threshold
-    ).select(
-        F.col("id_a").alias("asset_a"),
-        F.col("id_b").alias("asset_b"),
-        "cosine",
-    )
-    n_new = new_feats.select("asset_id").distinct().count()
-    wh.append(raw.withColumn("param_hash", F.lit(params)), ASSET_PAIR_TABLE)
-    wh.append(
-        new_state.withColumn("param_hash", F.lit(params)), ASSET_FEAT_TABLE
-    )
-    wh.record_metrics(
-        "stream_assets", params, int((time.time() - t0) * 1000), rows_in=n_new,
+    _stream_vector_lane(
+        wh, ASSET_LANE, f"hp{n_bits}:s{seed}:t{threshold}:c{bucket_cap}",
+        assets,
+        lambda work: extract_features(work).select("asset_id", "embedding"),
+        "asset_id", "embedding", FEATURE_DIM, n_bits, seed, threshold,
+        bucket_cap,
     )
     return read_stream_asset_pairs(wh, n_bits=n_bits, seed=seed,
                                    threshold=threshold, bucket_cap=bucket_cap)
+
+
+def _read_lane_pairs(wh: Warehouse, lane: tuple, params: str,
+                     id_type: str) -> DataFrame:
+    """A vector lane's accumulated pairs, deduped on read (replays re-emit
+    identical rows — the cosine is deterministic); an empty frame with
+    `id_type` ids before the lane's first append."""
+    _, table, (a, b), _ = lane
+    if not wh.exists(table):
+        return wh.spark.createDataFrame(
+            [], f"{a} {id_type}, {b} {id_type}, cosine double"
+        )
+    return (
+        wh.read(table)
+        .where(F.col("param_hash") == params)
+        .select(a, b, "cosine")
+        .dropDuplicates([a, b])
+    )
 
 
 def read_stream_asset_pairs(
     wh: Warehouse, n_bits: int = 12, seed: int = 42, threshold: float = 0.92,
     bucket_cap: int = 2000,
 ) -> DataFrame:
-    """Accumulated perceptual pairs, deduped on read (replays re-emit
-    identical rows — the cosine is deterministic)."""
-    params = f"hp{n_bits}:s{seed}:t{threshold}:c{bucket_cap}"
-    if not wh.exists(ASSET_PAIR_TABLE):
-        return wh.spark.createDataFrame(
-            [], "asset_a string, asset_b string, cosine double"
-        )
-    return (
-        wh.read(ASSET_PAIR_TABLE)
-        .where(F.col("param_hash") == params)
-        .select("asset_a", "asset_b", "cosine")
-        .dropDuplicates(["asset_a", "asset_b"])
-    )
-
-
-VEC_STATE_TABLE = "stream_vector_state"
-VEC_PAIR_TABLE = "stream_vector_pairs"
+    """Accumulated perceptual pairs (asset_a, asset_b, cosine)."""
+    return _read_lane_pairs(
+        wh, ASSET_LANE, f"hp{n_bits}:s{seed}:t{threshold}:c{bucket_cap}",
+        "string")
 
 
 def stream_vector_pairs(
@@ -873,72 +837,19 @@ def stream_vector_pairs(
     seed: int = 42,
     threshold: float = 0.9,
     bucket_cap: int = 2000,
-    salts: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Incremental ANN over streaming embeddings (VERDICT r6 #6) — the
-    stream_asset_pairs shape minus the decode kernel: bucket ONLY vectors
-    not yet in the accumulated state with the SAME seeded hyperplanes as
-    the batch path (ann.vector_near_dup_pairs), join new-vs-(new+stored)
-    through salted_new_vs_all_pairs' count-cap-salt discipline, cosine-
-    verify at the identical rounded threshold, append.
-
-    State rows are (id, bucket, vector) — bounded per vector, param-hash
-    gated exactly like the asset path: changing hyperplanes / threshold /
-    cap starts a fresh lineage instead of mixing geometries. Crash
-    ordering: pairs append FIRST, state LAST (the commit point); a replay
-    re-pairs the round's vectors and dedupes on read. Cap semantics are
-    incremental (a bucket is gated on its old+new population when its later
-    member arrives), so incremental recall under caps is a superset of
-    batch, never a subset.
+    stream_asset_pairs lane minus the decode kernel; the batch ground truth
+    is ann.vector_near_dup_pairs. State rows are (id, bucket, vector),
+    bounded per vector.
 
     Returns the ACCUMULATED deduped pair set (vec_a, vec_b, cosine)."""
-    from dedup.ann import as_double, hyperplane_buckets
-
-    params = f"vhp{n_bits}:d{dim}:s{seed}:t{threshold}:c{bucket_cap}"
-    t0 = time.time()
-    work = vectors
-    old_state = None
-    if wh.exists(VEC_STATE_TABLE):
-        stored = (
-            wh.read(VEC_STATE_TABLE)
-            .where(F.col("param_hash") == params)
-            .select(id_col, "bucket", vec_col)
-            .dropDuplicates([id_col])
-        )
-        work = vectors.join(stored.select(id_col), id_col, "left_anti")
-        old_state = stored
-    new_vecs = materialize(work.select(id_col, vec_col), eager=True)
-    new_state = new_vecs.join(
-        hyperplane_buckets(new_vecs, n_bits=n_bits, dim=dim, seed=seed,
-                           id_col=id_col, vec_col=vec_col),
-        id_col,
-    )
-    new_f = new_state.select(
-        id_col, "bucket", as_double(F.col(vec_col)).alias("v")
-    )
-    if old_state is None:
-        both = new_f.withColumn("is_new", F.lit(True))
-    else:
-        old_f = old_state.select(
-            id_col, "bucket", as_double(F.col(vec_col)).alias("v")
-        )
-        both = new_f.withColumn("is_new", F.lit(True)).unionByName(
-            old_f.withColumn("is_new", F.lit(False))
-        )
-    raw = salted_new_vs_all_pairs(
-        new_f, both, bucket_cap, salts, threshold, id_col=id_col
-    ).select(
-        F.col("id_a").alias("vec_a"), F.col("id_b").alias("vec_b"), "cosine"
-    )
-    n_new = new_vecs.select(id_col).distinct().count()
-    wh.append(raw.withColumn("param_hash", F.lit(params)), VEC_PAIR_TABLE)
-    wh.append(
-        new_state.withColumn("param_hash", F.lit(params)), VEC_STATE_TABLE
-    )
-    wh.record_metrics(
-        "stream_vectors", params, int((time.time() - t0) * 1000), rows_in=n_new,
+    _stream_vector_lane(
+        wh, VEC_LANE, f"vhp{n_bits}:d{dim}:s{seed}:t{threshold}:c{bucket_cap}",
+        vectors, lambda work: work.select(id_col, vec_col),
+        id_col, vec_col, dim, n_bits, seed, threshold, bucket_cap,
     )
     return read_stream_vector_pairs(
         wh, dim=dim, n_bits=n_bits, seed=seed, threshold=threshold,
@@ -955,17 +866,9 @@ def read_stream_vector_pairs(
     rows — the cosine is deterministic). `id_type` types the ids of the
     empty frame a warehouse without the table yields: pass the type of the
     ids given to stream_vector_pairs."""
-    params = f"vhp{n_bits}:d{dim}:s{seed}:t{threshold}:c{bucket_cap}"
-    if not wh.exists(VEC_PAIR_TABLE):
-        return wh.spark.createDataFrame(
-            [], f"vec_a {id_type}, vec_b {id_type}, cosine double"
-        )
-    return (
-        wh.read(VEC_PAIR_TABLE)
-        .where(F.col("param_hash") == params)
-        .select("vec_a", "vec_b", "cosine")
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
+    return _read_lane_pairs(
+        wh, VEC_LANE, f"vhp{n_bits}:d{dim}:s{seed}:t{threshold}:c{bucket_cap}",
+        id_type)
 
 
 def streaming_lang_counts(

@@ -55,6 +55,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from dedup.buckets import gate
 from dedup.config import DedupConfig
 from dedup.shingle import _utf8_blob
 from dedup.session import materialize
@@ -156,8 +157,8 @@ def fingerprints(df: DataFrame, cfg: DedupConfig,
 
 
 def _eligible_fp(fp_df: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Fingerprint rows whose hash bucket passes the cap (same compensative
-    discipline as lsh.candidate_pairs: counts shuffle, never members).
+    """Fingerprint rows whose hash bucket passes buckets.gate (the cap at
+    cfg.band_bucket_cap: counts shuffle, never members).
 
     The eligible-hash side carries a SHUFFLE_HASH hint: fp_df is usually a
     localCheckpoint of the fingerprint kernel, and a LogicalRDD inherits the
@@ -170,8 +171,7 @@ def _eligible_fp(fp_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     so per-partition build size is corpus/N — no skew by construction), and
     the gate's fp_hash partitioning is exactly what the downstream anchor
     self-join needs, so no extra exchange is introduced."""
-    sizes = fp_df.groupBy("fp_hash").agg(F.count("*").alias("sz"))
-    eligible = sizes.where((F.col("sz") >= 2) & (F.col("sz") <= cfg.band_bucket_cap))
+    eligible, _ = gate(fp_df, ["fp_hash"], cfg.band_bucket_cap)
     return fp_df.join(eligible.select("fp_hash").hint("shuffle_hash"), "fp_hash")
 
 
@@ -218,12 +218,14 @@ def incremental_anchored_candidates(
     generator."""
     if old_fps is None:
         return anchored_candidates(new_fps, cfg, max_anchors)
-    new_sz = new_fps.groupBy("fp_hash").agg(F.count("*").alias("sz_new"))
-    old_sz = old_fps.groupBy("fp_hash").agg(F.count("*").alias("sz_old"))
-    total = F.col("sz_new") + F.coalesce(F.col("sz_old"), F.lit(0))
+    eligible, _ = gate(
+        new_fps.select("fp_hash").union(old_fps.select("fp_hash")),
+        ["fp_hash"], cfg.band_bucket_cap,
+    )
     eligible = (
-        new_sz.join(old_sz, "fp_hash", "left")
-        .where((total >= 2) & (total <= cfg.band_bucket_cap))
+        # only buckets with a new row can form a pair this round
+        eligible.join(new_fps.select("fp_hash").distinct(), "fp_hash",
+                      "left_semi")
         .select("fp_hash")
         # same SHUFFLE_HASH pin as _eligible_fp: never let a misestimated
         # kernel-output side become the broadcast build side of the gate

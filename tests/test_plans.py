@@ -77,6 +77,25 @@ class TestPlanInvariants:
         ]
         assert offenders == [], f"banned per-row patterns found in {offenders}"
 
+    def test_bucket_salting_only_in_buckets_module(self):
+        """One count→cap→salt operator (dedup/buckets.py): no other engine
+        module defines the hot-bucket threshold or replicates a side
+        across salts. kmv.py's salted top-k never replicates a side, so it
+        matches none of these shapes."""
+        import pathlib
+
+        pkg = pathlib.Path(__file__).resolve().parent.parent / "dedup"
+        banned = ("HOT_BUCKET_MIN", "SALTS", "range(salts)",
+                  "sequence(F.lit(0)")
+        offenders = [
+            (p.name, pat) for p in sorted(pkg.glob("*.py"))
+            if p.name != "buckets.py"
+            for line in p.read_text().splitlines()
+            for pat in banned
+            if pat in line and not line.lstrip().startswith("#")
+        ]
+        assert offenders == [], f"bucket salting outside buckets.py: {offenders}"
+
     def test_exact_stage_no_window_over_content(self, spark, corpus):
         """VERDICT r3 #1 regression guard: the exact-dup fold must never run
         a Window over a content-carrying child — one hot sha (empty files,
@@ -366,3 +385,43 @@ class TestIncrementalSubstringPlans:
         assert pair_mps, plan
         for cols in pair_mps:
             assert "content" not in cols and "wins_a" in cols, cols
+
+
+# (Exchange, Generate) counts of the parent's hand-written joins on the
+# fixture corpus: the shared operator must plan them identically
+CANDIDATE_PAIRS_NODES = (9, 2)
+STREAM_PAIRS_NODES = (10, 5)
+
+
+def _node_counts(df) -> tuple[int, int]:
+    """(Exchange, Generate) operators in df's executed plan."""
+    plan = physical_plan(df)
+    return plan.count("Exchange"), plan.count("Generate ")
+
+
+class TestBucketJoinPlans:
+    """The two benchmarked bucket joins, pinned by operator count: the
+    batch LSH self join and the stream epoch's new-vs-all probe join. The
+    pins are the counts the hand-written joins had before the shared
+    operator in dedup/buckets.py replaced them."""
+
+    def test_candidate_pairs_plan_pinned(self, spark, corpus):
+        from dedup.lsh import candidate_pairs
+
+        sigs = compute_signatures(key_docs(corpus), CFG)
+        pairs, dropped = candidate_pairs(compute_bands(sigs, CFG), CFG)
+        assert _node_counts(pairs) == CANDIDATE_PAIRS_NODES
+        assert _node_counts(dropped) == (1, 0)
+
+    def test_stream_epoch_pairs_plan_pinned(self, spark, corpus):
+        from dedup.session import materialize
+        from dedup.streaming import _incremental_candidates
+
+        keyed = key_docs(corpus)
+        new = materialize(compute_signatures(
+            keyed.where(F.col("path") >= "doc/000000000400"), CFG), eager=True)
+        old = materialize(compute_bands(compute_signatures(
+            keyed.where(F.col("path") < "doc/000000000400"), CFG), CFG),
+            eager=True)
+        pairs, _ = _incremental_candidates(new, old, CFG)
+        assert _node_counts(pairs) == STREAM_PAIRS_NODES

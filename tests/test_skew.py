@@ -7,7 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from dedup.config import DedupConfig
-from dedup.lsh import HOT_BUCKET_MIN, candidate_pairs
+from dedup.buckets import HOT_BUCKET_MIN
+from dedup.lsh import candidate_pairs
 from dedup.minhash import compute_bands, compute_signatures
 from dedup.pipeline import exact_stage, key_docs
 
@@ -154,7 +155,7 @@ class TestVectorBucketCap:
         from dedup.ann import capped_bucket_self_join
 
         f = _bucketed_vectors(spark, {1: 5000, 2: 5})
-        pairs = capped_bucket_self_join(f, "vec_id", cap=100, salts=4)
+        pairs = capped_bucket_self_join(f, "vec_id", cap=100)
         got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
         expect = {
             (2_000_000 + i, 2_000_000 + j)
@@ -171,13 +172,20 @@ class TestVectorBucketCap:
         assert row["n_dropped_buckets"] == 1
         assert row["dropped_rows"] == 5000
         assert row["eligible_rows"] == 5
+        # empty input: an all-zero row, not nulls
+        empty = vector_lsh_audit(f.select("vec_id", "bucket").where("false"),
+                                 cap=100).collect()[0]
+        assert empty.asDict() == dict(
+            n_buckets=0, n_dropped_buckets=0, eligible_rows=0,
+            dropped_rows=0, row_recall_floor=0.0,
+        )
 
     def test_hot_but_eligible_bucket_salted_pairs_once(self, spark):
-        from dedup.ann import HOT_BUCKET_MIN, capped_bucket_self_join
+        from dedup.ann import capped_bucket_self_join
 
         n = HOT_BUCKET_MIN + 36
         f = _bucketed_vectors(spark, {3: n, 0: 3})
-        pairs = capped_bucket_self_join(f, "vec_id", cap=n + 50, salts=4)
+        pairs = capped_bucket_self_join(f, "vec_id", cap=n + 50)
         rows = pairs.collect()
         seen = {(r["id_a"], r["id_b"]) for r in rows}
         assert len(seen) == len(rows), "pair produced more than once"
@@ -200,8 +208,7 @@ class TestVectorBucketCap:
         q = spark.createDataFrame(
             pd.DataFrame([dict(vec_id=0, embedding=dense.tolist())])
         )
-        got = lsh_topk(q, cand, k=5, n_bits=4, dim=8, bucket_cap=50,
-                       salts=4).collect()
+        got = lsh_topk(q, cand, k=5, n_bits=4, dim=8, bucket_cap=50).collect()
         ids = [r["neighbor_id"] for r in got]
         assert len(ids) == len(set(ids)), "duplicate neighbors after salting"
         assert all(r["neighbor_id"] >= 400 for r in got), (
@@ -209,8 +216,8 @@ class TestVectorBucketCap:
         )
         # same call with a permissive cap routes the dense bucket through the
         # salted path and recovers the true near-identical neighbors
-        full = lsh_topk(q, cand, k=5, n_bits=4, dim=8, bucket_cap=2000,
-                        salts=4).collect()
+        full = lsh_topk(q, cand, k=5, n_bits=4, dim=8,
+                        bucket_cap=2000).collect()
         assert all(100 <= r["neighbor_id"] < 400 for r in full)
         assert len({r["neighbor_id"] for r in full}) == 5
 

@@ -890,7 +890,7 @@ class TestStreamingAssets:
         )
 
         out = salted_new_vs_all_pairs(
-            new_f, both, bucket_cap=110, salts=8, threshold=0.92
+            new_f, both, bucket_cap=110, threshold=0.92
         )
         got = {(r["id_a"], r["id_b"]) for r in out.collect()}
 

@@ -8,6 +8,8 @@ import pytest
 
 from dedup.config import DedupConfig
 from dedup.fixtures import make_corpus
+from dedup.lsh import lsh_audit
+from dedup.minhash import compute_bands, compute_signatures
 from dedup.pipeline import exact_stage, key_docs, run_dedup, signature_input
 from dedup.warehouse import Warehouse
 
@@ -74,7 +76,52 @@ class TestRunDedupWarehouse:
         reps, _ = exact_stage(key_docs(corpus))
         assert (by_stage["signatures"]["rows_out"]
                 == signature_input(reps, CFG).count())
-        assert by_stage["lsh"]["dropped_candidates"] >= 0
+
+    def test_dropped_candidates_equal_audit(self, spark, corpus, tmp_path):
+        """The lsh row's dropped mass, observed on the bucket count pass,
+        equals the audit's dropped pair slots; cap 2 drops the fixture's
+        3-doc bucket."""
+        cfg = DedupConfig(band_bucket_cap=2)
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        run_dedup(spark, corpus, cfg, warehouse=wh)
+        got = {r["stage"]: r for r in wh.metrics().collect()}["lsh"]
+        reps, _ = exact_stage(key_docs(corpus))
+        sigs = compute_signatures(signature_input(reps, cfg), cfg)
+        audit = lsh_audit(compute_bands(sigs, cfg), cfg).collect()[0]
+        assert audit["dropped_pair_slots"] > 0
+        assert got["dropped_candidates"] == audit["dropped_pair_slots"]
+
+    def test_dropped_candidates_when_every_bucket_capped(self, spark,
+                                                        tmp_path):
+        """Three whitespace variants of one text share all 16 band buckets,
+        so cap 2 drops every bucket and no pair is generated: the observed
+        metrics node sits in a stage AQE prunes, and the dropped mass comes
+        from the direct count instead — 16 buckets of 3 slots each."""
+        import pandas as pd
+
+        text = " ".join(f"tok{i}" for i in range(60))
+        pdf = pd.DataFrame([
+            dict(repo="r", path=f"f{i}", commit="c", lang="py",
+                 content=text.replace(" ", " " * (i + 1)))
+            for i in range(3)
+        ])
+        cfg = DedupConfig(band_bucket_cap=2)
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        run_dedup(spark, spark.createDataFrame(pdf), cfg, warehouse=wh)
+        got = {r["stage"]: r for r in wh.metrics().collect()}["lsh"]
+        assert got["dropped_candidates"] == cfg.bands * 3
+
+    def test_empty_corpus_records_zero_dropped(self, spark, tmp_path):
+        """An all-empty-content corpus signs nothing, so the observed count
+        pass never runs: the run records 0 dropped and does not raise."""
+        pdf, _ = make_corpus(n_base=5, seed=7)
+        pdf["content"] = ""
+        corpus = spark.createDataFrame(pdf)
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        clusters = run_dedup(spark, corpus, CFG, warehouse=wh)
+        assert clusters.count() == len(pdf)
+        got = {r["stage"]: r for r in wh.metrics().collect()}["lsh"]
+        assert got["dropped_candidates"] == 0
 
     def test_job_counts_fresh_and_resume(self, spark, corpus, tmp_path,
                                          count_jobs):
