@@ -28,7 +28,7 @@ CORPUS_PATH = "/tmp/dedup_bench_corpus"
 _RUNNER = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
-from dedup.session import get_spark
+from dedup.session import get_spark, materialize
 from dedup.config import DedupConfig
 from dedup.pipeline import key_docs, exact_stage
 from dedup.minhash import compute_signatures, compute_bands
@@ -43,7 +43,7 @@ def job():
     keyed = key_docs(df)
     rep_docs, _ = exact_stage(keyed, need_pairs=False)
     sigs = compute_signatures(rep_docs, DedupConfig())
-    bands = compute_bands(sigs, DedupConfig())
+    bands = materialize(compute_bands(sigs, DedupConfig()), eager=False)
     pairs, _ = candidate_pairs(bands, DedupConfig())
     return pairs.count()
 

@@ -80,6 +80,7 @@ from dedup.config import DedupConfig
 from dedup.lsh import candidate_pairs
 from dedup.minhash import compute_bands, compute_signatures
 from dedup.pipeline import exact_stage, key_docs
+from dedup.session import materialize
 
 df = spark.read.parquet({corpus!r})
 n_files = df.count()
@@ -88,7 +89,7 @@ def job():
     keyed = key_docs(df)
     rep_docs, _ = exact_stage(keyed, need_pairs=False)
     sigs = compute_signatures(rep_docs, DedupConfig())
-    bands = compute_bands(sigs, DedupConfig())
+    bands = materialize(compute_bands(sigs, DedupConfig()), eager=False)
     pairs, _ = candidate_pairs(bands, DedupConfig())
     return pairs.count()
 

@@ -22,7 +22,9 @@ within-bucket join quadratic in one task. Three defenses, in order:
 their C(n,2) pairs JVM-side in place (group memory bounded by
 HOT_BUCKET_MIN), hot ones take the salted join. `probe_join` joins probe
 rows to a build table whose sizes gate the join; the build side is salted,
-the probe side replicates, cold buckets join at salt 0.
+the probe side replicates, cold buckets join at salt 0. `new_vs_all` is
+its incremental form: new rows probe new + stored rows, and the orientation
+rule emits each pair once, in the round its later member arrives.
 
 Materialization is the caller's choice. The gate and every join branch
 read the table, and ReuseExchange does not fire across the differing
@@ -125,7 +127,12 @@ def _replicas() -> Column:
 
 
 def _salted_on(bucket_cols: list[str]) -> list[Column]:
-    return [F.col(f"a.{c}") == F.col(f"b.{c}") for c in bucket_cols + ["salt"]]
+    # the salt is never null, so null-safe equality matches the same rows;
+    # plain equality lets the optimizer push an inferred isnotnull(salt)
+    # below the id-hash side's gate join, and the two sides of a self join
+    # then stop sharing the table's exchanges (a second full shuffle)
+    return [F.col(f"a.{c}") == F.col(f"b.{c}") for c in bucket_cols] + [
+        F.col("a.salt").eqNullSafe(F.col("b.salt"))]
 
 
 def self_join(table: DataFrame, bucket_cols: list[str], id_col: str,
@@ -148,13 +155,14 @@ def self_join(table: DataFrame, bucket_cols: list[str], id_col: str,
             for g, s in ((a, "a"), (b, "b"))
         ]
 
+    # a bucket may hold several rows of one id (one per payload), so the
+    # cold path pairs by id order like the hot path, not by array position
     ks = F.col("ks")
     cold = (
         rows.where(~hot).groupBy(*bucket_cols)
-        .agg(F.array_sort(F.collect_set(F.struct(id_col, *payload_cols)))
-             .alias("ks"))
-        .select(F.explode(F.flatten(F.transform(ks, lambda x, i: F.transform(
-            F.slice(ks, i + 2, F.size(ks) - i - 1),
+        .agg(F.collect_set(F.struct(id_col, *payload_cols)).alias("ks"))
+        .select(F.explode(F.flatten(F.transform(ks, lambda x: F.transform(
+            F.filter(ks, lambda y: y[id_col] > x[id_col]),
             lambda y: F.struct(*pair(x.getField, y.getField)),
         )))).alias("p"))
         .select("p.*")
@@ -189,3 +197,22 @@ def probe_join(probe: DataFrame, build: DataFrame, bucket_cols: list[str],
         b.drop("bucket_size").alias("b"), on=_salted_on(bucket_cols)
     ).drop("salt")
     return joined, dropped
+
+
+def new_vs_all(new: DataFrame, stored: DataFrame | None,
+               bucket_cols: list[str], id_col: str, cap: int
+               ) -> tuple[DataFrame, DataFrame]:
+    """(joined, dropped): the incremental form of probe_join. `new` rows
+    probe new + `stored` rows (`stored` may be None), buckets gated on
+    their COMBINED size at floor 2, the batch path's drop semantics at the
+    time the later member arrives. New rows pair once with a < b, stored
+    rows pair with every new id, so each pair appears in the round its
+    later member is new, once per shared bucket. Both sides carry the
+    same columns, `new` aliased "a" and new + stored "b"."""
+    both = new.withColumn("is_new", F.lit(True))
+    if stored is not None:
+        both = both.unionByName(stored.withColumn("is_new", F.lit(False)))
+    joined, dropped = probe_join(new, both, bucket_cols, id_col, cap, floor=2)
+    a, b = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    return (joined.where(F.when(F.col("b.is_new"), a < b).otherwise(a != b)),
+            dropped)

@@ -49,7 +49,7 @@ from typing import Iterator
 import numpy as np
 
 from dedup.sketches import (
-    DECODABLE_SER_VERS, FLAG_EMPTY, MAGIC, SER_VER, SketchCorruptionError,
+    FLAG_EMPTY, MAGIC, SER_VER, SketchCorruptionError, check_preamble,
 )
 
 # continue the reference's family registry: MATRIX=128, FREQUENTDIRECTIONS=129
@@ -291,15 +291,8 @@ class FrequentDirections:
         """Heapify with fail-fast validation of magic / ser-ver / family /
         size, like the reference's heapify rejections
         (FrequentDirections.java:117-126, MatrixImplOjAlgo.java:61-78)."""
-        if len(buf) < _FD_HEADER.size:
-            raise SketchCorruptionError(f"image too short: {len(buf)} bytes")
-        magic, ver, family, flags, k, d, rows, n, adj = _FD_HEADER.unpack_from(buf)
-        if magic != MAGIC:
-            raise SketchCorruptionError(f"bad magic 0x{magic:08X}")
-        if ver not in DECODABLE_SER_VERS:
-            raise SketchCorruptionError(f"unsupported ser-ver {ver}")
-        if family != FAMILY_FD:
-            raise SketchCorruptionError(f"wrong family id {family}")
+        check_preamble(buf, FAMILY_FD, _FD_HEADER.size)
+        _, _, _, flags, k, d, rows, n, adj = _FD_HEADER.unpack_from(buf)
         fd = cls(k, d, algo=algo, seed=seed)
         if flags & FLAG_EMPTY:
             return fd

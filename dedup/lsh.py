@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from dedup.buckets import audit, recall_floor, self_join
 from dedup.config import DedupConfig
-from dedup.session import materialize
 
 BAND_COLS = ["band_id", "band_hash"]
 
@@ -38,7 +37,6 @@ def lsh_audit(bands_df: DataFrame, cfg: DedupConfig) -> DataFrame:
 def candidate_pairs(
     bands_df: DataFrame,
     cfg: DedupConfig,
-    materialize_bands: bool = True,
     observation: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(pairs, dropped) from band buckets through buckets.self_join.
@@ -47,13 +45,11 @@ def candidate_pairs(
     dropped: (band_id, band_hash, bucket_size) for capped buckets — the
              compensative record (recall auditing, SURVEY §2.3-5)
 
-    materialize_bands=False: callers whose band table is already a cheap
-    JVM explode over materialized signatures (r8 fused bands —
-    pipeline.run_dedup, the registry's sig-consumer queries) skip the band
-    checkpoint. `observation` receives the dropped pair slots (buckets.gate).
+    Materializing the band table is the caller's choice (buckets.py):
+    bands exploded from materialized signatures (the fused r8 bands) are
+    cheap to recompute per consumer. `observation` receives the dropped
+    pair slots (buckets.gate).
     """
-    if materialize_bands:
-        bands_df = materialize(bands_df, eager=False)
     pairs, dropped = self_join(bands_df, BAND_COLS, "doc_key", [],
                                cfg.band_bucket_cap, observation)
     pairs = (

@@ -233,15 +233,6 @@ def minhash_sketch_by_group(
     return partials.groupBy("group_key").applyInPandas(final, SKETCH_AGG_SCHEMA)
 
 
-BANDS_SCHEMA = StructType(
-    [
-        StructField("doc_key", StringType(), False),
-        StructField("band_id", IntegerType(), False),
-        StructField("band_hash", LongType(), False),
-    ]
-)
-
-
 def compute_bands(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Signatures → exploded (doc_key, band_id, band_hash) rows.
 
@@ -249,35 +240,13 @@ def compute_bands(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     (sketches.band_hashes) — the analog of the reference's shape-aware
     algorithm choice (§4-2): compare 16 hashes, not 128 components.
 
-    When the signatures carry the precomputed `bands` column
-    (compute_signatures and pipeline.decode_signature_blocks emit it), this
-    is a pure JVM posexplode — no second Python crossing, no Arrow round
-    trip of the 128-long signature arrays. The Python fallback keeps
-    hand-built SIGNATURE_SCHEMA frames working, bit-identically (same
-    band_hashes kernel either way).
+    Every signature producer (compute_signatures and
+    pipeline.decode_signature_blocks) emits the precomputed `bands` column,
+    so this is a pure JVM posexplode — no second Python crossing, no Arrow
+    round trip of the 128-long signature arrays.
     """
-    bands, rows, seed = cfg.bands, cfg.rows_per_band, cfg.seed
-    if "bands" in sig_df.columns:
-        return sig_df.select(
-            "doc_key", F.posexplode("bands").alias("band_id", "band_hash")
-        ).select(
-            "doc_key", F.col("band_id").cast("int").alias("band_id"),
-            "band_hash",
-        )
-
-    def to_bands(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            sig = np.vstack(pdf["minhash"].to_numpy()).astype(np.uint64)
-            bh = band_hashes(sig, bands, rows, seed).astype(np.int64)  # (n, bands)
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "doc_key": np.repeat(pdf["doc_key"].to_numpy(), bands),
-                    "band_id": np.tile(np.arange(bands, dtype=np.int32), n),
-                    "band_hash": bh.reshape(-1),
-                }
-            )
-
-    return sig_df.select("doc_key", "minhash").mapInPandas(to_bands, BANDS_SCHEMA)
+    return sig_df.select(
+        "doc_key", F.posexplode("bands").alias("band_id", "band_hash")
+    ).select(
+        "doc_key", F.col("band_id").cast("int").alias("band_id"), "band_hash",
+    )

@@ -695,8 +695,7 @@ def run_dedup(
     # compensative accounting: pairs lost to bucket caps are recorded
     # (SURVEY §2.3-5), observed on the count pass the clustering runs
     dropped = Observation() if warehouse is not None else None
-    pairs, capped = candidate_pairs(bands, cfg, materialize_bands=False,
-                                    observation=dropped)
+    pairs, capped = candidate_pairs(bands, cfg, observation=dropped)
     _metric("lsh", t0)
 
     t0 = time.time()

@@ -1024,8 +1024,7 @@ def _lsh_candidates(keyed: DataFrame) -> tuple[DataFrame, DataFrame]:
     count pass, both join branches and verify each read them, and the cut
     keeps the shingle/MinHash kernel to one execution (dedup/buckets.py)."""
     sigs = materialize(_rep_signatures(keyed), eager=False)
-    pairs, _ = candidate_pairs(compute_bands(sigs, CFG), CFG,
-                               materialize_bands=False)
+    pairs, _ = candidate_pairs(compute_bands(sigs, CFG), CFG)
     return sigs, pairs
 
 

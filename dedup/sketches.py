@@ -46,19 +46,12 @@ _BAND_MUL = U64(0xFF51AFD7ED558CCD)
 FAMILY_MINHASH = 130
 FAMILY_SIGBLOCK = 131
 # ser-ver 2: seed field widened 32 -> 64 bits (headers 24 -> 28 bytes); the
-# bump makes pre-widening checkpoint images fail fast with 'unsupported
-# ser-ver' instead of a misleading truncation/garbage downstream error
-# (ADVICE r2) — the reference's heapify discipline
-# (FrequentDirections.java:117-126: wrong ser-ver is rejected by name).
-# Decoders additionally accept ver 1 — CONDITIONALLY: a ver-1 image decodes
-# only when its byte length matches the v2 layout arithmetic exactly
-# (post-widening v1 images are byte-identical to v2, so they decode
-# losslessly — ADVICE r3); any pre-widening 24-byte seed32-header v1 image
-# fails the arithmetic and is rejected BY NAME ('unsupported ser-ver 1')
-# instead of misparsing into a misleading truncation error (ADVICE r4).
-# FD-only v1 acceptance needs no length gate: _FD_HEADER never changed.
+# bump makes any other image fail fast with 'unsupported ser-ver' instead of
+# a misleading truncation/garbage downstream error (ADVICE r2) — the
+# reference's heapify discipline (FrequentDirections.java:117-126: wrong
+# ser-ver is rejected by name). Only SER_VER decodes: no checkpoint written
+# under another version was ever deployed.
 SER_VER = 2
-DECODABLE_SER_VERS = (1, 2)
 MAGIC = 0x4D485348  # "MHSH"
 FLAG_EMPTY = 4      # same flag value the reference uses (PreambleUtil.java:79)
 
@@ -261,6 +254,23 @@ class SketchCorruptionError(ValueError):
     the reference's heapify rejections (FrequentDirections.java:117-126)."""
 
 
+def check_preamble(buf: bytes, family: int, header_size: int) -> None:
+    """The heapify checks every sketch image shares, in order: magic, then
+    ser-ver by name (its byte is the fifth, so a ser-ver-1 image of any
+    length names its version), then header size and family id."""
+    if len(buf) < 5:
+        raise SketchCorruptionError(f"image too short: {len(buf)} bytes")
+    magic, ver = struct.unpack_from("<IB", buf)
+    if magic != MAGIC:
+        raise SketchCorruptionError(f"bad magic 0x{magic:08X}")
+    if ver != SER_VER:
+        raise SketchCorruptionError(f"unsupported ser-ver {ver}")
+    if len(buf) < header_size:
+        raise SketchCorruptionError(f"image too short: {len(buf)} bytes")
+    if buf[5] != family:
+        raise SketchCorruptionError(f"wrong family id {buf[5]}")
+
+
 @dataclass
 class MinHashSketch:
     """Corpus-level mergeable MinHash sketch.
@@ -356,38 +366,8 @@ class MinHashSketch:
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "MinHashSketch":
-        if len(buf) < _MINHASH_HEADER.size:
-            # a 24-byte pre-widening v1 EMPTY image lands here: name the
-            # ser-ver problem when the prefix identifies one (ADVICE r4)
-            if len(buf) >= 5 and buf[:4] == struct.pack("<I", MAGIC) and buf[4] == 1:
-                raise SketchCorruptionError(
-                    "unsupported ser-ver 1 image (pre-widening seed32 "
-                    "header layout); regenerate the checkpoint"
-                )
-            raise SketchCorruptionError(f"image too short: {len(buf)} bytes")
-        magic, ver, family, flags, num_perm, seed, n = _MINHASH_HEADER.unpack_from(buf)
-        if magic != MAGIC:
-            raise SketchCorruptionError(f"bad magic 0x{magic:08X}")
-        if ver not in DECODABLE_SER_VERS:
-            raise SketchCorruptionError(f"unsupported ser-ver {ver}")
-        if family != FAMILY_MINHASH:
-            raise SketchCorruptionError(f"wrong family id {family}")
-        if ver == 1:
-            # ver-1 acceptance is conditional: only post-widening images
-            # (byte-identical to the v2 layout) decode. Pre-widening v1
-            # images used a 24-byte seed32 header, so parsing them with the
-            # 28-byte struct misaligns every field — the exact-length
-            # arithmetic below catches that and fails fast BY NAME instead
-            # of surfacing a misleading 'truncated payload' (ADVICE r4).
-            expect = _MINHASH_HEADER.size + (
-                0 if flags & FLAG_EMPTY else num_perm * 8
-            )
-            if len(buf) != expect:
-                raise SketchCorruptionError(
-                    "unsupported ser-ver 1 image (pre-widening seed32 "
-                    f"header layout: {len(buf)} bytes != v2 arithmetic "
-                    f"{expect}); regenerate the checkpoint"
-                )
+        check_preamble(buf, FAMILY_MINHASH, _MINHASH_HEADER.size)
+        _, _, _, flags, num_perm, seed, n = _MINHASH_HEADER.unpack_from(buf)
         sk = cls(num_perm=num_perm, seed=seed)
         if flags & FLAG_EMPTY:
             return sk
@@ -535,51 +515,18 @@ class SignatureBlock:
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "SignatureBlock":
-        if len(buf) < _SIGBLOCK_HEADER.size:
-            if len(buf) >= 5 and buf[:4] == struct.pack("<I", MAGIC) and buf[4] == 1:
-                raise SketchCorruptionError(
-                    "unsupported ser-ver 1 image (pre-widening seed32 "
-                    "header layout); regenerate the checkpoint"
-                )
-            raise SketchCorruptionError(f"image too short: {len(buf)} bytes")
-        magic, ver, family, flags, num_perm, seed, n = _SIGBLOCK_HEADER.unpack_from(buf)
-        if magic != MAGIC:
-            raise SketchCorruptionError(f"bad magic 0x{magic:08X}")
-        if ver not in DECODABLE_SER_VERS:
-            raise SketchCorruptionError(f"unsupported ser-ver {ver}")
-        if family != FAMILY_SIGBLOCK:
-            raise SketchCorruptionError(f"wrong family id {family}")
+        check_preamble(buf, FAMILY_SIGBLOCK, _SIGBLOCK_HEADER.size)
+        _, _, _, flags, num_perm, seed, n = _SIGBLOCK_HEADER.unpack_from(buf)
         blk = cls(num_perm=num_perm, seed=seed)
-        if ver == 1 and flags & FLAG_EMPTY and len(buf) != _SIGBLOCK_HEADER.size:
-            raise SketchCorruptionError(
-                "unsupported ser-ver 1 image (pre-widening seed32 header "
-                "layout); regenerate the checkpoint"
-            )
         if flags & FLAG_EMPTY:
             return blk
         off = _SIGBLOCK_HEADER.size
         if len(buf) < off + 4 * n or n < 0:
-            if ver == 1:
-                # misparsed n from a pre-widening 24-byte seed32 header
-                raise SketchCorruptionError(
-                    "unsupported ser-ver 1 image (pre-widening seed32 "
-                    "header layout); regenerate the checkpoint"
-                )
             raise SketchCorruptionError("truncated key-length table")
         lens = np.frombuffer(buf, dtype=np.int32, count=n, offset=off)
         off += 4 * n
         total_key = int(lens.sum())
         need = off + total_key + 32 * n + 8 * n + 4 * n + n * num_perm * 8
-        if ver == 1 and (len(buf) != need or bool((lens < 0).any())):
-            # ver-1 images decode only when byte-identical to the v2 layout;
-            # a pre-widening 24-byte seed32 header misaligns every parsed
-            # field, so the exact-size arithmetic fails — reject BY NAME
-            # rather than a misleading truncation error (ADVICE r4)
-            raise SketchCorruptionError(
-                "unsupported ser-ver 1 image (pre-widening seed32 header "
-                f"layout: {len(buf)} bytes != v2 arithmetic {need}); "
-                "regenerate the checkpoint"
-            )
         if len(buf) < need:
             raise SketchCorruptionError(f"truncated payload: {len(buf)} < {need}")
         keys, pos = [], off

@@ -19,7 +19,8 @@ footer-inference job.
 recommended incremental-batch pattern. LSH candidate generation is
 INCREMENTAL (VERDICT r2 #7): each round bands only its signature-kernel cut
 (the fused `bands`, a JVM posexplode), finds its new-vs-new and new-vs-old
-pairs through one capped+salted join against new + accumulated bands, then
+pairs through one capped+salted join against new + accumulated bands
+(buckets.new_vs_all, which the substring and vector lanes share), then
 appends the new bands — per-round pair-generation work scales with the
 batch, not the corpus. The combined (old + new) bucket size gates every
 pair: a bucket that grows over the cap stops emitting NEW pairs; pairs
@@ -37,7 +38,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dedup.ann import cosine_verified
-from dedup.buckets import probe_join
+from dedup.buckets import new_vs_all
 from dedup.config import DedupConfig
 # candidate_pairs and exact_stage stay module attributes here although the
 # stream no longer calls them: perfbench/trace.py wraps them by name
@@ -133,23 +134,21 @@ def _incremental_candidates(
     """Band this epoch's signature cut and return its candidate pairs plus
     the band rows to commit. New-vs-new and new-vs-old pairs come from one
     join of the new bands against new + accumulated bands (`old`, see
-    _new_vs_all), so each pair is discovered in the round its LATER member
-    is banded. The CALLER appends the returned bands after
+    buckets.new_vs_all), so each pair is discovered in the round its LATER
+    member is banded. The CALLER appends the returned bands after
     persisting the pairs (crash-ordering). Returns
     ((key_a, key_b, n_bands_hit), band_rows)."""
     # a JVM posexplode of the cut's fused bands: cheap to re-derive per
     # consumer, so no band checkpoint of its own
     new_bands = compute_bands(sigs, cfg)
-    both = new_bands.withColumn("is_new", F.lit(True))
     if old is not None:
         # at-least-once appends: a foreachBatch retry may have written the
         # same band rows twice — dedupe on read, like stream_exact_pairs
         old = old.select("doc_key", "band_id", "band_hash").dropDuplicates()
-        both = both.unionByName(old.withColumn("is_new", F.lit(False)))
+    joined, _ = new_vs_all(new_bands, old, BAND_COLS, "doc_key",
+                           cfg.band_bucket_cap)
     pairs = (
-        _new_vs_all(new_bands, both, BAND_COLS, cfg.band_bucket_cap,
-                    "doc_key")
-        .select(
+        joined.select(
             F.least("a.doc_key", "b.doc_key").alias("key_a"),
             F.greatest("a.doc_key", "b.doc_key").alias("key_b"),
         )
@@ -544,8 +543,8 @@ def stream_substring_pairs(
     the streaming story (the north rule's third dedup mode, previously
     batch-only): fingerprint ONLY the sha-representative docs not yet in the
     accumulated fingerprint table, generate candidates whose later member is
-    new (new-vs-new + one equi-join against the accumulated table, combined
-    bucket cap — suffix.incremental_anchored_candidates), verify with the
+    new (buckets.new_vs_all against the accumulated table, combined bucket
+    cap — suffix.incremental_anchored_candidates), verify with the
     SAME offset-anchored exact kernel as the batch pass, and append. Per-call
     work is proportional to the new docs, not the corpus.
 
@@ -663,40 +662,22 @@ VEC_LANE = (VEC_STATE_TABLE, VEC_PAIR_TABLE, ("vec_a", "vec_b"),
             "stream_vectors")
 
 
-def _new_vs_all(
-    new_f: DataFrame,
-    both: DataFrame,
-    bucket_cols: list[str],
-    bucket_cap: int,
-    id_col: str,
-) -> DataFrame:
-    """New rows joined to new + stored rows through buckets.probe_join:
-    `both` holds `new_f` plus the stored rows and an `is_new` flag, and its
-    COMBINED bucket sizes gate the join, matching the batch path's drop
-    semantics. New rows pair a < b once, stored rows pair against every
-    new id. The new side is aliased "a", the new+stored side "b"; each
-    (new, other) match appears once per shared bucket."""
-    joined, _ = probe_join(new_f, both, bucket_cols, id_col, bucket_cap,
-                           floor=2)
-    a, b = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-    return joined.where(F.when(F.col("b.is_new"), a < b).otherwise(a != b))
-
-
 def salted_new_vs_all_pairs(
     new_f: DataFrame,
-    both: DataFrame,
+    old_f: DataFrame | None,
     bucket_cap: int,
     threshold: float,
     id_col: str = "asset_id",
 ) -> DataFrame:
-    """Incremental vector pairs through _new_vs_all over one `bucket`
-    column: `new_f` is (id_col, bucket, v); `both` is the same plus
-    `is_new`. Returns (id_a, id_b, cosine) with cosine ≥ threshold,
-    deduped; ids keep the caller's type (string asset ids, numeric vec
-    ids)."""
+    """Incremental vector pairs through buckets.new_vs_all over one
+    `bucket` column: `new_f` and the stored `old_f` (or None) are
+    (id_col, bucket, v). Returns (id_a, id_b, cosine) with cosine ≥
+    threshold, deduped; ids keep the caller's type (string asset ids,
+    numeric vec ids)."""
+    joined, _ = new_vs_all(new_f, old_f, ["bucket"], id_col, bucket_cap)
     a, b = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
     return cosine_verified(
-        _new_vs_all(new_f, both, ["bucket"], bucket_cap, id_col).select(
+        joined.select(
             F.least(a, b).alias("id_a"), F.greatest(a, b).alias("id_b"),
             F.col("a.v").alias("v_a"), F.col("b.v").alias("v_b"),
         ),
@@ -747,12 +728,8 @@ def _stream_vector_lane(wh: Warehouse, lane: tuple, params: str,
                            id_col=id_col, vec_col=vec_col),
         id_col,
     )
-    new_f = join_side(new_state)
-    both = new_f.withColumn("is_new", F.lit(True))
-    if old_f is not None:
-        both = both.unionByName(old_f.withColumn("is_new", F.lit(False)))
     raw = salted_new_vs_all_pairs(
-        new_f, both, bucket_cap, threshold, id_col
+        join_side(new_state), old_f, bucket_cap, threshold, id_col
     ).select(
         F.col("id_a").alias(pair_cols[0]),
         F.col("id_b").alias(pair_cols[1]),
@@ -784,7 +761,8 @@ def stream_asset_pairs(
     The state rows are compact (FEATURE_DIM floats + a bucket int per
     asset) — unlike the substring pass there is NO input-retention contract:
     old payloads are never re-read, the stored embedding is the verify-side
-    operand. Cap semantics match suffix.incremental_anchored_candidates.
+    operand. Cap semantics are buckets.new_vs_all's, as for the stream's
+    bands and fingerprints.
 
     Returns the ACCUMULATED deduped pair set (asset_a, asset_b, cosine)."""
     from dedup.multimodal import FEATURE_DIM, extract_features

@@ -280,17 +280,6 @@ class TestSerialization:
         with pytest.raises(SketchCorruptionError):
             FrequentDirections.from_bytes(b"\x01\x02")
 
-    def test_v1_image_decodes_losslessly(self):
-        """ADVICE r3: all ver-1 FD images ever written share the v2 layout
-        (seed widening + ver bump landed together), so ver 1 decodes."""
-        fd = FrequentDirections(4, 10)
-        fd.update(_diag_rows(5, 10))
-        v1 = bytearray(fd.to_bytes())
-        assert v1[4] == 2  # ver byte
-        v1[4] = 1
-        back = FrequentDirections.from_bytes(bytes(v1))
-        assert back.n == fd.n and np.allclose(back.B, fd.B)
-
     def test_describe_and_preamble(self):
         fd = FrequentDirections(4, 10)
         fd.update(_diag_rows(6, 10, np.arange(1, 7, dtype=float)))

@@ -213,66 +213,35 @@ class TestMinHashSketch:
         with pytest.raises(SketchCorruptionError):
             MinHashSketch.from_bytes(bytes(bad_magic))
 
-    def test_v1_image_decodes_losslessly(self):
-        """ADVICE r3: every ver-1 image this engine ever WROTE already used
-        the widened 28-byte seed64 header (the widening and the ver bump
-        landed in the same build), so decoders accept ver 1 and checkpoints
-        from the previous build resume instead of hard-failing. Ver values
-        outside DECODABLE_SER_VERS still fail fast by name (covered above
-        by test_corruption_rejection's bad_ver=99 case)."""
-        a = MinHashSketch(); a.update(self._sig(7))
-        v1 = bytearray(a.to_bytes())
-        assert v1[4] == 2  # ver byte offset in the header
-        v1[4] = 1
-        back = MinHashSketch.from_bytes(bytes(v1))
-        assert np.array_equal(back.mins, a.mins) and back.n == a.n
-
-        from dedup.sketches import SignatureBlock
-
-        blk = SignatureBlock(num_perm=8, seed=42)
-        blk.update(*self._block_rows())
-        v1b = bytearray(blk.to_bytes())
-        assert v1b[4] == 2
-        v1b[4] = 1
-        back_blk = SignatureBlock.from_bytes(bytes(v1b))
-        assert back_blk.to_bytes()[5:] == blk.to_bytes()[5:]
-
-    def test_pre_widening_v1_image_rejected_by_name(self):
-        """ADVICE r4: v1 acceptance is conditional on the buffer matching
-        the v2 layout arithmetic exactly. A PRE-widening v1 image (24-byte
-        seed32 header — checkpointing predates the seed64 widening) would
-        misparse every field under the 28-byte struct; it must be rejected
-        with 'unsupported ser-ver', never a misleading truncation error."""
+    def test_ser_ver_1_image_rejected_by_name(self):
+        """Only SER_VER images decode. A ser-ver-1 image of every family is
+        rejected as 'unsupported ser-ver 1' whatever its length: one in the
+        current layout, a pre-widening one (24-byte seed32 header) and a
+        pre-widening empty image shorter than the current header."""
+        from dedup.fd import FrequentDirections
         from dedup.sketches import SignatureBlock
 
         a = MinHashSketch(); a.update(self._sig(7))
-        img = bytearray(a.to_bytes())
-        img[4] = 1
-        # simulate the narrower pre-widening header: drop 4 of the 8 seed
-        # bytes (header 28 -> 24), payload unchanged -> length arithmetic
-        # can't match the v2 layout
-        pre = bytes(img[:12]) + bytes(img[16:])
-        with pytest.raises(SketchCorruptionError, match="unsupported ser-ver 1"):
-            MinHashSketch.from_bytes(pre)
-        # empty pre-widening image: 24 bytes, shorter than the v2 header
-        empty = bytearray(MinHashSketch().to_bytes())
-        empty[4] = 1
-        pre_empty = bytes(empty[:12]) + bytes(empty[16:])
-        assert len(pre_empty) == 24
-        with pytest.raises(SketchCorruptionError, match="unsupported ser-ver 1"):
-            MinHashSketch.from_bytes(pre_empty)
-
         blk = SignatureBlock(num_perm=8, seed=42)
         blk.update(*self._block_rows())
-        bimg = bytearray(blk.to_bytes())
-        bimg[4] = 1
-        bpre = bytes(bimg[:12]) + bytes(bimg[16:])
-        with pytest.raises(SketchCorruptionError, match="unsupported ser-ver 1"):
-            SignatureBlock.from_bytes(bpre)
-        bempty = bytearray(SignatureBlock(num_perm=8, seed=42).to_bytes())
-        bempty[4] = 1
-        with pytest.raises(SketchCorruptionError, match="unsupported ser-ver 1"):
-            SignatureBlock.from_bytes(bytes(bempty[:12]) + bytes(bempty[16:]))
+        fd = FrequentDirections(4, 10)
+        fd.update(np.eye(10)[:5])
+        images = [
+            (MinHashSketch, a), (MinHashSketch, MinHashSketch()),
+            (SignatureBlock, blk), (SignatureBlock, SignatureBlock(8, 42)),
+            (FrequentDirections, fd), (FrequentDirections,
+                                       FrequentDirections(4, 10)),
+        ]
+        for cls, sketch in images:
+            img = bytearray(sketch.to_bytes())
+            assert img[4] == 2  # ver byte offset in the header
+            img[4] = 1
+            # the narrower pre-widening header: 4 of the 8 seed bytes gone
+            for buf in (bytes(img), bytes(img[:12]) + bytes(img[16:]),
+                        bytes(img[:5])):
+                with pytest.raises(SketchCorruptionError,
+                                   match="unsupported ser-ver 1"):
+                    cls.from_bytes(buf)
 
     @staticmethod
     def _block_rows():

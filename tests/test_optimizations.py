@@ -4,7 +4,7 @@ future edit can't silently regress the optimization or its bit-exactness.
 
 Covered:
 - fused band hashes (minhash.compute_signatures emits `bands`;
-  compute_bands takes the JVM posexplode path) ≡ the Python fallback
+  compute_bands is a JVM posexplode) ≡ sketches.band_hashes in numpy
 - hyperplane_buckets carry_vec vector ≡ the as_double join it replaced
 - session.kernel_partitions scale policy (small scan → even partitions,
   wide input → keep upstream partitioning)
@@ -45,15 +45,25 @@ class TestFusedBands:
         assert "bands" in sigs.columns
 
     def test_jvm_explode_matches_python_fallback(self, spark, corpus):
-        """The posexplode over the fused column and the legacy Python band
-        pass must agree row-for-row (same band_hashes kernel either way)."""
+        """The posexplode over the fused column must agree row-for-row with
+        the Python band kernel (sketches.band_hashes) run in numpy on the
+        collected minhash rows."""
+        import numpy as np
+
+        from dedup.sketches import band_hashes
+
         sigs = compute_signatures(key_docs(corpus), CFG)
         jvm = sorted(map(tuple, compute_bands(sigs, CFG).collect()))
-        legacy = sorted(
-            map(tuple, compute_bands(sigs.drop("bands"), CFG).collect())
+        rows = sigs.select("doc_key", "minhash").collect()
+        sig = np.array([r["minhash"] for r in rows], dtype=np.int64)
+        bh = band_hashes(sig.astype(np.uint64), CFG.bands, CFG.rows_per_band,
+                         CFG.seed).astype(np.int64)
+        numpy_ref = sorted(
+            (r["doc_key"], b, int(bh[i, b]))
+            for i, r in enumerate(rows) for b in range(CFG.bands)
         )
-        assert jvm == legacy
-        assert len(jvm) == CFG.bands * sigs.count()
+        assert jvm == numpy_ref
+        assert len(jvm) == CFG.bands * len(rows)
 
     def test_band_derivation_adds_no_python_stage(self, spark, corpus):
         """Banding fused signatures is pure JVM: exactly the signature

@@ -15,6 +15,7 @@ from dedup.lsh import candidate_pairs
 from dedup.minhash import compute_bands, compute_signatures
 from dedup.pipeline import exact_stage, key_docs, run_dedup, signature_input
 from dedup.reference_impl import reference_pipeline
+from dedup.session import materialize
 from dedup.verify import verified_pairs
 
 CFG = DedupConfig()
@@ -68,7 +69,7 @@ class TestCandidatesAndVerify:
         rep_docs, _ = exact_stage(keyed)
         sigs = compute_signatures(rep_docs, CFG)
         bands = compute_bands(sigs, CFG)
-        pairs, dropped = candidate_pairs(bands, CFG)
+        pairs, dropped = candidate_pairs(materialize(bands, eager=False), CFG)
         got = {(r["key_a"], r["key_b"]) for r in pairs.collect()}
         want = ref["candidate_pairs"]
         missing = want - got

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from dedup.config import DedupConfig
 from dedup.minhash import compute_bands, compute_signatures
 from dedup.pipeline import key_docs
+from dedup.session import materialize
 
 SF = "/root/testdata/sf0.001"
 CFG = DedupConfig()
@@ -57,7 +58,8 @@ class TestPlanInvariants:
         from dedup.verify import verified_pairs
 
         sigs = compute_signatures(key_docs(corpus), CFG)
-        pairs, _ = candidate_pairs(compute_bands(sigs, CFG), CFG)
+        pairs, _ = candidate_pairs(
+            materialize(compute_bands(sigs, CFG), eager=False), CFG)
         plan = physical_plan(verified_pairs(pairs, sigs, CFG))
         assert "BatchEvalPython" not in plan
 
@@ -79,14 +81,16 @@ class TestPlanInvariants:
 
     def test_bucket_salting_only_in_buckets_module(self):
         """One count→cap→salt operator (dedup/buckets.py): no other engine
-        module defines the hot-bucket threshold or replicates a side
-        across salts. kmv.py's salted top-k never replicates a side, so it
-        matches none of these shapes."""
+        module defines the hot-bucket threshold, replicates a side across
+        salts, pins a bucket join's strategy with a shuffle_hash hint or
+        builds the new/stored `is_new` union of an incremental join.
+        kmv.py's salted top-k never replicates a side, so it matches none
+        of these shapes."""
         import pathlib
 
         pkg = pathlib.Path(__file__).resolve().parent.parent / "dedup"
         banned = ("HOT_BUCKET_MIN", "SALTS", "range(salts)",
-                  "sequence(F.lit(0)")
+                  "sequence(F.lit(0)", "shuffle_hash", "is_new")
         offenders = [
             (p.name, pat) for p in sorted(pkg.glob("*.py"))
             if p.name != "buckets.py"
@@ -234,7 +238,8 @@ class TestPlanInvariants:
         from dedup.verify import verified_pairs
 
         sigs = compute_signatures(key_docs(corpus), CFG)
-        pairs, _ = candidate_pairs(compute_bands(sigs, CFG), CFG)
+        pairs, _ = candidate_pairs(
+            materialize(compute_bands(sigs, CFG), eager=False), CFG)
         plan = physical_plan(verified_pairs(pairs, sigs, CFG))
         assert "aggregate(zip_with(" in plan
         assert "BatchEvalPython" not in plan
@@ -409,12 +414,12 @@ class TestBucketJoinPlans:
         from dedup.lsh import candidate_pairs
 
         sigs = compute_signatures(key_docs(corpus), CFG)
-        pairs, dropped = candidate_pairs(compute_bands(sigs, CFG), CFG)
+        pairs, dropped = candidate_pairs(
+            materialize(compute_bands(sigs, CFG), eager=False), CFG)
         assert _node_counts(pairs) == CANDIDATE_PAIRS_NODES
         assert _node_counts(dropped) == (1, 0)
 
     def test_stream_epoch_pairs_plan_pinned(self, spark, corpus):
-        from dedup.session import materialize
         from dedup.streaming import _incremental_candidates
 
         keyed = key_docs(corpus)

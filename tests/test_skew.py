@@ -11,6 +11,7 @@ from dedup.buckets import HOT_BUCKET_MIN
 from dedup.lsh import candidate_pairs
 from dedup.minhash import compute_bands, compute_signatures
 from dedup.pipeline import exact_stage, key_docs
+from dedup.session import materialize
 
 
 def _boilerplate_corpus(spark, n_copies: int):
@@ -33,7 +34,8 @@ class TestBucketCap:
         cfg = DedupConfig(band_bucket_cap=8)
         keyed = _boilerplate_corpus(spark, 24)  # buckets of ~24 > cap 8
         sigs = compute_signatures(keyed, cfg)
-        pairs, dropped = candidate_pairs(compute_bands(sigs, cfg), cfg)
+        pairs, dropped = candidate_pairs(
+            materialize(compute_bands(sigs, cfg), eager=False), cfg)
         d = dropped.collect()
         assert len(d) > 0, "over-cap buckets must be recorded, not silent"
         assert all(r["bucket_size"] > cfg.band_bucket_cap for r in d)
@@ -55,7 +57,7 @@ class TestBucketCap:
             }
         )
         bands = spark.createDataFrame(pdf).repartition(8)
-        pairs, dropped = candidate_pairs(bands, cfg)
+        pairs, dropped = candidate_pairs(materialize(bands, eager=False), cfg)
 
         got = {(r["key_a"], r["key_b"]) for r in pairs.collect()}
         assert got == {
@@ -87,7 +89,8 @@ class TestBucketCap:
         cfg = DedupConfig(band_bucket_cap=n + 50)
         keyed = _boilerplate_corpus(spark, n)
         sigs = compute_signatures(keyed, cfg)
-        pairs, dropped = candidate_pairs(compute_bands(sigs, cfg), cfg)
+        pairs, dropped = candidate_pairs(
+            materialize(compute_bands(sigs, cfg), eager=False), cfg)
         rows = pairs.collect()
         assert dropped.count() == 0
         # near-identical docs: essentially every pair is a candidate
@@ -162,6 +165,20 @@ class TestVectorBucketCap:
             for i in range(5) for j in range(i + 1, 5)
         }
         assert got == expect, "cold bucket intact, degenerate bucket dropped"
+
+        # one id may hold several rows of a bucket (fingerprints keep a
+        # first and a last offset): the cold path still pairs id_a < id_b,
+        # never an id with itself
+        from dedup.buckets import self_join
+
+        rows = spark.createDataFrame(
+            [("d1", 7, 5), ("d1", 7, 9), ("d2", 7, 3)],
+            "doc_key string, fp_hash long, fp_off long",
+        )
+        pairs, _ = self_join(rows, ["fp_hash"], "doc_key", ["fp_off"], 100)
+        assert sorted(map(tuple, pairs.collect())) == [
+            ("d1", "d2", 5, 3), ("d1", "d2", 9, 3)
+        ]
 
     def test_vector_audit_records_dropped_mass(self, spark):
         from dedup.ann import vector_lsh_audit

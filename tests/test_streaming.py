@@ -885,12 +885,10 @@ class TestStreamingAssets:
         schema = "asset_id string, bucket int, v array<double>"
         new_f = spark.createDataFrame(hot_new + cold_new + over_new, schema)
         old_f = spark.createDataFrame(hot_old + cold_old, schema)
-        both = new_f.withColumn("is_new", F.lit(True)).unionByName(
-            old_f.withColumn("is_new", F.lit(False))
-        )
+        both = new_f.unionByName(old_f)
 
         out = salted_new_vs_all_pairs(
-            new_f, both, bucket_cap=110, threshold=0.92
+            new_f, old_f, bucket_cap=110, threshold=0.92
         )
         got = {(r["id_a"], r["id_b"]) for r in out.collect()}
 

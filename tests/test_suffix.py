@@ -195,6 +195,46 @@ class TestSubstringPass:
         for r in found:
             assert r["lcs_len"] >= 2048
 
+    def test_hot_fingerprint_bucket_salted_pairs_all(self, spark):
+        """HOT_BUCKET_MIN + 6 docs share one block longer than
+        substring_min_len: each of the block's sampled fingerprints is a
+        hot bucket under the cap, which pairs through the salted join
+        (pmod id-hash salt on one side, explode across salts on the other),
+        and the pairs equal the naive all-pairs set."""
+        from itertools import combinations
+
+        from dedup.buckets import HOT_BUCKET_MIN
+
+        rng = np.random.default_rng(11)
+
+        def rand_text(n):
+            return bytes(rng.integers(97, 123, size=n).astype(np.uint8)).decode()
+
+        cfg = DedupConfig()
+        n = HOT_BUCKET_MIN + 6
+        assert n <= cfg.band_bucket_cap  # hot, not capped
+        block = rand_text(cfg.substring_min_len + 88)
+        pdf = pd.DataFrame(
+            {
+                "repo": ["r"] * n,
+                "path": [f"hot/{i:03d}" for i in range(n)],
+                "commit": ["h"] * n,
+                "lang": ["en"] * n,
+                "content": [rand_text(int(rng.integers(100, 400))) + block
+                            + rand_text(150) for _ in range(n)],
+            }
+        )
+        df = key_docs(spark.createDataFrame(pdf).repartition(4))
+        pairs = substring_pairs(df, cfg)
+        plan = pairs._jdf.queryExecution().executedPlan().toString().lower()
+        assert "pmod" in plan and "explode" in plan, plan
+        rows = pairs.collect()
+        keys = [r["doc_key"] for r in df.select("doc_key").collect()]
+        assert {(r["key_a"], r["key_b"]) for r in rows} == set(
+            combinations(sorted(keys), 2))
+        assert len(rows) == n * (n - 1) // 2
+        assert all(r["lcs_len"] >= len(block) for r in rows)
+
     def test_anchor_cap_bounds_work_on_near_identical_docs(self, spark):
         """A pair sharing thousands of fingerprints retains at most
         MAX_ANCHORS verification windows and still verifies."""

@@ -22,7 +22,7 @@ from dedup.lsh import candidate_pairs
 from dedup.minhash import compute_bands, compute_signatures
 from dedup.pipeline import exact_stage, key_docs, run_dedup
 from dedup.reference_impl import reference_pipeline
-from dedup.session import get_spark
+from dedup.session import get_spark, materialize
 from dedup.verify import verified_pairs
 
 
@@ -40,7 +40,8 @@ def main() -> int:
     keyed = key_docs(df)
     rep_docs, _ = exact_stage(keyed)
     sigs = compute_signatures(rep_docs, cfg).persist()
-    pairs, dropped = candidate_pairs(compute_bands(sigs, cfg), cfg)
+    pairs, dropped = candidate_pairs(
+        materialize(compute_bands(sigs, cfg), eager=False), cfg)
     got_pairs = {(r["key_a"], r["key_b"]) for r in pairs.collect()}
     ver = {(r["key_a"], r["key_b"]) for r in verified_pairs(pairs, sigs, cfg).collect()}
     clusters = {r["doc_key"]: r["cluster_id"]
