@@ -12,8 +12,11 @@ Cluster labels are canonical min-member ids, so the result is deterministic
 regardless of merge/iteration order — the same order-insensitivity contract
 as the reference's sketch merge (SURVEY §2.3-1).
 
-A single-node numpy union-find (`numpy_connected_components`) serves as the
-closed-form oracle in tests.
+Edge sets under the driver cutover skip the fixpoint: they are collected,
+union-found on the driver (`numpy_connected_components`, also the
+closed-form oracle in tests) and the labels go back to Spark as an Arrow
+table (`session.local_frame`), a JVM LocalTableScan whose readers start no
+Python-worker tasks.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from dedup.session import materialize
+from dedup.session import local_frame, materialize
 
 
 def connected_components(
@@ -39,9 +42,14 @@ def connected_components(
     BYTE-budgeted, not just row-counted (VERDICT r1 fix #7): the same
     aggregate that counts edges sums their key bytes, and the collect only
     happens when both fit (Python-object inflation is bounded by
-    driver_byte_budget * ~6). The star-contraction path handles arbitrarily
-    large graphs; both paths are tested against each other
-    (test_pipeline.py).
+    driver_byte_budget * ~6). The driver's labels return as an Arrow-built
+    frame (`local_frame`) typed like the input keys: bigint keys give
+    bigint labels, string keys string labels, and an empty edge set an
+    empty frame of that type. A frame built from a Python list would be a
+    PythonRDD, and every later read of the labels (the stream's label cut,
+    the clusters write) would run Python-worker tasks. The star-contraction
+    path handles arbitrarily large graphs; both paths are tested against
+    each other (test_pipeline.py, test_streaming.py).
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -66,7 +74,7 @@ def connected_components(
         out_schema = e.select(
             F.col("u").alias("doc_key"), F.col("v").alias("cluster_id")
         ).schema
-        return e.sparkSession.createDataFrame(list(labels.items()), out_schema)
+        return local_frame(e.sparkSession, labels.items(), out_schema)
     prev_sig = _edge_sig(e)
 
     for _ in range(max_iter):

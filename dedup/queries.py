@@ -20,7 +20,7 @@ from dedup.config import DedupConfig
 from dedup.lsh import BAND_COLS, candidate_pairs
 from dedup.minhash import compute_bands, compute_signatures, with_doc_key
 from dedup.pipeline import exact_stage, key_docs, run_dedup, signature_input
-from dedup.session import materialize
+from dedup.session import local_frame, materialize
 from dedup.simhash import simhash_candidate_pairs
 from dedup.sketches import MinHashSketch
 from dedup.textops import (
@@ -1340,8 +1340,8 @@ def q_dedup_audit_identities(spark, sf_dir):
         == sum(s * f for s, f, o in zip(slots, freq, over) if o)
         and 0.0 <= float(audit["candidate_recall_floor"] or 0.0) <= 1.0
     )
-    return spark.createDataFrame(
-        [(sum(s * f for s, f in zip(sz, freq)), bool(ok))],
+    return local_frame(
+        spark, [(sum(s * f for s, f in zip(sz, freq)), bool(ok))],
         "total_band_rows bigint, identities_ok boolean",
     )
 
@@ -1905,8 +1905,8 @@ def q_asset_containment(spark, sf_dir):
          synthetic_pgm(i, w=64, h=64, x0=32, y0=32))
         for i in range(15)
     ]
-    assets = spark.createDataFrame(
-        rows, "asset_id string, kind string, payload binary"
+    assets = local_frame(
+        spark, rows, "asset_id string, kind string, payload binary"
     )
     return asset_containment(assets)
 

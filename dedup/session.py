@@ -5,7 +5,10 @@ from __future__ import annotations
 import os
 import warnings
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -100,6 +103,35 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str
+                ) -> DataFrame:
+    """DataFrame over driver-side `rows` (tuples in `schema`'s column
+    order; `schema` a StructType or DDL string), built as a pyarrow Table.
+
+    Spark plans an Arrow table as a JVM LocalTableScan, whatever
+    spark.sql.execution.arrow.pyspark.enabled says. A Python list passed to
+    createDataFrame instead becomes a PythonRDD, and every query reading it
+    runs Python-worker tasks. Measured on a 4-core host (local[4]), a
+    one-row metrics append took 670-820 ms from a list and 200-260 ms from
+    Arrow, and stream_clusters fell from 19-20 Spark jobs to 15. At the
+    driver cutover's upper end the two are about even: for 1M two-string
+    rows the list built in 5.2-6.1 s and Arrow in 3.4-3.7 s, but a groupBy
+    over it then took 1.4-3.5 s against 4.4-6.0 s, since a LocalTableScan
+    ships its rows inside its tasks. A pandas frame is no substitute: with
+    Arrow off it rejects a nullable bigint holding None.
+
+    This is the one place in the engine that calls createDataFrame."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 # materialize's private-API fallback warns once per process

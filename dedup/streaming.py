@@ -33,6 +33,7 @@ pairs only).
 from __future__ import annotations
 
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -51,7 +52,7 @@ from dedup.pipeline import (  # noqa: F401
     signature_input,
     signatures_with_resume,
 )
-from dedup.session import materialize
+from dedup.session import local_frame, materialize
 from dedup.verify import verified_pairs
 from dedup.warehouse import Warehouse
 
@@ -358,6 +359,19 @@ LABEL_TABLE = "stream_cluster_labels"
 # bounds read-side reconciliation work while keeping per-call writes
 # proportional to the batch (full rewrites are 1-in-16, not 1-per-call)
 LABEL_COMPACT_EVERY = 16
+# manifest status of one appended label generation (see _label_generation)
+LABEL_DELTA = "delta"
+
+
+def _label_generation(wh: Warehouse, cfg_hash: str) -> int:
+    """The label log's newest generation, read from the manifest (no Spark
+    job). A full write is generation 0 and records `written`; each delta
+    append records LABEL_DELTA first, so the generation is the number of
+    delta entries since the table's last `written` entry."""
+    gen = 0
+    for e in wh.lineage(LABEL_TABLE, cfg_hash):
+        gen = 0 if e["status"] == "written" else gen + 1
+    return gen
 
 
 def _reconciled_labels(stored: DataFrame) -> DataFrame:
@@ -406,7 +420,8 @@ def stream_clusters(spark: SparkSession, wh: Warehouse, cfg: DedupConfig
     contracted to their prior labels — so per-call clustering work is
     proportional to the new batch, not the accumulated pair history.
     WRITE work is batch-proportional too (VERDICT r4 #2): the table is a
-    merge-on-read delta log — each call appends one generation holding only
+    merge-on-read delta log — each call appends one generation, numbered
+    from the warehouse manifest (_label_generation), holding only
     the labels that changed (new docs + merged components), readers take
     latest-generation-wins per doc_key, and the log is folded into a single
     overwrite every LABEL_COMPACT_EVERY calls. The label table is gated on
@@ -442,12 +457,14 @@ def stream_clusters(spark: SparkSession, wh: Warehouse, cfg: DedupConfig
         # No non-empty batch was ever ingested (fresh/empty input dir):
         # return the same empty (doc_key, cluster_id) frame the batch path
         # yields on an empty corpus instead of raising on a missing table.
-        return wh.spark.createDataFrame([], "doc_key string, cluster_id string")
-    edges = wh.spark.createDataFrame([], PAIR_SCHEMA)
-    if wh.exists("stream_exact_pairs"):
-        edges = edges.unionByName(read_stream_exact_pairs(wh))
-    if wh.exists("stream_verified_pairs"):
-        edges = edges.unionByName(read_stream_verified_pairs(wh))
+        return local_frame(wh.spark, [], "doc_key string, cluster_id string")
+    # the pair tables that exist, or an empty seed when neither does
+    edges = reduce(DataFrame.unionByName, [
+        read(wh) for name, read in (
+            ("stream_exact_pairs", read_stream_exact_pairs),
+            ("stream_verified_pairs", read_stream_verified_pairs),
+        ) if wh.exists(name)
+    ] or [local_frame(wh.spark, [], PAIR_SCHEMA)])
     members = wh.read("stream_doc_keys", DOC_KEY_SCHEMA).select(
         "doc_key").distinct()
     cfg_hash = cfg.config_hash()
@@ -460,12 +477,9 @@ def stream_clusters(spark: SparkSession, wh: Warehouse, cfg: DedupConfig
         # pair tables, which are themselves config-gated on read.
         wh.drop(LABEL_TABLE)
         have_prior = False
-    gen = 0
+    gen = _label_generation(wh, cfg_hash) if have_prior else 0
     if have_prior:
         stored = wh.read(LABEL_TABLE, LABEL_SCHEMA)
-        gen = int(
-            stored.agg(F.coalesce(F.max("ver"), F.lit(0))).collect()[0][0]
-        )
         prior = _reconciled_labels(stored)
         quotient = _effective_edges(edges, prior)
         comp = connected_components(quotient)
@@ -512,7 +526,10 @@ def stream_clusters(spark: SparkSession, wh: Warehouse, cfg: DedupConfig
         # latest-generation-wins (_reconciled_labels); a crash mid-append
         # leaves a partial generation whose missing labels re-enter the
         # quotient graph through their persisted edges next call, the same
-        # idempotence argument as the pair tables.
+        # idempotence argument as the pair tables. The generation number
+        # is recorded BEFORE the append: a crash between the two skips a
+        # number, never reuses one (_label_generation).
+        wh.record_lineage(LABEL_TABLE, cfg_hash, LABEL_DELTA)
         wh.append(labels.where("changed").select("doc_key", "cluster_id")
                   .withColumn("ver", F.lit(gen + 1)), LABEL_TABLE)
     return labels.select("doc_key", "cluster_id")
@@ -570,8 +587,8 @@ def stream_substring_pairs(
     cfg_hash = cfg.config_hash()
     t0 = time.time()
     if not wh.exists(SHA_REP_TABLE):
-        return spark.createDataFrame(
-            [], "key_a string, key_b string, lcs_len int"
+        return local_frame(
+            spark, [], "key_a string, key_b string, lcs_len int"
         )
     keyed = with_doc_key(corpus, key_cols)
     reps = (
@@ -640,8 +657,8 @@ def read_stream_substring_pairs(wh: Warehouse, cfg: DedupConfig) -> DataFrame:
     max == the unique value; max also upgrades a pair first seen through a
     saturated window if a later replay measured deeper)."""
     if not wh.exists(SUBSTR_TABLE):
-        return wh.spark.createDataFrame(
-            [], "key_a string, key_b string, lcs_len int"
+        return local_frame(
+            wh.spark, [], "key_a string, key_b string, lcs_len int"
         )
     return (
         wh.read(SUBSTR_TABLE)
@@ -785,8 +802,8 @@ def _read_lane_pairs(wh: Warehouse, lane: tuple, params: str,
     `id_type` ids before the lane's first append."""
     _, table, (a, b), _ = lane
     if not wh.exists(table):
-        return wh.spark.createDataFrame(
-            [], f"{a} {id_type}, {b} {id_type}, cosine double"
+        return local_frame(
+            wh.spark, [], f"{a} {id_type}, {b} {id_type}, cosine double"
         )
     return (
         wh.read(table)

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from dedup.session import local_frame
 from dedup.sketches import MAGIC, SER_VER
 
 CHECKPOINT_SCHEMA = StructType(
@@ -107,12 +108,14 @@ class Warehouse:
         )
         self._save_manifest(m)
 
-    def lineage(self, stage: str, config_hash: str, status: str) -> list[dict]:
+    def lineage(self, stage: str, config_hash: str,
+                status: str | None = None) -> list[dict]:
         """Recorded lineage entries of one stage and config with the given
-        status, oldest first (a manifest read: no Spark job)."""
+        status (any status when None), oldest first (a manifest read: no
+        Spark job)."""
         return [e for e in self._load_manifest()["lineage"]
-                if (e["stage"], e["config_hash"], e["status"])
-                == (stage, config_hash, status)]
+                if (e["stage"], e["config_hash"]) == (stage, config_hash)
+                and status in (None, e["status"])]
 
     # -- tables --------------------------------------------------------------
     def _path(self, name: str) -> str:
@@ -258,8 +261,10 @@ class Warehouse:
                                          rows_out, dropped_candidates)])
 
     def append_metrics(self, rows: list[tuple]) -> None:
-        """Append buffered `metrics_row` tuples in one write."""
-        self.append(self.spark.createDataFrame(rows, METRICS_SCHEMA), "metrics")
+        """Append buffered `metrics_row` tuples in one write, from an
+        Arrow-built frame (`local_frame`): the write job runs no Python
+        worker."""
+        self.append(local_frame(self.spark, rows, METRICS_SCHEMA), "metrics")
 
     def metrics(self) -> DataFrame:
         return self.read("metrics")

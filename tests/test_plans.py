@@ -100,6 +100,29 @@ class TestPlanInvariants:
         ]
         assert offenders == [], f"bucket salting outside buckets.py: {offenders}"
 
+    def test_create_dataframe_only_in_local_frame(self):
+        """Driver-side rows become a frame through one helper,
+        session.local_frame, which builds an Arrow table (a JVM
+        LocalTableScan). createDataFrame over a Python list plans a
+        PythonRDD, whose every reader starts Python-worker tasks."""
+        import inspect
+        import pathlib
+
+        from dedup.session import local_frame
+
+        pkg = pathlib.Path(__file__).resolve().parent.parent / "dedup"
+        calls = [
+            (p.name, line.strip()) for p in sorted(pkg.glob("*.py"))
+            for line in p.read_text().splitlines()
+            if "createDataFrame(" in line and not line.lstrip().startswith("#")
+        ]
+        helper = [("session.py", line.strip())
+                  for line in inspect.getsource(local_frame).splitlines()
+                  if "createDataFrame(" in line]
+        assert len(helper) == 1 and calls == helper, (
+            f"createDataFrame outside session.local_frame: {calls}"
+        )
+
     def test_exact_stage_no_window_over_content(self, spark, corpus):
         """VERDICT r3 #1 regression guard: the exact-dup fold must never run
         a Window over a content-carrying child — one hot sha (empty files,

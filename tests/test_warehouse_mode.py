@@ -18,12 +18,14 @@ STAGES = ["exact", "signatures", "lsh", "verify", "cluster"]
 
 # Spark jobs one run_dedup submits on the fixture below, AQE stage jobs
 # included. AQE submits some stages before it settles a join's strategy,
-# so identical runs differ by a few jobs: over ten fresh/resume pairs on a
-# 4-core host the fresh run took 28-30 jobs and the full resume 29-31 (the
-# layout before fused decoded bands and observed counts took 43-44 and
-# 52-53). The pins add two jobs of headroom to the highest count seen.
-MAX_FRESH_JOBS = 32
-MAX_RESUME_JOBS = 33
+# so identical runs differ by a few jobs: over six fresh/resume pairs on a
+# 4-core host the fresh run took 20-21 jobs and the full resume 21-22. The
+# layout whose metrics append and driver union-find labels were list-built
+# frames took 22-23 and 23-24 (four pairs), and the one before fused
+# decoded bands and observed counts 43-44 and 52-53. The pins add two jobs
+# of headroom to the highest count seen.
+MAX_FRESH_JOBS = 23
+MAX_RESUME_JOBS = 24
 
 
 @pytest.fixture()
