@@ -164,7 +164,7 @@ def vector_lsh_audit(cb: DataFrame, cap: int) -> DataFrame:
 def capped_bucket_self_join(f: DataFrame, id_col: str, cap: int) -> DataFrame:
     """Within-bucket pairs (id_a, v_a, id_b, v_b), id_a < id_b, of a
     (id, bucket, v) table through buckets.self_join. The table is
-    materialized first: the gate and both join branches read it, and its
+    materialized first: the gate and both join sides read it, and its
     upstream may be an expensive kernel (the multimodal decode behind
     asset features). The cap matters here: with n_bits=12 there are only
     4096 buckets, so one dense region at 10^9 vectors would put 10^5+ rows

@@ -18,18 +18,16 @@ within-bucket join quadratic in one task. Three defenses, in order:
    m² task, without betting on AQE skew-splitting a single join key.
    Exactly one replica matches each salted row: no pair repeats.
 
-`self_join` pairs rows within a bucket: cold buckets group and explode
-their C(n,2) pairs JVM-side in place (group memory bounded by
-HOT_BUCKET_MIN), hot ones take the salted join. `probe_join` joins probe
-rows to a build table whose sizes gate the join; the build side is salted,
-the probe side replicates, cold buckets join at salt 0. `new_vs_all` is
+Every bucket join has one shape. `probe_join` joins probe rows to a build
+table whose sizes gate the join: the build side is salted, the probe side
+replicates, cold buckets join at salt 0. `self_join` is probe_join of the
+table with itself, keeping the pairs with a.id < b.id. `new_vs_all` is
 its incremental form: new rows probe new + stored rows, and the orientation
 rule emits each pair once, in the round its later member arrives.
 
-Materialization is the caller's choice. The gate and every join branch
-read the table, and ReuseExchange does not fire across the differing
-branch shapes (measured 2x on the flagship), so a table behind a Python
-kernel (bands, SimHash blocks, decoded asset features) is cut once with
+Materialization is the caller's choice. The gate's count pass and both
+sides of the join read the table, so a table behind a Python kernel
+(bands, SimHash blocks, decoded asset features) is cut once with
 `materialize(..., eager=False)` — localCheckpoint, free of the plan-cache
 aliasing a persist() inside a library operator would create. A cheap JVM
 projection of materialized data (bands exploded from a signature cut) or a
@@ -139,45 +137,27 @@ def self_join(table: DataFrame, bucket_cols: list[str], id_col: str,
               payload_cols: list[str], cap: int,
               observation: Observation | None = None
               ) -> tuple[DataFrame, DataFrame]:
-    """(pairs, dropped): every pair of rows sharing an eligible bucket.
+    """(pairs, dropped): every pair of rows sharing an eligible bucket,
+    probe_join of the table with itself. Rows must be distinct per
+    (bucket, id, payload): a repeated row pairs once per copy.
 
     pairs:   (id_a, id_b, p_a, p_b for each payload column p) with
              id_a < id_b, once per shared bucket
     dropped: (*bucket_cols, bucket_size) of the over-cap buckets"""
-    eligible, dropped = gate(table, bucket_cols, cap, 2, observation)
-    rows = table.join(eligible, bucket_cols)
-    hot = F.col("bucket_size") >= HOT_BUCKET_MIN
-
-    def pair(a, b) -> list[Column]:
-        """The output columns from the two members' column getters."""
-        return [a(id_col).alias("id_a"), b(id_col).alias("id_b")] + [
-            g(p).alias(f"{p}_{s}") for p in payload_cols
-            for g, s in ((a, "a"), (b, "b"))
-        ]
-
-    # a bucket may hold several rows of one id (one per payload), so the
-    # cold path pairs by id order like the hot path, not by array position
-    ks = F.col("ks")
-    cold = (
-        rows.where(~hot).groupBy(*bucket_cols)
-        .agg(F.collect_set(F.struct(id_col, *payload_cols)).alias("ks"))
-        .select(F.explode(F.flatten(F.transform(ks, lambda x: F.transform(
-            F.filter(ks, lambda y: y[id_col] > x[id_col]),
-            lambda y: F.struct(*pair(x.getField, y.getField)),
-        )))).alias("p"))
-        .select("p.*")
-    )
-    hot_rows = rows.where(hot).select(*bucket_cols, id_col, *payload_cols)
-    hot_pairs = hot_rows.withColumn("salt", _salt(id_col)).alias("a").join(
-        hot_rows.withColumn("salt", F.explode(_replicas())).alias("b"),
-        on=_salted_on(bucket_cols)
-        + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
-    ).select(*pair(lambda c: F.col(f"a.{c}"), lambda c: F.col(f"b.{c}")))
-    return cold.unionByName(hot_pairs), dropped
+    rows = table.select(*bucket_cols, id_col, *payload_cols)
+    joined, dropped = probe_join(rows, rows, bucket_cols, id_col, cap, 2,
+                                 observation)
+    a, b = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    return joined.where(a < b).select(
+        a.alias("id_a"), b.alias("id_b"),
+        *[F.col(f"{s}.{p}").alias(f"{p}_{s}")
+          for p in payload_cols for s in ("a", "b")],
+    ), dropped
 
 
 def probe_join(probe: DataFrame, build: DataFrame, bucket_cols: list[str],
-               id_col: str, cap: int, floor: int
+               id_col: str, cap: int, floor: int,
+               observation: Observation | None = None
                ) -> tuple[DataFrame, DataFrame]:
     """(joined, dropped): probe rows joined to the build rows of their
     bucket, buckets gated on their build-side size.
@@ -186,8 +166,9 @@ def probe_join(probe: DataFrame, build: DataFrame, bucket_cols: list[str],
     is 2 when the probe rows are part of the build table (a lone row has
     nothing to pair with) and 1 for a separate query side. `joined` holds
     both sides' columns, the probe side aliased "a" and the build side
-    "b"; dropped is (*bucket_cols, bucket_size) of the over-cap buckets."""
-    eligible, dropped = gate(build, bucket_cols, cap, floor)
+    "b"; dropped is (*bucket_cols, bucket_size) of the over-cap buckets.
+    `observation` goes to the gate."""
+    eligible, dropped = gate(build, bucket_cols, cap, floor, observation)
     hot = F.col("bucket_size") >= HOT_BUCKET_MIN
     b = build.join(eligible, bucket_cols).withColumn(
         "salt", F.when(hot, _salt(id_col)).otherwise(F.lit(0)))

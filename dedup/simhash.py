@@ -48,7 +48,7 @@ def simhash_candidate_pairs(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     fingerprints) is dropped by the count pass.
     """
     n_blocks = cfg.simhash_max_hamming + 1
-    # the block table feeds the count pass and both join branches
+    # the block table feeds the count pass and both join sides
     blocks = materialize(simhash_blocks(sig_df, n_blocks), eager=False)
     pairs, _ = self_join(blocks, ["block_id", "block_val"], "doc_key",
                          ["simhash"], cfg.band_bucket_cap)

@@ -331,17 +331,13 @@ def ingest_stream(
         )
 
     q = (
-        keyed_writer(stream)
+        stream.writeStream.outputMode("append")
         .foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-
-
-def keyed_writer(stream: DataFrame):
-    return stream.writeStream.outputMode("append")
 
 
 def read_stream_verified_pairs(wh: Warehouse) -> DataFrame:

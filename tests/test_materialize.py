@@ -83,7 +83,32 @@ def test_materialize_strips_origin_stats(spark):
         f"checkpoint inherited a propagated estimate ({est} bytes) — the "
         "static planner will mis-broadcast kernel-output checkpoints"
     )
+    origin = int(out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    assert est > origin, (est, origin)
     assert m.count() == 5000
+
+
+def test_materialize_keeps_lineage_cut_partitioning(spark):
+    """The re-wrap builds the frame without the checkpoint's
+    outputPartitioning. Under AQE that loses nothing: a key-aligned
+    consumer of a key-partitioned table shuffles exactly as often after
+    materialize as after a plain localCheckpoint."""
+    from pyspark.sql import functions as F
+
+    from dedup.session import materialize
+
+    df = spark.range(200_000).select(
+        (F.col("id") % 1000).alias("k")).repartition(16, "k")
+
+    def key_exchanges(cut):
+        agg = cut.groupBy("k").count()
+        assert len(agg.collect()) == 1000
+        final = agg._jdf.queryExecution().executedPlan().toString()
+        return final.split("== Initial Plan ==")[0].count(
+            "Exchange hashpartitioning(k")
+
+    assert key_exchanges(df.localCheckpoint(eager=True)) == key_exchanges(
+        materialize(df, eager=True))
 
 
 def test_rewrap_fallback_warns_once(spark, monkeypatch):

@@ -415,9 +415,8 @@ class TestIncrementalSubstringPlans:
             assert "content" not in cols and "wins_a" in cols, cols
 
 
-# (Exchange, Generate) counts of the parent's hand-written joins on the
-# fixture corpus: the shared operator must plan them identically
-CANDIDATE_PAIRS_NODES = (9, 2)
+# (Exchange, Generate) counts of the two bucket joins on the fixture corpus
+CANDIDATE_PAIRS_NODES = (7, 1)
 STREAM_PAIRS_NODES = (10, 5)
 
 
@@ -429,9 +428,9 @@ def _node_counts(df) -> tuple[int, int]:
 
 class TestBucketJoinPlans:
     """The two benchmarked bucket joins, pinned by operator count: the
-    batch LSH self join and the stream epoch's new-vs-all probe join. The
-    pins are the counts the hand-written joins had before the shared
-    operator in dedup/buckets.py replaced them."""
+    batch LSH self join and the stream epoch's new-vs-all probe join, both
+    the one salted probe_join shape of dedup/buckets.py. A pin may be
+    tightened when a change removes operators, never loosened."""
 
     def test_candidate_pairs_plan_pinned(self, spark, corpus):
         from dedup.lsh import candidate_pairs
