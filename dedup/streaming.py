@@ -26,8 +26,10 @@ batch, not the corpus. The combined (old + new) bucket size gates every
 pair: a bucket that grows over the cap stops emitting NEW pairs; pairs
 emitted while it was under the cap are retained (a batch run over the
 final corpus would drop the whole bucket — documented divergence, see
-stream_clusters). Clustering folds the accumulated pair tables (cheap:
-pairs only).
+stream_clusters). Clustering folds the accumulated pair tables into the
+label table (stream_cluster_labels), which holds one row per doc and is
+overwritten once per stream_clusters call: the prior labels contract the
+pair graph, so union-find runs over pairs the new batch brought only.
 """
 
 from __future__ import annotations
@@ -37,6 +39,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from dedup.ann import cosine_verified
 from dedup.buckets import new_vs_all
@@ -78,11 +81,19 @@ SHA_REP_SCHEMA = "content_sha string, doc_key string, config_hash string"
 BAND_SCHEMA = ("doc_key string, band_id int, band_hash bigint, "
                "config_hash string")
 PAIR_SCHEMA = "key_a string, key_b string"
+VERIFIED_PAIR_SCHEMA = PAIR_SCHEMA + ", config_hash string"
 DOC_KEY_SCHEMA = "doc_key string"
-LABEL_SCHEMA = "doc_key string, cluster_id string, ver int"
+LABEL_SCHEMA = "doc_key string, cluster_id string"
 
 
-def _read_state(wh: Warehouse, name: str, schema: str,
+def _with_config_hash(schema: StructType) -> StructType:
+    """`schema` plus the config_hash column of a state table's rows."""
+    return StructType(
+        [*schema.fields, StructField("config_hash", StringType())]
+    )
+
+
+def _read_state(wh: Warehouse, name: str, schema: StructType | str,
                 cfg_hash: str) -> DataFrame | None:
     """This config's rows of a state table, or None before its first
     append. The file listing is taken here, so rows appended later in the
@@ -282,6 +293,7 @@ def ingest_stream(
                 # discipline as stream_exact_pairs).
                 wh.append(
                     verified_pairs(pairs, pair_sigs, cfg)
+                    .withColumn("config_hash", F.lit(cfg_hash))
                     .withColumn("epoch", epoch),
                     "stream_verified_pairs",
                 )
@@ -340,43 +352,19 @@ def ingest_stream(
     q.awaitTermination()
 
 
-def read_stream_verified_pairs(wh: Warehouse) -> DataFrame:
-    """Verified near-dup pairs accumulated by the incremental LSH rounds,
-    deduped on read (at-least-once appends, same discipline as
-    read_stream_exact_pairs)."""
+def read_stream_verified_pairs(wh: Warehouse, cfg: DedupConfig) -> DataFrame:
+    """Verified near-dup pairs the incremental LSH rounds accumulated under
+    `cfg`, deduped on read (at-least-once appends, same discipline as
+    read_stream_exact_pairs). Another config's pairs (a lower threshold,
+    other bands) never reach this config's labels."""
     return (
-        wh.read("stream_verified_pairs", PAIR_SCHEMA)
+        wh.read("stream_verified_pairs", VERIFIED_PAIR_SCHEMA)
+        .where(F.col("config_hash") == cfg.config_hash())
         .select("key_a", "key_b").distinct()
     )
 
 
 LABEL_TABLE = "stream_cluster_labels"
-# fold the label delta log back into one generation after this many appends:
-# bounds read-side reconciliation work while keeping per-call writes
-# proportional to the batch (full rewrites are 1-in-16, not 1-per-call)
-LABEL_COMPACT_EVERY = 16
-# manifest status of one appended label generation (see _label_generation)
-LABEL_DELTA = "delta"
-
-
-def _label_generation(wh: Warehouse, cfg_hash: str) -> int:
-    """The label log's newest generation, read from the manifest (no Spark
-    job). A full write is generation 0 and records `written`; each delta
-    append records LABEL_DELTA first, so the generation is the number of
-    delta entries since the table's last `written` entry."""
-    gen = 0
-    for e in wh.lineage(LABEL_TABLE, cfg_hash):
-        gen = 0 if e["status"] == "written" else gen + 1
-    return gen
-
-
-def _reconciled_labels(stored: DataFrame) -> DataFrame:
-    """Merge-on-read view of the label delta log: latest generation wins
-    per doc_key."""
-    return (
-        stored.groupBy("doc_key")
-        .agg(F.max_by("cluster_id", "ver").alias("cluster_id"))
-    )
 
 
 def _effective_edges(edges: DataFrame, prior: DataFrame) -> DataFrame:
@@ -410,29 +398,33 @@ def _effective_edges(edges: DataFrame, prior: DataFrame) -> DataFrame:
 def stream_clusters(spark: SparkSession, wh: Warehouse, cfg: DedupConfig
                     ) -> DataFrame:
     """(doc_key, cluster_id) over everything ingested so far — labels are
-    maintained INCREMENTALLY (VERDICT r3 #4): the previous call's label
-    table is persisted (stream_cluster_labels) and each call union-finds
-    only the QUOTIENT graph — edges not already folded into one cluster,
-    contracted to their prior labels — so per-call clustering work is
-    proportional to the new batch, not the accumulated pair history.
-    WRITE work is batch-proportional too (VERDICT r4 #2): the table is a
-    merge-on-read delta log — each call appends one generation, numbered
-    from the warehouse manifest (_label_generation), holding only
-    the labels that changed (new docs + merged components), readers take
-    latest-generation-wins per doc_key, and the log is folded into a single
-    overwrite every LABEL_COMPACT_EVERY calls. The label table is gated on
-    the config hash it was written under (ADVICE r4): a table left by a
-    different config is dropped and labels rebuild from the pair tables. The
+    maintained INCREMENTALLY (VERDICT r3 #4): the previous call's labels
+    persist in stream_cluster_labels, one row per doc, and each call
+    union-finds only the QUOTIENT graph — edges not already folded into one
+    cluster, contracted to their prior labels — so per-call clustering work
+    is proportional to the new batch, not the accumulated pair history. The
     contraction pass itself is one join of the pair tables against the
     label table (no fixpoint iterations over history). Labels equal a
     from-scratch union-find because prior labels are component minima:
     merging supernodes by min label yields the global component minimum.
+    Each call ends with one overwrite of the label table from the call's
+    eager label cut.
+
+    The prior labels are the table only when it is complete under THIS
+    config hash (ADVICE r4); otherwise — the first call, a table written
+    under another config, or one a crashed overwrite left without files —
+    the prior is empty and every label rebuilds from the pair tables, so a
+    stale table never seeds the quotient graph with merges this config
+    would not make. The verified pairs are read under this config hash
+    (read_stream_verified_pairs); the exact pairs need no gate, since sha
+    equality depends on no config field.
 
     Crash-safe without epoch bookkeeping (at-least-once appends make epoch
     watermarks unsound): already-folded edges contract to self-loops and
-    vanish, replayed rows are deduped on read, and a missing/partial label
-    row simply re-enters the quotient graph through its surviving edges,
-    so the maintenance is idempotent given the pair tables.
+    vanish, replayed rows are deduped on read, and a label row missing
+    from a partly written table simply re-enters the quotient graph
+    through its surviving edges, so the maintenance is idempotent given
+    the pair tables.
 
     Singletons are attached from the full ingested doc_key log
     (stream_doc_keys), so every ingested doc is labeled exactly like
@@ -453,82 +445,41 @@ def stream_clusters(spark: SparkSession, wh: Warehouse, cfg: DedupConfig
         # No non-empty batch was ever ingested (fresh/empty input dir):
         # return the same empty (doc_key, cluster_id) frame the batch path
         # yields on an empty corpus instead of raising on a missing table.
-        return local_frame(wh.spark, [], "doc_key string, cluster_id string")
+        return local_frame(wh.spark, [], LABEL_SCHEMA)
     # the pair tables that exist, or an empty seed when neither does
     edges = reduce(DataFrame.unionByName, [
-        read(wh) for name, read in (
-            ("stream_exact_pairs", read_stream_exact_pairs),
-            ("stream_verified_pairs", read_stream_verified_pairs),
+        read() for name, read in (
+            ("stream_exact_pairs", lambda: read_stream_exact_pairs(wh)),
+            ("stream_verified_pairs",
+             lambda: read_stream_verified_pairs(wh, cfg)),
         ) if wh.exists(name)
     ] or [local_frame(wh.spark, [], PAIR_SCHEMA)])
     members = wh.read("stream_doc_keys", DOC_KEY_SCHEMA).select(
         "doc_key").distinct()
     cfg_hash = cfg.config_hash()
-    have_prior = wh.exists(LABEL_TABLE)
-    if have_prior and not wh.is_complete(LABEL_TABLE, cfg_hash):
-        # a label table written under a DIFFERENT config (or surviving a
-        # pair-table reset) must not seed the quotient graph: folding it in
-        # would bake stale merges into every future label and silently
-        # break batch parity (ADVICE r4). Drop it and rebuild from the
-        # pair tables, which are themselves config-gated on read.
-        wh.drop(LABEL_TABLE)
-        have_prior = False
-    gen = _label_generation(wh, cfg_hash) if have_prior else 0
-    if have_prior:
-        stored = wh.read(LABEL_TABLE, LABEL_SCHEMA)
-        prior = _reconciled_labels(stored)
-        quotient = _effective_edges(edges, prior)
-        comp = connected_components(quotient)
-        # relabel prior members whose (super)label merged; keep the rest
-        remap = comp.select(
-            F.col("doc_key").alias("cluster_id"),
-            F.col("cluster_id").alias("new_label"),
-        )
-        relabeled = (
-            prior.join(remap, "cluster_id", "left")
-            .select(
-                "doc_key",
-                F.coalesce("new_label", "cluster_id").alias("cluster_id"),
-                F.coalesce(F.col("new_label") != F.col("cluster_id"),
-                           F.lit(False)).alias("changed"),
-            )
-        )
-        # nodes first seen in this quotient graph (new docs with edges)
-        fresh = comp.join(
-            prior.select("doc_key"), "doc_key", "left_anti"
-        ).withColumn("changed", F.lit(True))
-        # docs in no component and without a prior label are new singletons
-        labels = attach_singletons(
-            relabeled.unionByName(fresh), members
-        ).withColumn("changed", F.coalesce("changed", F.lit(True)))
-    else:
-        labels = attach_singletons(
-            connected_components(edges), members
-        ).withColumn("changed", F.lit(True))
-    # lineage cut before writing to the table the plan may be reading from
-    labels = materialize(
-        labels.select("doc_key", "cluster_id", "changed"), eager=True
+    prior = (wh.read(LABEL_TABLE, LABEL_SCHEMA)
+             if wh.is_complete(LABEL_TABLE, cfg_hash)
+             else local_frame(wh.spark, [], LABEL_SCHEMA))
+    comp = connected_components(_effective_edges(edges, prior))
+    # relabel prior members whose (super)label merged; keep the rest
+    remap = comp.select(
+        F.col("doc_key").alias("cluster_id"),
+        F.col("cluster_id").alias("new_label"),
     )
-    if not have_prior or gen + 1 >= LABEL_COMPACT_EVERY:
-        # first generation, or periodic compaction: fold the delta log into
-        # one overwrite (rare — 1 in LABEL_COMPACT_EVERY calls)
-        wh.write(labels.select("doc_key", "cluster_id")
-                 .withColumn("ver", F.lit(0)), LABEL_TABLE, cfg_hash)
-    else:
-        # changed-component upsert (VERDICT r4 #2): append ONLY rows whose
-        # label changed this call (new docs, or docs whose component
-        # merged) as the next delta generation — per-call write work is
-        # proportional to the batch, not the corpus. Readers reconcile via
-        # latest-generation-wins (_reconciled_labels); a crash mid-append
-        # leaves a partial generation whose missing labels re-enter the
-        # quotient graph through their persisted edges next call, the same
-        # idempotence argument as the pair tables. The generation number
-        # is recorded BEFORE the append: a crash between the two skips a
-        # number, never reuses one (_label_generation).
-        wh.record_lineage(LABEL_TABLE, cfg_hash, LABEL_DELTA)
-        wh.append(labels.where("changed").select("doc_key", "cluster_id")
-                  .withColumn("ver", F.lit(gen + 1)), LABEL_TABLE)
-    return labels.select("doc_key", "cluster_id")
+    relabeled = prior.join(remap, "cluster_id", "left").select(
+        "doc_key", F.coalesce("new_label", "cluster_id").alias("cluster_id")
+    )
+    # nodes first seen in this quotient graph (new docs with edges)
+    fresh = comp.join(prior.select("doc_key"), "doc_key", "left_anti")
+    # docs in no component and without a prior label are new singletons;
+    # the cut comes before the overwrite of the table the plan reads
+    labels = materialize(
+        attach_singletons(relabeled.unionByName(fresh), members)
+        .select("doc_key", "cluster_id"),
+        eager=True,
+    )
+    wh.write(labels, LABEL_TABLE, cfg_hash)
+    return labels
 
 
 def read_stream_exact_pairs(wh: Warehouse) -> DataFrame:
@@ -574,6 +525,8 @@ def stream_substring_pairs(
 
     Returns the ACCUMULATED deduped pair set (key_a, key_b, lcs_len)."""
     from dedup.suffix import (
+        FP_SCHEMA,
+        VERIFIED_SCHEMA,
         fingerprints,
         incremental_anchored_candidates,
         verified_substring_pairs,
@@ -582,67 +535,55 @@ def stream_substring_pairs(
     key_cols = key_cols or ["repo", "path", "commit"]
     cfg_hash = cfg.config_hash()
     t0 = time.time()
-    if not wh.exists(SHA_REP_TABLE):
-        return local_frame(
-            spark, [], "key_a string, key_b string, lcs_len int"
-        )
+    reps = _read_state(wh, SHA_REP_TABLE, SHA_REP_SCHEMA, cfg_hash)
+    if reps is None:
+        return local_frame(spark, [], VERIFIED_SCHEMA)
     keyed = with_doc_key(corpus, key_cols)
-    reps = (
-        wh.read(SHA_REP_TABLE, SHA_REP_SCHEMA)
-        .where(F.col("config_hash") == cfg_hash)
-        .select("doc_key")
-        .distinct()
-    )
-    work = keyed.join(reps, "doc_key", "left_semi")
+    work = keyed.join(reps.select("doc_key").distinct(), "doc_key",
+                      "left_semi")
     old_fps = None
-    if wh.exists(FP_TABLE):
-        stored = (
-            wh.read(FP_TABLE)
-            .where(F.col("config_hash") == cfg_hash)
-            .select("doc_key", "fp_hash", "fp_off")
-            # at-least-once appends dedupe on read, like the band table
-            .dropDuplicates(["doc_key", "fp_hash", "fp_off"])
-        )
+    stored = _read_state(wh, FP_TABLE, _with_config_hash(FP_SCHEMA),
+                         cfg_hash)
+    if stored is not None:
+        # at-least-once appends dedupe on read, like the band table
+        stored = stored.select("doc_key", "fp_hash", "fp_off").dropDuplicates()
         work = work.join(
             stored.select("doc_key").distinct(), "doc_key", "left_anti"
         )
-        # sentinel rows (fp_off = -1, below) mark processed docs with zero
-        # sampled fingerprints — they gate the work-list above but must
-        # never enter candidate generation
+        # marker rows (fp_off = -1, below) gate the work-list above but
+        # must never enter candidate generation
         old_fps = stored.where(F.col("fp_off") >= 0)
-    # eager: the fingerprint kernel output feeds the size pass, the join and
-    # the final append — localCheckpoint runs it exactly once
-    new_fps = materialize(fingerprints(work, cfg), eager=True)
+    # every new doc gets one marker row besides its fingerprints: a doc the
+    # kernel samples NO fingerprint from (shorter than the gram, or every
+    # window unsampled) still needs a row, or every later call re-reads and
+    # re-hashes its content forever — per-call work would silently become
+    # O(corpus), not O(new docs). The markers' observed count is the
+    # call's input count.
+    markers = work.select("doc_key").distinct().select(
+        "doc_key",
+        F.lit(0).cast("long").alias("fp_hash"),
+        F.lit(-1).cast("long").alias("fp_off"),
+    )
+    # eager: the cut feeds the size pass, the join and the final append —
+    # localCheckpoint runs the fingerprint kernel exactly once
+    seen = Observation()
+    cut = materialize(
+        fingerprints(work, cfg).unionByName(markers)
+        .observe(seen, F.count(F.when(F.col("fp_off") < 0, 1)).alias("docs")),
+        eager=True,
+    )
+    new_fps = cut.where(F.col("fp_off") >= 0)
     cand = incremental_anchored_candidates(new_fps, old_fps, cfg)
-    docs = keyed.select("doc_key", "content")
-    pairs = verified_substring_pairs(cand, docs, cfg)
-    n_new = work.select("doc_key").distinct().count()
-    # docs the kernel sampled NO fingerprints from (shorter than the gram,
-    # or every window unsampled) still need a row, or every later call
-    # re-reads and re-hashes their content forever — per-call work would
-    # silently become O(corpus), not O(new docs)
-    sentinels = (
-        work.select("doc_key")
-        .distinct()
-        .join(new_fps.select("doc_key").distinct(), "doc_key", "left_anti")
-        .select(
-            "doc_key",
-            F.lit(0).cast("long").alias("fp_hash"),
-            F.lit(-1).cast("long").alias("fp_off"),
-        )
+    pairs = verified_substring_pairs(
+        cand, keyed.select("doc_key", "content"), cfg
     )
     wh.append(
         pairs.withColumn("config_hash", F.lit(cfg_hash)), SUBSTR_TABLE
     )
-    wh.append(
-        new_fps.unionByName(sentinels).withColumn(
-            "config_hash", F.lit(cfg_hash)
-        ),
-        FP_TABLE,
-    )
+    wh.append(cut.withColumn("config_hash", F.lit(cfg_hash)), FP_TABLE)
     wh.record_metrics(
         "stream_substring", cfg_hash,
-        int((time.time() - t0) * 1000), rows_in=n_new,
+        int((time.time() - t0) * 1000), rows_in=seen.get["docs"],
     )
     return read_stream_substring_pairs(wh, cfg)
 
@@ -652,15 +593,14 @@ def read_stream_substring_pairs(wh: Warehouse, cfg: DedupConfig) -> DataFrame:
     round re-verifies the same pair with the same deterministic kernel, so
     max == the unique value; max also upgrades a pair first seen through a
     saturated window if a later replay measured deeper)."""
-    if not wh.exists(SUBSTR_TABLE):
-        return local_frame(
-            wh.spark, [], "key_a string, key_b string, lcs_len int"
-        )
-    return (
-        wh.read(SUBSTR_TABLE)
-        .where(F.col("config_hash") == cfg.config_hash())
-        .groupBy("key_a", "key_b")
-        .agg(F.max("lcs_len").alias("lcs_len"))
+    from dedup.suffix import VERIFIED_SCHEMA
+
+    stored = _read_state(wh, SUBSTR_TABLE, _with_config_hash(VERIFIED_SCHEMA),
+                         cfg.config_hash())
+    if stored is None:
+        return local_frame(wh.spark, [], VERIFIED_SCHEMA)
+    return stored.groupBy("key_a", "key_b").agg(
+        F.max("lcs_len").alias("lcs_len")
     )
 
 

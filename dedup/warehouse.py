@@ -108,14 +108,12 @@ class Warehouse:
         )
         self._save_manifest(m)
 
-    def lineage(self, stage: str, config_hash: str,
-                status: str | None = None) -> list[dict]:
+    def lineage(self, stage: str, config_hash: str, status: str) -> list[dict]:
         """Recorded lineage entries of one stage and config with the given
-        status (any status when None), oldest first (a manifest read: no
-        Spark job)."""
+        status, oldest first (a manifest read: no Spark job)."""
         return [e for e in self._load_manifest()["lineage"]
-                if (e["stage"], e["config_hash"]) == (stage, config_hash)
-                and status in (None, e["status"])]
+                if (e["stage"], e["config_hash"], e["status"])
+                == (stage, config_hash, status)]
 
     # -- tables --------------------------------------------------------------
     def _path(self, name: str) -> str:

@@ -21,6 +21,27 @@ from dedup.warehouse import Warehouse
 CFG = DedupConfig()
 
 
+def stored_labels(wh: Warehouse) -> dict:
+    """The stored label table as {doc_key: cluster_id}; asserts its
+    columns and that it holds one row per doc."""
+    from dedup.streaming import LABEL_TABLE
+
+    table = wh.read(LABEL_TABLE)
+    assert table.columns == ["doc_key", "cluster_id"], table.columns
+    rows = table.collect()
+    out = {r["doc_key"]: r["cluster_id"] for r in rows}
+    assert len(out) == len(rows), "the label table holds a doc twice"
+    return out
+
+
+def batch_labels(spark, pdf, cfg=CFG) -> dict:
+    """run_dedup's {doc_key: cluster_id} over the pandas corpus `pdf`."""
+    from dedup.pipeline import run_dedup
+
+    return {r["doc_key"]: r["cluster_id"]
+            for r in run_dedup(spark, spark.createDataFrame(pdf), cfg).collect()}
+
+
 class TestStreamingIngest:
     def test_incremental_ingest_matches_batch(self, spark, tmp_path):
         """Two arrival rounds through the stream == one batch run: same
@@ -297,7 +318,7 @@ class TestStreamingIngest:
         assert wh.exists(LABEL_TABLE), "label table must persist"
         n_edges_r1 = read_stream_exact_pairs(wh).count()
         if wh.exists("stream_verified_pairs"):
-            n_edges_r1 += read_stream_verified_pairs(wh).count()
+            n_edges_r1 += read_stream_verified_pairs(wh, CFG).count()
 
         spark.createDataFrame(pdf.iloc[half:]).coalesce(1).write.mode(
             "append"
@@ -309,7 +330,7 @@ class TestStreamingIngest:
         # by the edges the new batch introduced — not the accumulated total
         edges = read_stream_exact_pairs(wh)
         if wh.exists("stream_verified_pairs"):
-            edges = edges.unionByName(read_stream_verified_pairs(wh))
+            edges = edges.unionByName(read_stream_verified_pairs(wh, CFG))
         prior = wh.read(LABEL_TABLE).select("doc_key", "cluster_id").distinct()
         n_total = edges.count()
         n_quotient = _effective_edges(edges, prior).count()
@@ -335,70 +356,11 @@ class TestStreamingIngest:
         }
         assert again == want
 
-    def test_label_delta_write_proportional_to_batch(self, spark, tmp_path):
-        """VERDICT r4 #2: stream_clusters must not rewrite the whole label
-        table per call — it appends a delta generation containing ONLY the
-        labels that changed this call (new docs + merged components), so
-        per-call WRITE work is proportional to the batch, not the corpus.
-        Readers reconcile latest-generation-wins and still match batch."""
-        from dedup.pipeline import run_dedup
-        from dedup.streaming import LABEL_TABLE, stream_clusters
-
-        pdf1, _ = make_corpus(n_base=40, seed=91)
-        pdf2, _ = make_corpus(n_base=8, seed=777)
-        pdf2 = pdf2.copy()
-        pdf2["path"] = "b2/" + pdf2["path"]
-        in_dir = str(tmp_path / "in_delta")
-        os.makedirs(in_dir)
-        wh = Warehouse(spark, str(tmp_path / "wh_delta"))
-        ckpt = str(tmp_path / "ck_delta")
-
-        spark.createDataFrame(pdf1).coalesce(1).write.mode("append").parquet(in_dir)
-        ingest_stream(spark, in_dir, wh, CFG, ckpt)
-        stream_clusters(spark, wh, CFG)
-        stored1 = wh.read(LABEL_TABLE)
-        assert "ver" in stored1.columns
-        n_gen0 = stored1.count()
-
-        spark.createDataFrame(pdf2).coalesce(1).write.mode("append").parquet(in_dir)
-        ingest_stream(spark, in_dir, wh, CFG, ckpt)
-        labels2 = stream_clusters(spark, wh, CFG)
-
-        stored2 = wh.read(LABEL_TABLE)
-        max_ver = stored2.agg(F.max("ver")).collect()[0][0]
-        assert max_ver == 1, "second call must append a new delta generation"
-        delta_keys = {
-            r["doc_key"] for r in
-            stored2.where(F.col("ver") == max_ver).select("doc_key").collect()
-        }
-        batch2_keys = {
-            r["doc_key"]
-            for r in key_docs(spark.createDataFrame(pdf2))
-            .select("doc_key").collect()
-        }
-        # the delta is the new docs plus the handful of batch-1 docs whose
-        # component merged across batches (e.g. the shared empty file) —
-        # NEVER a rewrite of generation 0
-        assert batch2_keys <= delta_keys, "new docs missing from the delta"
-        n_merged = len(delta_keys - batch2_keys)
-        assert n_merged <= 3, (
-            f"delta rewrote {n_merged} unrelated gen-0 rows (gen0={n_gen0})"
-        )
-
-        # reconciled labels still equal a batch run over the full corpus
-        full = pd.concat([pdf1, pdf2], ignore_index=True)
-        got = {r["doc_key"]: r["cluster_id"] for r in labels2.collect()}
-        want = {
-            r["doc_key"]: r["cluster_id"]
-            for r in run_dedup(spark, spark.createDataFrame(full), CFG).collect()
-        }
-        assert got == want
-
     def test_stale_config_label_table_dropped(self, spark, tmp_path):
         """ADVICE r4: a label table persisted under a DIFFERENT config hash
         must not seed the quotient graph — stale merges would bake into all
-        future labels. stream_clusters drops it and rebuilds from the pair
-        tables."""
+        future labels. stream_clusters rebuilds the labels from the pair
+        tables and overwrites the stale table."""
         from dedup.pipeline import run_dedup
         from dedup.streaming import LABEL_TABLE, stream_clusters
 
@@ -414,7 +376,6 @@ class TestStreamingIngest:
         keyed = key_docs(spark.createDataFrame(pdf))
         fake = keyed.select(
             "doc_key", F.lit("0" * 64).alias("cluster_id"),
-            F.lit(0).alias("ver"),
         )
         wh.write(fake, LABEL_TABLE, "deadbeefdeadbeef")
 
@@ -427,6 +388,40 @@ class TestStreamingIngest:
             for r in run_dedup(spark, spark.createDataFrame(pdf), CFG).collect()
         }
         assert got == want, "stale-config label table leaked into labels"
+        # the call's overwrite replaced the stale table: it is complete
+        # under the current config and holds exactly the returned labels
+        assert wh.is_complete(LABEL_TABLE, CFG.config_hash())
+        assert stored_labels(wh) == got
+
+    def test_verified_pairs_gated_by_config(self, spark, tmp_path):
+        """Verified pairs carry the config hash they were verified under,
+        and stream_clusters folds only its own config's: a warehouse first
+        streamed under CFG, then under a stricter threshold (its own
+        stream checkpoint), labels like run_dedup under the stricter
+        config — CFG's looser merges never leak into its labels."""
+        from dedup.streaming import stream_clusters
+
+        strict = DedupConfig(jaccard_threshold=0.95)
+        pdf, _ = make_corpus(n_base=30, seed=91)
+        want = batch_labels(spark, pdf, strict)
+        assert want != batch_labels(spark, pdf), (
+            "the fixture needs pairs the two thresholds verify differently"
+        )
+        in_dir = str(tmp_path / "in_gate")
+        os.makedirs(in_dir)
+        wh = Warehouse(spark, str(tmp_path / "wh_gate"))
+        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(
+            in_dir
+        )
+        ingest_stream(spark, in_dir, wh, CFG, str(tmp_path / "ck_cfg"))
+        stream_clusters(spark, wh, CFG)
+        ingest_stream(spark, in_dir, wh, strict, str(tmp_path / "ck_strict"))
+
+        got = {
+            r["doc_key"]: r["cluster_id"]
+            for r in stream_clusters(spark, wh, strict).collect()
+        }
+        assert got == want, "another config's verified pairs leaked"
 
     def test_stream_clusters_empty_warehouse(self, spark, tmp_path):
         """ADVICE r3: stream_clusters on a warehouse where no non-empty
@@ -513,60 +508,16 @@ class TestStreamingIngest:
         )
 
 
-class TestUpgradePaths:
-    """State maintained across many calls stays bounded: the label delta
-    log folds back into one generation."""
-
-    def test_label_log_compacts_periodically(self, spark, tmp_path, monkeypatch):
-        """Every LABEL_COMPACT_EVERY calls the delta log folds back into a
-        single generation-0 overwrite, bounding read-side reconciliation
-        work; labels still match a batch run afterwards."""
-        import dedup.streaming as streaming
-        from dedup.pipeline import run_dedup
-        from dedup.streaming import LABEL_TABLE, stream_clusters
-
-        monkeypatch.setattr(streaming, "LABEL_COMPACT_EVERY", 2)
-        in_dir = str(tmp_path / "in_cmp")
-        os.makedirs(in_dir)
-        wh = Warehouse(spark, str(tmp_path / "wh_cmp"))
-        ckpt = str(tmp_path / "ck_cmp")
-
-        frames = []
-        for i, seed in enumerate((41, 42, 43)):
-            pdf, _ = make_corpus(n_base=10, seed=seed)
-            pdf = pdf.copy()
-            pdf["path"] = f"b{i}/" + pdf["path"]
-            frames.append(pdf)
-            spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(
-                in_dir
-            )
-            ingest_stream(spark, in_dir, wh, CFG, ckpt)
-            labels = stream_clusters(spark, wh, CFG)
-
-        # call 1 wrote gen 0, call 2 appended gen 1, call 3 compacted
-        stored = wh.read(LABEL_TABLE)
-        assert stored.agg(F.max("ver")).collect()[0][0] == 0
-        n_docs = stored.select("doc_key").distinct().count()
-        assert stored.count() == n_docs, "compaction left duplicate doc rows"
-
-        full = pd.concat(frames, ignore_index=True)
-        got = {r["doc_key"]: r["cluster_id"] for r in labels.collect()}
-        want = {
-            r["doc_key"]: r["cluster_id"]
-            for r in run_dedup(spark, spark.createDataFrame(full), CFG).collect()
-        }
-        assert got == want
-
-    def test_crashed_delta_append_never_reuses_a_generation(
+class TestLabelCrash:
+    def test_half_written_label_overwrite_still_matches_batch(
         self, spark, tmp_path, monkeypatch
     ):
-        """The delta generation is taken from the manifest and recorded
-        before the append. A call whose append lands its rows and then
-        raises has spent its number: the next call appends under a new
-        one, so no two calls' rows share a `ver` (a shared one would let
-        the stale rows win latest-generation-wins reconciliation), and its
-        labels still equal a batch run."""
-        from dedup.pipeline import run_dedup
+        """A stream_clusters call whose label overwrite lands only half
+        its rows and then raises leaves a partial table the manifest still
+        calls complete (the previous call's entry). The labels it lost
+        re-enter the quotient graph through their persisted edges, so the
+        next call — after a further batch — still equals run_dedup, and
+        its overwrite leaves one row per doc."""
         from dedup.streaming import LABEL_TABLE, stream_clusters
 
         in_dir = str(tmp_path / "in_crash")
@@ -574,14 +525,12 @@ class TestUpgradePaths:
         wh = Warehouse(spark, str(tmp_path / "wh_crash"))
         ckpt = str(tmp_path / "ck_crash")
 
-        def crash_after_label_append(df, name):
-            Warehouse.append(wh, df, name)
-            if name == LABEL_TABLE:
-                raise RuntimeError("crash after the delta append")
-
-        def vers():
-            return {r["ver"] for r in
-                    wh.read(LABEL_TABLE).select("ver").distinct().collect()}
+        def half_overwrite_then_crash(df, name, config_hash, mode="overwrite"):
+            if name != LABEL_TABLE:
+                return Warehouse.write(wh, df, name, config_hash, mode)
+            half = df.where(F.pmod(F.xxhash64("doc_key"), F.lit(2)) == 0)
+            half.write.mode("overwrite").parquet(wh._path(name))
+            raise RuntimeError("crash in the label overwrite")
 
         frames = []
         for i, seed in enumerate((51, 52, 53)):
@@ -595,37 +544,38 @@ class TestUpgradePaths:
             ingest_stream(spark, in_dir, wh, CFG, ckpt)
             if i == 1:
                 with monkeypatch.context() as m:
-                    m.setattr(wh, "append", crash_after_label_append)
-                    with pytest.raises(RuntimeError, match="crash after"):
+                    m.setattr(wh, "write", half_overwrite_then_crash)
+                    with pytest.raises(RuntimeError, match="crash in the"):
                         stream_clusters(spark, wh, CFG)
-                assert vers() == {0, 1}, "the crashed call's rows must land"
+                n_docs = sum(len(f) for f in frames)
+                assert wh.is_complete(LABEL_TABLE, CFG.config_hash())
+                assert 0 < len(stored_labels(wh)) < n_docs, (
+                    "the crash must leave a partial label table"
+                )
                 continue
-            before = vers() if i else set()
             labels = stream_clusters(spark, wh, CFG)
 
-        # the last call appended exactly one generation, and a new number
-        assert vers() - before == {2}, (before, vers())
-
-        full = pd.concat(frames, ignore_index=True)
         got = {r["doc_key"]: r["cluster_id"] for r in labels.collect()}
-        want = {
-            r["doc_key"]: r["cluster_id"]
-            for r in run_dedup(spark, spark.createDataFrame(full), CFG).collect()
-        }
-        assert got == want
+        assert got == batch_labels(spark, pd.concat(frames, ignore_index=True))
+        assert stored_labels(wh) == got
 
 
 # Spark jobs of one ingest_stream epoch on a prior state, and of the
 # stream_clusters call after it, on the fixture below (AQE stage jobs
-# included; AQE can vary identical runs by a job or two). Over six runs on
-# a 4-core host the epoch took 30 jobs and stream_clusters 15. The layout
-# that built the edge seed and the driver union-find's labels from Python
-# lists (PythonRDDs) and read the label generation with a max(ver) collect
-# took 30 and 19-20; the one that re-ran the micro-batch per consumer and
-# decoded the checkpoint three times took 63-64 and 27-28. The pins add
-# two jobs of headroom to the highest count seen.
+# included; AQE can vary identical runs by a job or two). Over four runs on
+# a 4-core host the epoch took 30 jobs and stream_clusters 12. The label
+# layout that appended a delta generation per call and reconciled it on
+# read took 15; the one that also built the edge seed and the driver
+# union-find's labels from Python lists (PythonRDDs) and read the label
+# generation with a max(ver) collect took 19-20; the one that re-ran the
+# micro-batch per consumer and decoded the checkpoint three times took
+# 63-64 and 27-28. A stream_substring_pairs round over a prior state took
+# 21 jobs over four runs (36 when it inferred each state table's schema
+# from Parquet footers and counted its new docs in a job of its own). The
+# pins add two jobs of headroom to the highest count seen.
 MAX_EPOCH_JOBS = 32
-MAX_CLUSTER_JOBS = 17
+MAX_CLUSTER_JOBS = 14
+MAX_SUBSTRING_JOBS = 23
 
 
 class TestStreamingJobs:
@@ -676,27 +626,12 @@ class TestStreamingSoak:
         self, spark, tmp_path
     ):
         """VERDICT r5 #8 long-horizon soak: 50 AvailableNow ingest +
-        stream_clusters rounds. Invariants over the WHOLE horizon:
-
-        1. WRITE work per call == exactly the changed-label set (new docs +
-           docs a cross-batch merge relabels — doc_key is a sha, so a merge
-           can legitimately move a component minimum and relabel members),
-           NEVER a rewrite of unchanged rows. Checked against independent
-           per-call label snapshots.
-        2. Cumulative appended rows stay a small multiple of the corpus —
-           the full-table-rewrite-per-call pathology would be ~25x here.
-        3. READ amplification: the stored generation number never reaches
-           LABEL_COMPACT_EVERY (the periodic fold keeps reconciliation
-           bounded by policy), and right after a compaction the log is
-           exactly one generation with one row per doc.
-        4. Final labels ≡ a from-scratch batch run_dedup over all 50
-           batches (the incremental path never drifts)."""
-        from dedup.pipeline import run_dedup
-        from dedup.streaming import (
-            LABEL_COMPACT_EVERY,
-            LABEL_TABLE,
-            stream_clusters,
-        )
+        stream_clusters rounds. After EVERY call the label table holds
+        exactly one row per labeled doc and equals the returned labels (the
+        stored state never grows past the corpus), and at the horizon's
+        end the labels ≡ a from-scratch batch run_dedup over all 50
+        batches (the incremental path never drifts)."""
+        from dedup.streaming import stream_clusters
 
         in_dir = str(tmp_path / "in_soak")
         os.makedirs(in_dir)
@@ -704,10 +639,6 @@ class TestStreamingSoak:
         ckpt = str(tmp_path / "ck_soak")
 
         frames = []
-        prev_rows = 0
-        prev_snapshot: dict = {}
-        total_appended = 0
-        compactions = 0
         for i in range(50):
             pdf, _ = make_corpus(n_base=3, seed=1000 + i)
             pdf = pdf.copy()
@@ -717,63 +648,18 @@ class TestStreamingSoak:
                 in_dir
             )
             ingest_stream(spark, in_dir, wh, CFG, ckpt)
-            labels = stream_clusters(spark, wh, CFG)
-            snapshot = {
-                r["doc_key"]: r["cluster_id"] for r in labels.collect()
+            labels = {
+                r["doc_key"]: r["cluster_id"]
+                for r in stream_clusters(spark, wh, CFG).collect()
             }
-
-            stored = wh.read(LABEL_TABLE)
-            agg = stored.agg(
-                F.count("*").alias("rows"), F.max("ver").alias("max_ver")
-            ).collect()[0]
-            n_total_docs = sum(len(f) for f in frames)
-
-            # (3) generations bounded by the compaction policy, always
-            assert agg["max_ver"] < LABEL_COMPACT_EVERY, (
-                f"call {i}: delta log reached gen {agg['max_ver']}"
+            assert stored_labels(wh) == labels, (
+                f"call {i}: the label table differs from the returned labels"
             )
-            if agg["max_ver"] == 0:
-                # just compacted (or first call): exactly one row per doc
-                compactions += 1
-                assert agg["rows"] == len(snapshot), (
-                    f"call {i}: compacted log has {agg['rows']} rows for "
-                    f"{len(snapshot)} labeled docs"
-                )
-            else:
-                # (1) the append == exactly the labels that changed
-                changed = {
-                    k for k, v in snapshot.items()
-                    if prev_snapshot.get(k) != v
-                }
-                wrote = agg["rows"] - prev_rows
-                total_appended += wrote
-                assert wrote == len(changed), (
-                    f"call {i}: delta wrote {wrote} rows but "
-                    f"{len(changed)} labels changed"
-                )
-            prev_rows = agg["rows"]
-            prev_snapshot = snapshot
 
-        n_total_docs = sum(len(f) for f in frames)
-        assert compactions >= 50 // LABEL_COMPACT_EVERY, (
-            f"only {compactions} compactions in 50 calls"
-        )
-        # (2) amortized write amplification stays small: a rewrite-per-call
-        # pathology would append ~25x the corpus; merge-relabel churn on the
-        # sha-keyed minima stays well under 2x
-        assert total_appended <= 2 * n_total_docs, (
-            f"appended {total_appended} delta rows for a "
-            f"{n_total_docs}-doc corpus"
-        )
-
-        # (4) horizon-end parity with the batch pipeline
         full = pd.concat(frames, ignore_index=True)
-        got = prev_snapshot
-        want = {
-            r["doc_key"]: r["cluster_id"]
-            for r in run_dedup(spark, spark.createDataFrame(full), CFG).collect()
-        }
-        assert got == want, "50-batch incremental labels diverge from batch"
+        assert labels == batch_labels(spark, full), (
+            "50-batch incremental labels diverge from batch"
+        )
 
 
 class TestStreamingSubstring:
@@ -869,6 +755,47 @@ class TestStreamingSubstring:
         assert sha_pairs(
             read_stream_substring_pairs(wh, CFG).collect(), sha_of
         ) == want
+
+
+    def test_jobs_per_substring_round_pinned(
+        self, spark, tmp_path, count_jobs
+    ):
+        """A stream_substring_pairs round over a prior state runs at most
+        MAX_SUBSTRING_JOBS Spark jobs, and its metrics row counts the new
+        docs it fingerprinted (each processed doc is one stored doc_key)."""
+        from dedup.streaming import FP_TABLE, stream_substring_pairs
+
+        pdf, _ = make_corpus(n_base=40, seed=55)
+        pdf = pdf.sample(frac=1.0, random_state=9).reset_index(drop=True)
+        in_dir = str(tmp_path / "in_sub_jobs")
+        os.makedirs(in_dir)
+        wh = Warehouse(spark, str(tmp_path / "wh_sub_jobs"))
+        ckpt = str(tmp_path / "ck_sub_jobs")
+
+        def fp_docs():
+            return wh.read(FP_TABLE).select("doc_key").distinct().count()
+
+        spark.createDataFrame(pdf.iloc[:-10]).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        ingest_stream(spark, in_dir, wh, CFG, ckpt)
+        stream_substring_pairs(spark, wh, CFG, spark.read.parquet(in_dir))
+        n_before = fp_docs()
+
+        spark.createDataFrame(pdf.iloc[-10:]).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        ingest_stream(spark, in_dir, wh, CFG, ckpt)
+        corpus = spark.read.parquet(in_dir)
+        _, jobs = count_jobs(
+            lambda: stream_substring_pairs(spark, wh, CFG, corpus))
+
+        rows_in = (
+            wh.metrics().where(F.col("stage") == "stream_substring")
+            .orderBy(F.col("created_at").desc()).first()["rows_in"]
+        )
+        assert 0 < rows_in == fp_docs() - n_before
+        assert jobs <= MAX_SUBSTRING_JOBS, jobs
 
 
 class TestStreamingAssets:
