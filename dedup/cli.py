@@ -13,8 +13,10 @@ With --stream, the input directory is consumed through Structured Streaming
 (AvailableNow) with INCREMENTAL LSH candidate maintenance: re-invoking after
 new corpus files land ingests only the new documents, bands only the new
 signatures, and pairs them against the accumulated band state — per-run work
-scales with the new data, and clusters are rebuilt from the accumulated pair
-tables.
+scales with the new data. Each micro-batch commits its state in one write
+to the `stream_epochs` table, so a killed run replays its last micro-batch
+and overwrites whatever that batch left; clusters are then updated from the
+accumulated pairs.
 """
 
 from __future__ import annotations

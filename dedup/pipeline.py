@@ -541,14 +541,13 @@ def read_signature_checkpoint(wh: Warehouse, cfg: DedupConfig,
 def signatures_with_resume(
     rep_docs: DataFrame, cfg: DedupConfig, wh: Warehouse | None,
     table: str = "checkpoint_signatures",
-    restrict_to_input: bool = True,
     observation: Observation | None = None,
-    signed_keys: DataFrame | None = None,
-    recover: bool = True,
 ) -> DataFrame:
     """Compute signatures for rep_docs, resuming from checkpointed
     SignatureBlocks: already-checkpointed doc_keys are anti-joined away and
-    only the remainder is computed (mid-stage resume, north rule).
+    only the remainder is computed (mid-stage resume, north rule). Batch
+    runs only; a stream epoch commits its blocks with the rest of its
+    state (streaming.ingest_stream).
 
     Scan discipline (VERDICT r1 fix #6), one code path for fresh and
     resumed runs: the kernel runs exactly once, into an eager lineage cut
@@ -558,58 +557,32 @@ def signatures_with_resume(
     cut's own action (`observation`, filled by the time this returns when
     `wh` is given: "signed" = rows signed and appended, "rows" = rows in
     the cut), so no count job runs, and an empty remainder skips the
-    append. The lineage entry for an append is recorded before the append,
-    so the lineage total of signed rows never falls short of what the
-    checkpoint holds.
+    append.
 
     When a checkpoint exists its blocks are decoded with their bands
-    recomputed, so they band through the JVM like fresh rows. Batch runs
-    (restrict_to_input) put the prior rows whose doc_key is still in the
-    input into the same cut — the anti-join and this semi-join read the
-    decoded blocks through one shared exchange — so STALE checkpoint
-    signatures (docs renamed/removed since the previous run) never reach
-    the result and a phantom doc can never bridge two live docs into one
-    cluster (ADVICE r1).
-
-    Streaming epochs pass restrict_to_input=False and get a one-cut epoch:
-    the result is the cut alone — this epoch's new signatures plus any
-    checkpointed rows whose keys are missing from `signed_keys` (the doc
-    keys the caller already accounts for; the stream passes its band
-    table's keys). rep_docs are anti-joined against `signed_keys` and those
-    leftover rows, so nothing is signed twice. `recover=False` states that
-    the checkpoint holds no row outside `signed_keys`: the blocks are then
-    not decoded at all, and the epoch costs work in proportion to the
-    micro-batch. With recover=True and no `signed_keys`, every checkpointed
-    row is a leftover, so the cut carries the whole accumulated state.
+    recomputed, so they band through the JVM like fresh rows. The prior
+    rows whose doc_key is still in the input join the same cut — the
+    anti-join and this semi-join read the decoded blocks through one shared
+    exchange — so STALE checkpoint signatures (docs renamed/removed since
+    the previous run) never reach the result and a phantom doc can never
+    bridge two live docs into one cluster (ADVICE r1).
     """
     if wh is None:
         return compute_signatures(rep_docs, cfg)
-    cfg_hash = cfg.config_hash()
-    prior = kept = None
-    if wh.exists(table) and (restrict_to_input or recover):
+    todo, kept = rep_docs, None
+    if wh.exists(table):
         prior = read_signature_checkpoint(wh, cfg, table)
-    todo = rep_docs
-    if restrict_to_input:
-        if prior is not None:
-            # the anti-join is a left join + null filter so that it and the
-            # semi-join below read the decoded blocks through one exchange;
-            # the semi-join is an inner join so the kept columns stay
-            # non-nullable like the kernel's (nullable ones cost the
-            # fixture's downstream plan about three more Spark jobs)
-            packed = prior.select("doc_key",
-                                  F.struct(*prior.columns).alias("_prior"))
-            todo = (rep_docs.join(packed, "doc_key", "left")
-                    .where(F.col("_prior").isNull()).drop("_prior"))
-            kept = (rep_docs.select("doc_key").join(packed, "doc_key")
-                    .select("_prior.*"))
-    else:
-        if signed_keys is not None:
-            todo = todo.join(signed_keys, "doc_key", "left_anti")
-        if prior is not None:
-            kept = prior
-            if signed_keys is not None:
-                kept = kept.join(signed_keys, "doc_key", "left_anti")
-            todo = todo.join(kept.select("doc_key"), "doc_key", "left_anti")
+        # the anti-join is a left join + null filter so that it and the
+        # semi-join below read the decoded blocks through one exchange;
+        # the semi-join is an inner join so the kept columns stay
+        # non-nullable like the kernel's (nullable ones cost the
+        # fixture's downstream plan about three more Spark jobs)
+        packed = prior.select("doc_key",
+                              F.struct(*prior.columns).alias("_prior"))
+        todo = (rep_docs.join(packed, "doc_key", "left")
+                .where(F.col("_prior").isNull()).drop("_prior"))
+        kept = (rep_docs.select("doc_key").join(packed, "doc_key")
+                .select("_prior.*"))
     sigs = compute_signatures(todo, cfg).withColumn("_new", F.lit(True))
     if kept is not None:
         sigs = sigs.unionByName(kept.withColumn("_new", F.lit(False)))
@@ -621,7 +594,8 @@ def signatures_with_resume(
     )
     signed = obs.get["signed"]
     if signed > 0:
-        wh.record_lineage(SIG_STAGE, cfg_hash, "appended", signed, table)
+        wh.record_lineage(SIG_STAGE, cfg.config_hash(), "appended", signed,
+                          table)
         # header-only rows from empty partitions are valid but add nothing
         wh.append(
             signature_blocks(out.where("_new").drop("bands", "_new"), cfg)

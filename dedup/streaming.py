@@ -2,17 +2,28 @@
 
 The batch pipeline's sketch state is mergeable (update/merge associative,
 SURVEY §2.1 #2-3), so incremental ingest is just: for every micro-batch,
-fold exact dups, compute signatures for doc_keys not already signed, and
-append the per-partition SignatureBlock rows. A late or replayed file cannot
-corrupt state — recomputed signatures are identical (deterministic kernels),
-and the resume anti-join against the already-signed keys stops a replayed
-doc from being signed twice.
+fold exact dups against the accumulated sha representatives, sign the new
+representatives, band them, verify their candidate pairs, and commit all
+of it as ONE unit.
+
+That unit is one write per epoch. Everything the epoch produces —
+SignatureBlock rows, verified pairs, exact pairs, doc keys, bands, sha-reps
+and the epoch's metrics row — is one frame tagged by a `kind` column,
+written to the `stream_epochs` table partitioned by (config_hash, kind,
+run, epoch) with a dynamic partition overwrite. `run` is the streaming
+query id (stored in the stream checkpoint) and `epoch` the foreachBatch id,
+so a replayed epoch — after a crash anywhere, a half-landed write included
+— replaces exactly its own partitions, and its reads of prior state skip
+exactly that (run, epoch): the replay computes what its first attempt
+computed. The stream source replays, the sink is idempotent, and no
+ordering rule between writes is needed. A second query over the same
+warehouse (a fresh checkpoint) is a new run, so its epoch ids never collide
+with the first query's.
 
 Each epoch makes one pass over its micro-batch: the keyed, exact-folded
 batch is cut once (one eager `materialize`, whose observed row count is the
-epoch's input count) and every consumer reads that cut — the signature
-input and the exact-pair, doc-key and sha-rep appends. Each state table is
-read once per epoch with its known schema, so no read runs a Parquet
+epoch's input count) and every consumer reads that cut. The state is read
+once per epoch with its known schema, so no read runs a Parquet
 footer-inference job.
 
 `ingest_stream` uses a file source + foreachBatch + Trigger.AvailableNow, the
@@ -20,16 +31,16 @@ recommended incremental-batch pattern. LSH candidate generation is
 INCREMENTAL (VERDICT r2 #7): each round bands only its signature-kernel cut
 (the fused `bands`, a JVM posexplode), finds its new-vs-new and new-vs-old
 pairs through one capped+salted join against new + accumulated bands
-(buckets.new_vs_all, which the substring and vector lanes share), then
-appends the new bands — per-round pair-generation work scales with the
-batch, not the corpus. The combined (old + new) bucket size gates every
-pair: a bucket that grows over the cap stops emitting NEW pairs; pairs
-emitted while it was under the cap are retained (a batch run over the
-final corpus would drop the whole bucket — documented divergence, see
-stream_clusters). Clustering folds the accumulated pair tables into the
-label table (stream_cluster_labels), which holds one row per doc and is
-overwritten once per stream_clusters call: the prior labels contract the
-pair graph, so union-find runs over pairs the new batch brought only.
+(buckets.new_vs_all, which the substring and vector lanes share) — per-round
+pair-generation work scales with the batch, not the corpus. The combined
+(old + new) bucket size gates every pair: a bucket that grows over the cap
+stops emitting NEW pairs; pairs emitted while it was under the cap are
+retained (a batch run over the final corpus would drop the whole bucket —
+documented divergence, see stream_clusters). Clustering folds the
+accumulated pairs into the label table (stream_cluster_labels), which holds
+one row per doc and is overwritten once per stream_clusters call: the prior
+labels contract the pair graph, so union-find runs over pairs the new batch
+brought only.
 """
 
 from __future__ import annotations
@@ -44,45 +55,53 @@ from pyspark.sql.types import StringType, StructField, StructType
 from dedup.ann import cosine_verified
 from dedup.buckets import new_vs_all
 from dedup.config import DedupConfig
-# candidate_pairs and exact_stage stay module attributes here although the
-# stream no longer calls them: perfbench/trace.py wraps them by name
+# candidate_pairs, exact_stage and signatures_with_resume stay module
+# attributes here although the stream no longer calls them:
+# perfbench/trace.py wraps them by name
 from dedup.lsh import BAND_COLS, candidate_pairs  # noqa: F401
-from dedup.minhash import compute_bands, with_doc_key
+from dedup.minhash import compute_bands, compute_signatures, with_doc_key
 from dedup.pipeline import (  # noqa: F401
-    SIG_STAGE,
+    decode_signature_blocks,
     exact_stage,
-    read_signature_checkpoint,
+    signature_blocks,
     signature_input,
     signatures_with_resume,
 )
 from dedup.session import local_frame, materialize
 from dedup.verify import verified_pairs
-from dedup.warehouse import Warehouse
+from dedup.warehouse import METRICS_SCHEMA, Warehouse, metrics_row
 
 CORPUS_SCHEMA = (
     "repo string, path string, commit string, lang string, content string"
 )
 
-BAND_TABLE = "checkpoint_bands"
-# accumulated (content_sha -> representative doc_key), one append per batch:
-# the cross-batch exact fold joins against THIS table, not the signature
-# checkpoint, because docs below min_content_len never reach the signature
-# stage yet must still fold verbatim copies across batches (an empty file
-# arriving in two batches is still one exact-dup pair — batch parity)
-SHA_REP_TABLE = "stream_sha_reps"
+EPOCH_TABLE = "stream_epochs"
+EPOCH_PARTS = ["config_hash", "kind", "run", "epoch"]
+# every column of the epoch table: each kind fills its own and leaves the
+# rest null. Reads name it, so no read runs a Parquet footer-inference job.
+#   sig_block  SignatureBlock rows (warehouse.CHECKPOINT_SCHEMA)
+#   verified   verified near-dup pairs (key_a, key_b)
+#   exact      exact-dup pairs (key_a, key_b)
+#   doc_key    every ingested doc, pre exact fold and length filter
+#   band       the band rows of the epoch's signed docs
+#   sha_rep    (content_sha, doc_key) of the representatives no earlier
+#              epoch held: the cross-epoch exact fold joins these, not the
+#              signatures, because docs below min_content_len never sign
+#              yet their verbatim copies must still fold (batch parity)
+#   metrics    the epoch's METRICS_SCHEMA row
+EPOCH_SCHEMA = (
+    "doc_key string, content_sha string, key_a string, key_b string, "
+    "band_id int, band_hash bigint, magic int, ver int, stage string, "
+    "part_id int, rows_used int, payload binary, n bigint, "
+    "created_at bigint, rows_in bigint, rows_out bigint, "
+    "dropped_candidates bigint, wall_ms bigint, "
+    "config_hash string, kind string, run string, epoch bigint"
+)
 # incremental substring pass state: accumulated per-doc sampled fingerprints
 # (the later-member work-list anchor) and the verified long-substring pairs
 FP_TABLE = "stream_fingerprints"
 SUBSTR_TABLE = "stream_substring_pairs"
 
-# the columns each state table is read by: a read with its schema runs no
-# Parquet footer-inference job
-SHA_REP_SCHEMA = "content_sha string, doc_key string, config_hash string"
-BAND_SCHEMA = ("doc_key string, band_id int, band_hash bigint, "
-               "config_hash string")
-PAIR_SCHEMA = "key_a string, key_b string"
-VERIFIED_PAIR_SCHEMA = PAIR_SCHEMA + ", config_hash string"
-DOC_KEY_SCHEMA = "doc_key string"
 LABEL_SCHEMA = "doc_key string, cluster_id string"
 
 
@@ -96,36 +115,49 @@ def _with_config_hash(schema: StructType) -> StructType:
 def _read_state(wh: Warehouse, name: str, schema: StructType | str,
                 cfg_hash: str) -> DataFrame | None:
     """This config's rows of a state table, or None before its first
-    append. The file listing is taken here, so rows appended later in the
-    epoch never reach the returned frame."""
+    append. The file listing is taken here, so rows appended later never
+    reach the returned frame."""
     if not wh.exists(name):
         return None
     return wh.read(name, schema).where(F.col("config_hash") == cfg_hash)
 
 
-def _fold_batch(keyed: DataFrame, prior_reps: DataFrame | None) -> DataFrame:
+def _epoch_rows(wh: Warehouse, cfg_hash: str, *kinds: str) -> DataFrame:
+    """This config's epoch-table rows of the given kinds (an empty frame
+    before the first epoch). The filters prune partitions, and the file
+    listing is taken here."""
+    if not wh.exists(EPOCH_TABLE):
+        return local_frame(wh.spark, [], EPOCH_SCHEMA)
+    return wh.read(EPOCH_TABLE, EPOCH_SCHEMA).where(
+        (F.col("config_hash") == cfg_hash) & F.col("kind").isin(*kinds)
+    )
+
+
+def _fold_batch(keyed: DataFrame, prior_reps: DataFrame) -> DataFrame:
     """One row per micro-batch doc: (doc_key, content_sha, content,
     new_rep, partner).
 
     The representative of a sha is its minimum doc_key in the batch. Across
     batches (ADVICE r1) a verbatim copy of an EARLIER doc must fold into an
     exact pair against the prior representative instead of being re-signed,
-    so the fold joins the accumulated sha-rep table — not the signature
-    checkpoint: short/empty docs never sign, but their verbatim copies
+    so the fold joins the accumulated sha-rep rows — not the signature
+    blocks: short/empty docs never sign, but their verbatim copies
     across batches are still exact dups exactly as the batch pipeline sees
-    them. `new_rep` marks representatives whose sha no earlier batch holds:
-    they are this batch's sha reps and the only rows that may be signed, so
+    them. `new_rep` marks representatives whose sha no earlier epoch holds:
+    they are this batch's sha reps and the only rows that are signed, so
     `content` is kept on those rows only. `partner` is the key a doc forms
     an exact pair with — its batch representative, or for a representative
     the prior one — and null when there is none."""
-    reps = keyed.groupBy("content_sha").agg(F.min("doc_key").alias("rep_key"))
-    if prior_reps is None:
-        reps = reps.withColumn("prior_key", F.lit(None).cast("string"))
-    else:
-        prior = prior_reps.groupBy("content_sha").agg(
-            F.min("doc_key").alias("prior_key")
-        )
-        reps = reps.join(prior, "content_sha", "left")
+    # one aggregate over batch + prior rows finds both keys of a sha
+    in_batch = F.col("in_batch")
+    reps = (
+        keyed.select("content_sha", "doc_key", F.lit(True).alias("in_batch"))
+        .unionByName(prior_reps.select("content_sha", "doc_key",
+                                       F.lit(False).alias("in_batch")))
+        .groupBy("content_sha")
+        .agg(F.min(F.when(in_batch, F.col("doc_key"))).alias("rep_key"),
+             F.min(F.when(~in_batch, F.col("doc_key"))).alias("prior_key"))
+    )
     is_rep = F.col("doc_key") == F.col("rep_key")
     new_rep = is_rep & F.col("prior_key").isNull()
     partner = F.when(~is_rep, F.col("rep_key")).when(
@@ -141,24 +173,18 @@ def _fold_batch(keyed: DataFrame, prior_reps: DataFrame | None) -> DataFrame:
 
 
 def _incremental_candidates(
-    sigs: DataFrame, old: DataFrame | None, cfg: DedupConfig
+    sigs: DataFrame, old: DataFrame, cfg: DedupConfig
 ) -> tuple[DataFrame, DataFrame]:
     """Band this epoch's signature cut and return its candidate pairs plus
-    the band rows to commit. New-vs-new and new-vs-old pairs come from one
-    join of the new bands against new + accumulated bands (`old`, see
+    its band rows. New-vs-new and new-vs-old pairs come from one join of
+    the new bands against new + accumulated bands (`old`, see
     buckets.new_vs_all), so each pair is discovered in the round its LATER
-    member is banded. The CALLER appends the returned bands after
-    persisting the pairs (crash-ordering). Returns
-    ((key_a, key_b, n_bands_hit), band_rows)."""
+    member is banded. Returns ((key_a, key_b, n_bands_hit), band_rows)."""
     # a JVM posexplode of the cut's fused bands: cheap to re-derive per
     # consumer, so no band checkpoint of its own
     new_bands = compute_bands(sigs, cfg)
-    if old is not None:
-        # at-least-once appends: a foreachBatch retry may have written the
-        # same band rows twice — dedupe on read, like stream_exact_pairs
-        old = old.select("doc_key", "band_id", "band_hash").dropDuplicates()
-    joined, _ = new_vs_all(new_bands, old, BAND_COLS, "doc_key",
-                           cfg.band_bucket_cap)
+    joined, _ = new_vs_all(new_bands, old.select(*new_bands.columns),
+                           BAND_COLS, "doc_key", cfg.band_bucket_cap)
     pairs = (
         joined.select(
             F.least("a.doc_key", "b.doc_key").alias("key_a"),
@@ -168,6 +194,20 @@ def _incremental_candidates(
         .agg(F.count("*").alias("n_bands_hit"))
     )
     return pairs, new_bands
+
+
+def _pair_signatures(pairs: DataFrame, sigs: DataFrame, blocks: DataFrame,
+                     cfg: DedupConfig) -> DataFrame:
+    """The signatures of the pairs' docs: this epoch's from its kernel cut,
+    older ones decoded from the stored SignatureBlock rows."""
+    keys = pairs.select(F.col("key_a").alias("doc_key")).union(
+        pairs.select(F.col("key_b").alias("doc_key"))
+    )
+    cols = ["doc_key", "minhash", "simhash"]
+    old = decode_signature_blocks(blocks.select("config_hash", "payload"), cfg)
+    return sigs.select(cols).unionByName(old.select(cols)).join(
+        keys, "doc_key", "left_semi"
+    )
 
 
 def _corpus_stream(spark: SparkSession, input_dir: str,
@@ -204,11 +244,11 @@ def ingest_stream(
     key_cols: list[str] | None = None,
     input_format: str = "parquet",
 ) -> None:
-    """Process all currently-available corpus files into the signature
-    checkpoint tables, exactly once per doc_key, then stop (AvailableNow).
+    """Process all currently-available corpus files into the epoch table,
+    exactly once per doc_key, then stop (AvailableNow).
 
     Re-running after new files arrive ingests only the new documents
-    (streaming-source offset tracking + the resume anti-join).
+    (streaming-source offset tracking + the cross-epoch sha fold).
 
     input_format="iceberg" treats input_dir as a catalog table name and
     reads it through readStream.table — Iceberg's incremental snapshot
@@ -216,32 +256,32 @@ def ingest_stream(
     same checkpoint location, and everything downstream is identical (the
     north rule's deployment: the corpus IS the lake table).
 
-    Crash recovery: an epoch that dies between its signature append and its
-    band append leaves docs signed but unbanded, and on replay the
-    cross-batch sha fold may hide them from the batch. The band append is
-    therefore followed by a lineage watermark — the total of signature rows
-    the band table now covers — and an epoch whose signature lineage total
-    exceeds the watermark (or finds the band table gone) decodes the
-    checkpoint and bands the leftover rows. The totals come from the
-    manifest, so the check itself runs no Spark job; the signature lineage
-    entry is recorded before its append, so a crash can only make the check
-    recover needlessly, never miss a leftover."""
+    Crash recovery: each epoch commits through one warehouse write, a
+    dynamic overwrite of its own (config_hash, kind, run, epoch)
+    partitions. A crashed epoch is replayed by the stream with the same
+    batch; its reads skip its own (run, epoch), so the replay computes
+    the same rows and its write replaces whatever the crash left."""
     key_cols = key_cols or ["repo", "path", "commit"]
     cfg_hash = cfg.config_hash()
     stream = _corpus_stream(spark, input_dir, input_format)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         t0 = time.time()
-        epoch = F.lit(int(epoch_id))
-        # each state table is read once, before any of this epoch's appends
-        prior_reps = _read_state(wh, SHA_REP_TABLE, SHA_REP_SCHEMA, cfg_hash)
-        old_bands = _read_state(wh, BAND_TABLE, BAND_SCHEMA, cfg_hash)
+        run = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        epoch = int(epoch_id)
+        # the state is read once; every other (run, epoch) is prior state
+        state = _epoch_rows(wh, cfg_hash, "sha_rep", "band", "sig_block").where(
+            (F.col("run") != run) | (F.col("epoch") != epoch)
+        )
+
+        def prior(kind: str) -> DataFrame:
+            return state.where(F.col("kind") == kind)
 
         # the one cut of the micro-batch; its observed row count replaces
         # an emptiness probe and a count job
         seen = Observation()
         batch = materialize(
-            _fold_batch(with_doc_key(batch_df, key_cols), prior_reps)
+            _fold_batch(with_doc_key(batch_df, key_cols), prior("sha_rep"))
             .observe(seen, F.count(F.lit(1)).alias("rows")),
             eager=True,
         )
@@ -249,27 +289,29 @@ def ingest_stream(
         if n_in == 0:
             return
 
-        signed_before = sum(
-            e["rows"] for e in wh.lineage(SIG_STAGE, cfg_hash, "appended")
-        )
-        marks = (wh.lineage(BAND_TABLE, cfg_hash, "banded")
-                 if old_bands is not None else [])
-        covered = marks[-1]["rows"] if marks else 0
+        parts = {
+            "exact": batch.where(F.col("partner").isNotNull()).select(
+                F.least("partner", "doc_key").alias("key_a"),
+                F.greatest("partner", "doc_key").alias("key_b"),
+            ),
+            # every ingested doc_key (pre exact-fold, pre length filter) so
+            # cluster readers can attach singletons exactly like the batch
+            # path
+            "doc_key": batch.select("doc_key"),
+            "sha_rep": batch.where("new_rep").select("content_sha", "doc_key"),
+        }
         signed = Observation()
-        # the band table's keys are the already-signed docs; when the
-        # lineage says the checkpoint holds more, its leftover rows (signed
-        # but unbanded by a crashed epoch) join this epoch's cut
-        sigs = signatures_with_resume(
-            signature_input(batch.where("new_rep"), cfg), cfg, wh,
-            restrict_to_input=False, observation=signed,
-            signed_keys=(None if old_bands is None
-                         else old_bands.select("doc_key").distinct()),
-            recover=signed_before > covered,
+        sigs = materialize(
+            compute_signatures(signature_input(batch.where("new_rep"), cfg),
+                               cfg)
+            .observe(signed, F.count(F.lit(1)).alias("rows")),
+            eager=True,
         )
-        signed_total = signed_before + signed.get["signed"]
-        to_band = signed.get["rows"] > 0
-        if to_band:
-            pairs, new_bands = _incremental_candidates(sigs, old_bands, cfg)
+        if signed.get["rows"] > 0:
+            parts["sig_block"] = signature_blocks(sigs.drop("bands"), cfg).where(
+                F.col("rows_used") > 0)
+            pairs, parts["band"] = _incremental_candidates(
+                sigs, prior("band"), cfg)
             # cut once: the pairs feed both the key list and the verify
             # join, and an epoch without pairs skips the decode
             n_pairs = Observation()
@@ -278,68 +320,24 @@ def ingest_stream(
                 eager=True,
             )
             if n_pairs.get["rows"] > 0:
-                # the one decode of the epoch: the checkpoint (this
-                # epoch's rows included) restricted to the pairs' keys
-                keys = pairs.select(F.col("key_a").alias("doc_key")).union(
-                    pairs.select(F.col("key_b").alias("doc_key"))
-                )
-                pair_sigs = read_signature_checkpoint(wh, cfg).join(
-                    keys, "doc_key", "left_semi"
-                )
-                # crash-ordering: pairs FIRST, bands LAST. The band append
-                # is the commit point — a crash in between leaves the docs
-                # unbanded, so the next epoch recomputes their pairs
-                # (duplicates are deduped on read, the same at-least-once
-                # discipline as stream_exact_pairs).
-                wh.append(
-                    verified_pairs(pairs, pair_sigs, cfg)
-                    .withColumn("config_hash", F.lit(cfg_hash))
-                    .withColumn("epoch", epoch),
-                    "stream_verified_pairs",
-                )
-        wh.append(
-            batch.where(F.col("partner").isNotNull())
-            .select(
-                F.least("partner", "doc_key").alias("key_a"),
-                F.greatest("partner", "doc_key").alias("key_b"),
-            )
-            .withColumn("epoch", epoch),
-            "stream_exact_pairs",
-        )
-        # every ingested doc_key (pre exact-fold, pre length filter) so
-        # cluster readers can attach singletons exactly like the batch path
-        wh.append(batch.select("doc_key"), "stream_doc_keys")
-        if to_band:
-            wh.append(
-                new_bands.withColumn("config_hash", F.lit(cfg_hash))
-                .withColumn("epoch", epoch),
-                BAND_TABLE,
-            )
-        if signed_total > covered:
-            wh.record_lineage(BAND_TABLE, cfg_hash, "banded", signed_total,
-                              BAND_TABLE)
-        # sha-rep append LAST: a crash anywhere above leaves this batch's
-        # shas out of the fold table, so the replay re-runs the full fold
-        # (re-emitted pairs dedupe on read; re-signing is stopped by the
-        # signature resume anti-join). Appending earlier could let a replay
-        # see its own shas as "prior" and skip a cross-batch pair.
-        wh.append(
-            batch.where("new_rep")
-            .select("content_sha", "doc_key",
-                    F.lit(cfg_hash).alias("config_hash"))
-            .withColumn("epoch", epoch),
-            SHA_REP_TABLE,
-        )
-        wh.record_lineage(
-            "stream_ingest", cfg_hash, f"epoch-{epoch_id}",
-            rows=n_in, table="checkpoint_signatures",
-        )
+                parts["verified"] = verified_pairs(
+                    pairs, _pair_signatures(pairs, sigs, prior("sig_block"),
+                                            cfg), cfg,
+                ).select("key_a", "key_b")
         # same observability as the batch pipeline's per-stage metrics: one
-        # row per epoch with the ingest wall and row count, so a stalled or
-        # regressing stream is visible from the warehouse alone
-        wh.record_metrics(
-            "stream_ingest", cfg_hash,
-            int((time.time() - t0) * 1000), rows_in=n_in,
+        # row per epoch with the ingest wall (up to its write) and row count
+        parts["metrics"] = local_frame(spark, [metrics_row(
+            "stream_ingest", cfg_hash, int((time.time() - t0) * 1000),
+            rows_in=n_in)], METRICS_SCHEMA)
+        rows = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [df.withColumn("kind", F.lit(kind)) for kind, df in parts.items()],
+        )
+        wh.write(
+            rows.withColumn("config_hash", F.lit(cfg_hash))
+            .withColumn("run", F.lit(run))
+            .withColumn("epoch", F.lit(epoch).cast("long")),
+            EPOCH_TABLE, cfg_hash, partition_by=EPOCH_PARTS,
         )
 
     q = (
@@ -352,16 +350,15 @@ def ingest_stream(
     q.awaitTermination()
 
 
-def read_stream_verified_pairs(wh: Warehouse, cfg: DedupConfig) -> DataFrame:
-    """Verified near-dup pairs the incremental LSH rounds accumulated under
-    `cfg`, deduped on read (at-least-once appends, same discipline as
-    read_stream_exact_pairs). Another config's pairs (a lower threshold,
-    other bands) never reach this config's labels."""
-    return (
-        wh.read("stream_verified_pairs", VERIFIED_PAIR_SCHEMA)
-        .where(F.col("config_hash") == cfg.config_hash())
-        .select("key_a", "key_b").distinct()
-    )
+def read_stream_pairs(wh: Warehouse, cfg: DedupConfig,
+                      *kinds: str) -> DataFrame:
+    """(key_a, key_b) pairs of the given kinds ("exact", "verified") the
+    stream accumulated under `cfg`, deduped on read: a second query over
+    the same input (a fresh checkpoint, a new run) emits the exact pairs
+    again. Another config's pairs (a lower threshold, other bands) never
+    reach this config's labels."""
+    return _epoch_rows(wh, cfg.config_hash(), *kinds).select(
+        "key_a", "key_b").distinct()
 
 
 LABEL_TABLE = "stream_cluster_labels"
@@ -403,8 +400,8 @@ def stream_clusters(spark: SparkSession, wh: Warehouse, cfg: DedupConfig
     union-finds only the QUOTIENT graph — edges not already folded into one
     cluster, contracted to their prior labels — so per-call clustering work
     is proportional to the new batch, not the accumulated pair history. The
-    contraction pass itself is one join of the pair tables against the
-    label table (no fixpoint iterations over history). Labels equal a
+    contraction pass itself is one join of the accumulated pairs against
+    the label table (no fixpoint iterations over history). Labels equal a
     from-scratch union-find because prior labels are component minima:
     merging supernodes by min label yields the global component minimum.
     Each call ends with one overwrite of the label table from the call's
@@ -413,21 +410,19 @@ def stream_clusters(spark: SparkSession, wh: Warehouse, cfg: DedupConfig
     The prior labels are the table only when it is complete under THIS
     config hash (ADVICE r4); otherwise — the first call, a table written
     under another config, or one a crashed overwrite left without files —
-    the prior is empty and every label rebuilds from the pair tables, so a
-    stale table never seeds the quotient graph with merges this config
-    would not make. The verified pairs are read under this config hash
-    (read_stream_verified_pairs); the exact pairs need no gate, since sha
-    equality depends on no config field.
+    the prior is empty and every label rebuilds from the accumulated pairs,
+    so a stale table never seeds the quotient graph with merges this config
+    would not make. Pairs and doc keys are read under this config hash
+    (the epoch table's config_hash partitions).
 
-    Crash-safe without epoch bookkeeping (at-least-once appends make epoch
-    watermarks unsound): already-folded edges contract to self-loops and
-    vanish, replayed rows are deduped on read, and a label row missing
-    from a partly written table simply re-enters the quotient graph
-    through its surviving edges, so the maintenance is idempotent given
-    the pair tables.
+    Crash-safe without epoch bookkeeping: already-folded edges contract to
+    self-loops and vanish, repeated pair rows are deduped on read, and a
+    label row missing from a partly written table simply re-enters the
+    quotient graph through its surviving edges, so the maintenance is
+    idempotent given the epoch table.
 
-    Singletons are attached from the full ingested doc_key log
-    (stream_doc_keys), so every ingested doc is labeled exactly like
+    Singletons are attached from the ingested doc keys (the epoch table's
+    `doc_key` rows), so every ingested doc is labeled exactly like
     run_dedup's attach_singletons — including docs below min_content_len
     that never reach the signature stage.
 
@@ -435,28 +430,15 @@ def stream_clusters(spark: SparkSession, wh: Warehouse, cfg: DedupConfig
     band_bucket_cap BETWEEN rounds: a bucket that grows over the cap stops
     emitting NEW pairs (combined-size gate), but pairs it emitted while
     under the cap are retained, whereas a batch run over the final corpus
-    drops that bucket entirely. This is the documented at-least-once
-    divergence of incremental maintenance; the retained pairs are real
-    verified near-dups, so recall never regresses — only the cap's
-    pair-suppression is weaker than batch."""
+    drops that bucket entirely. This is the documented divergence of
+    incremental maintenance; the retained pairs are real verified
+    near-dups, so recall never regresses — only the cap's pair-suppression
+    is weaker than batch."""
     from dedup.cluster import attach_singletons, connected_components
 
-    if not wh.exists("stream_doc_keys"):
-        # No non-empty batch was ever ingested (fresh/empty input dir):
-        # return the same empty (doc_key, cluster_id) frame the batch path
-        # yields on an empty corpus instead of raising on a missing table.
-        return local_frame(wh.spark, [], LABEL_SCHEMA)
-    # the pair tables that exist, or an empty seed when neither does
-    edges = reduce(DataFrame.unionByName, [
-        read() for name, read in (
-            ("stream_exact_pairs", lambda: read_stream_exact_pairs(wh)),
-            ("stream_verified_pairs",
-             lambda: read_stream_verified_pairs(wh, cfg)),
-        ) if wh.exists(name)
-    ] or [local_frame(wh.spark, [], PAIR_SCHEMA)])
-    members = wh.read("stream_doc_keys", DOC_KEY_SCHEMA).select(
-        "doc_key").distinct()
     cfg_hash = cfg.config_hash()
+    edges = read_stream_pairs(wh, cfg, "exact", "verified")
+    members = _epoch_rows(wh, cfg_hash, "doc_key").select("doc_key").distinct()
     prior = (wh.read(LABEL_TABLE, LABEL_SCHEMA)
              if wh.is_complete(LABEL_TABLE, cfg_hash)
              else local_frame(wh.spark, [], LABEL_SCHEMA))
@@ -482,20 +464,6 @@ def stream_clusters(spark: SparkSession, wh: Warehouse, cfg: DedupConfig
     return labels
 
 
-def read_stream_exact_pairs(wh: Warehouse) -> DataFrame:
-    """Exact-duplicate pairs accumulated by ingest_stream, deduped on read.
-
-    The underlying table is AT-LEAST-ONCE: foreachBatch retries may append
-    the same pair rows again (only the signature path is idempotent by
-    anti-join), so consumers must read through this distinct() — the same
-    dedupe-on-read discipline as every accumulated pair table here.
-    """
-    return (
-        wh.read("stream_exact_pairs", PAIR_SCHEMA)
-        .select("key_a", "key_b").distinct()
-    )
-
-
 def stream_substring_pairs(
     spark: SparkSession,
     wh: Warehouse,
@@ -512,7 +480,7 @@ def stream_substring_pairs(
     SAME offset-anchored exact kernel as the batch pass, and append. Per-call
     work is proportional to the new docs, not the corpus.
 
-    `corpus` must cover every doc in the sha-rep table — the same
+    `corpus` must cover every sha-rep doc of the epoch table — the same
     input-retention contract as stream-mode --write-cleaned (content is NOT
     persisted in the warehouse; at 10^12-file scale the corpus is the lake
     table itself and this parameter is one `spark.read.table(...)`).
@@ -520,8 +488,7 @@ def stream_substring_pairs(
     Crash-ordering: pairs append FIRST, fingerprints LAST (the commit
     point) — a crash in between leaves this round's docs unfingerprinted,
     so the next call regenerates and re-verifies their pairs; the re-appends
-    dedupe on read (read_stream_substring_pairs), the same at-least-once
-    discipline as every pair table here.
+    dedupe on read (read_stream_substring_pairs).
 
     Returns the ACCUMULATED deduped pair set (key_a, key_b, lcs_len)."""
     from dedup.suffix import (
@@ -535,17 +502,17 @@ def stream_substring_pairs(
     key_cols = key_cols or ["repo", "path", "commit"]
     cfg_hash = cfg.config_hash()
     t0 = time.time()
-    reps = _read_state(wh, SHA_REP_TABLE, SHA_REP_SCHEMA, cfg_hash)
-    if reps is None:
+    if not wh.exists(EPOCH_TABLE):
         return local_frame(spark, [], VERIFIED_SCHEMA)
     keyed = with_doc_key(corpus, key_cols)
-    work = keyed.join(reps.select("doc_key").distinct(), "doc_key",
-                      "left_semi")
+    work = keyed.join(
+        _epoch_rows(wh, cfg_hash, "sha_rep").select("doc_key").distinct(),
+        "doc_key", "left_semi")
     old_fps = None
     stored = _read_state(wh, FP_TABLE, _with_config_hash(FP_SCHEMA),
                          cfg_hash)
     if stored is not None:
-        # at-least-once appends dedupe on read, like the band table
+        # at-least-once appends dedupe on read
         stored = stored.select("doc_key", "fp_hash", "fp_off").dropDuplicates()
         work = work.join(
             stored.select("doc_key").distinct(), "doc_key", "left_anti"

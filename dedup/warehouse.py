@@ -108,13 +108,6 @@ class Warehouse:
         )
         self._save_manifest(m)
 
-    def lineage(self, stage: str, config_hash: str, status: str) -> list[dict]:
-        """Recorded lineage entries of one stage and config with the given
-        status, oldest first (a manifest read: no Spark job)."""
-        return [e for e in self._load_manifest()["lineage"]
-                if (e["stage"], e["config_hash"], e["status"])
-                == (stage, config_hash, status)]
-
     # -- tables --------------------------------------------------------------
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -123,44 +116,53 @@ class Warehouse:
         return f"dedup.db.{name}"
 
     def write(self, df: DataFrame, name: str, config_hash: str,
-              mode: str = "overwrite") -> int:
+              mode: str = "overwrite",
+              partition_by: list[str] | None = None) -> int:
         """Write a stage output; returns row count; marks table complete.
 
         With an Iceberg catalog configured (spark.sql.catalog.dedup), stage
         outputs become Iceberg tables with real snapshot lineage; the Parquet
         directory fallback (sandbox default — no Iceberg runtime jar here,
         SURVEY §7.0) mirrors the semantics via the JSON manifest.
+
+        `partition_by` makes the overwrite replace only the partitions `df`
+        holds rows for (dynamic partition overwrite; Iceberg's
+        overwritePartitions, creating the partitioned table on its first
+        write); the manifest then counts the rows of this write alone.
         """
-        if self.use_iceberg:
-            tbl = self._iceberg_table(name)
-            if mode == "overwrite":
-                df.writeTo(tbl).createOrReplace()
-            else:
-                df.writeTo(tbl).append()
-            rows = self.spark.table(tbl).count()
-            m = self._load_manifest()
-            m["tables"][name] = dict(
-                config_hash=config_hash, status="complete", rows=rows,
-                snapshot="iceberg", ts=int(time.time() * 1000),
-            )
-            self._save_manifest(m)
-            self.record_lineage(name, config_hash, "written", rows, tbl)
-            return rows
         # the row count is observed on the write action itself (no re-read
         # of the table); an append adds it to the manifest's prior total
         written = Observation()
-        df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
-            mode).parquet(self._path(name))
+        df = df.observe(written, F.count(F.lit(1)).alias("rows"))
+        if self.use_iceberg:
+            table = self._iceberg_table(name)
+            writer = df.writeTo(table)
+            if partition_by is None:
+                (writer.createOrReplace() if mode == "overwrite"
+                 else writer.append())
+            elif self.spark.catalog.tableExists(table):
+                writer.overwritePartitions()
+            else:
+                writer.partitionedBy(*map(F.col, partition_by)).create()
+            snapshot = "iceberg"
+        else:
+            table = name
+            writer = df.write.mode(mode)
+            if partition_by is not None:
+                writer = writer.partitionBy(*partition_by).option(
+                    "partitionOverwriteMode", "dynamic")
+            writer.parquet(self._path(name))
+            snapshot = str(uuid.uuid4())[:8]
         m = self._load_manifest()
         rows = written.get["rows"]
         if mode == "append":
             rows += m["tables"].get(name, {}).get("rows", 0)
         m["tables"][name] = dict(
             config_hash=config_hash, status="complete", rows=rows,
-            snapshot=str(uuid.uuid4())[:8], ts=int(time.time() * 1000),
+            snapshot=snapshot, ts=int(time.time() * 1000),
         )
         self._save_manifest(m)
-        self.record_lineage(name, config_hash, "written", rows, name)
+        self.record_lineage(name, config_hash, "written", rows, table)
         return rows
 
     def append(self, df: DataFrame, name: str) -> None:
@@ -185,12 +187,16 @@ class Warehouse:
         return reader.parquet(self._path(name))
 
     def exists(self, name: str) -> bool:
+        """True iff the table holds a data file. The Parquet branch walks
+        partition directories too, and stops at the first file; like
+        Spark's listing it skips `_`/`.` entries (job temporaries)."""
         if self.use_iceberg:
             return self.spark.catalog.tableExists(self._iceberg_table(name))
-        p = self._path(name)
-        return os.path.exists(p) and any(
-            f.endswith(".parquet") for f in os.listdir(p)
-        )
+        for _, dirs, files in os.walk(self._path(name)):
+            if any(f.endswith(".parquet") for f in files):
+                return True
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        return False
 
     def is_complete(self, name: str, config_hash: str) -> bool:
         """True iff the table was fully written under THIS config — a

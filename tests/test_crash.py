@@ -8,24 +8,26 @@ scenario, the scenario is run from the same prior state, crashed at k,
 then replayed without faults, and the replay must give run_dedup's
 labels, sign no doc twice and read no other config's rows.
 
-The boundaries of one stream epoch, in call order:
-  1-2   record_lineage(signatures) and its manifest save
-  3     append checkpoint_signatures
-  4     append stream_verified_pairs
-  5     append stream_exact_pairs
-  6     append stream_doc_keys
-  7     append checkpoint_bands
-  8-9   record_lineage(checkpoint_bands, banded) and its manifest save
-  10    append stream_sha_reps
-  11-12 record_lineage(stream_ingest) and its manifest save
-  13    append metrics
-then stream_clusters' label overwrite: write, the manifest save of its
-table entry, record_lineage and its manifest save.
+The boundaries of one stream epoch plus the stream_clusters call after
+it, in call order:
+  1  write stream_epochs (the epoch's one partition overwrite)
+  2  its manifest save (table entry)
+  3  record_lineage(stream_epochs)
+  4  its manifest save
+  5  write stream_cluster_labels (the label overwrite)
+  6  its manifest save
+  7  record_lineage(stream_cluster_labels)
+  8  its manifest save
 
-The boundaries of a warehouse-mode run_dedup: record_lineage(signatures)
-and its manifest save, the checkpoint_signatures append, the metrics
-append, the clusters write, its manifest save, record_lineage and its
-manifest save.
+The boundaries of a warehouse-mode run_dedup:
+  1  record_lineage(signatures)
+  2  its manifest save
+  3  append checkpoint_signatures
+  4  append metrics
+  5  write clusters
+  6  its manifest save
+  7  record_lineage(clusters)
+  8  its manifest save
 """
 
 import os
@@ -35,8 +37,12 @@ import pytest
 
 from dedup.config import DedupConfig
 from dedup.fixtures import make_corpus
-from dedup.pipeline import read_signature_checkpoint, run_dedup
-from dedup.streaming import ingest_stream, stream_clusters
+from dedup.pipeline import (
+    decode_signature_blocks,
+    read_signature_checkpoint,
+    run_dedup,
+)
+from dedup.streaming import _epoch_rows, ingest_stream, stream_clusters
 from dedup.warehouse import Warehouse
 
 CFG = DedupConfig()
@@ -155,11 +161,11 @@ class TestCrashMatrix:
             assert got == want, f"crash at {k}: labels differ from run_dedup"
 
         def check(k):
-            wh = wh_of(k)
-            _assert_signed_once(read_signature_checkpoint(wh, CFG))
+            blocks = _epoch_rows(wh_of(k), CFG.config_hash(), "sig_block")
+            _assert_signed_once(decode_signature_blocks(blocks, CFG))
             shutil.rmtree(point(k))
 
-        assert _run_points(scenario, replay, check, crash_at) >= 13
+        assert _run_points(scenario, replay, check, crash_at) == 8
 
     def test_warehouse_run_dedup(self, spark, tmp_path, crash_at):
         pdf, _, second = _corpus()
@@ -190,4 +196,4 @@ class TestCrashMatrix:
             _assert_signed_once(read_signature_checkpoint(wh, CFG))
             shutil.rmtree(point(k))
 
-        assert _run_points(scenario, replay, check, crash_at) >= 7
+        assert _run_points(scenario, replay, check, crash_at) == 8

@@ -417,7 +417,7 @@ class TestIncrementalSubstringPlans:
 
 # (Exchange, Generate) counts of the two bucket joins on the fixture corpus
 CANDIDATE_PAIRS_NODES = (7, 1)
-STREAM_PAIRS_NODES = (10, 5)
+STREAM_PAIRS_NODES = (7, 5)
 
 
 def _node_counts(df) -> tuple[int, int]:

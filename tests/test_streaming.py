@@ -34,6 +34,13 @@ def stored_labels(wh: Warehouse) -> dict:
     return out
 
 
+def epoch_rows(wh: Warehouse, kind: str, cfg=CFG):
+    """The stream's rows of one kind under `cfg` in the epoch table."""
+    from dedup.streaming import _epoch_rows
+
+    return _epoch_rows(wh, cfg.config_hash(), kind)
+
+
 def batch_labels(spark, pdf, cfg=CFG) -> dict:
     """run_dedup's {doc_key: cluster_id} over the pandas corpus `pdf`."""
     from dedup.pipeline import run_dedup
@@ -58,9 +65,7 @@ class TestStreamingIngest:
             "append"
         ).parquet(in_dir)
         ingest_stream(spark, in_dir, wh, CFG, ckpt)
-        n1 = decode_signature_blocks(
-            wh.read("checkpoint_signatures"), CFG
-        ).count()
+        n1 = decode_signature_blocks(epoch_rows(wh, "sig_block"), CFG).count()
         assert n1 > 0
 
         # round 2: rest arrives; only new docs are processed
@@ -70,7 +75,7 @@ class TestStreamingIngest:
         ingest_stream(spark, in_dir, wh, CFG, ckpt)
 
         streamed = decode_signature_blocks(
-            wh.read("checkpoint_signatures"), CFG
+            epoch_rows(wh, "sig_block"), CFG
         ).dropDuplicates(["doc_key"])
 
         # batch reference over the full corpus
@@ -84,17 +89,17 @@ class TestStreamingIngest:
         assert a == b
 
         # replay: re-running with no new files is a no-op
-        before = wh.read("checkpoint_signatures").count()
+        before = epoch_rows(wh, "sig_block").count()
         ingest_stream(spark, in_dir, wh, CFG, ckpt)
         assert decode_signature_blocks(
-            wh.read("checkpoint_signatures"), CFG
+            epoch_rows(wh, "sig_block"), CFG
         ).dropDuplicates(["doc_key"]).count() == len(b)
 
     def test_cross_batch_verbatim_copy_folds_exact(self, spark, tmp_path):
         """A verbatim copy arriving in a LATER batch is folded into a
         cross-batch exact pair against the prior representative and is NOT
-        re-signed (ADVICE r1); stream_exact_pairs reads deduped."""
-        from dedup.streaming import read_stream_exact_pairs
+        re-signed (ADVICE r1); the exact pairs read deduped."""
+        from dedup.streaming import read_stream_pairs
 
         pdf, _ = make_corpus(n_base=12, seed=33)
         in_dir = str(tmp_path / "in2")
@@ -105,7 +110,7 @@ class TestStreamingIngest:
         spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(in_dir)
         ingest_stream(spark, in_dir, wh, CFG, ckpt)
         n_before = decode_signature_blocks(
-            wh.read("checkpoint_signatures"), CFG
+            epoch_rows(wh, "sig_block"), CFG
         ).dropDuplicates(["doc_key"]).count()
 
         # batch 2: one verbatim copy of doc 0 under a new path
@@ -115,16 +120,16 @@ class TestStreamingIngest:
         ingest_stream(spark, in_dir, wh, CFG, ckpt)
 
         n_after = decode_signature_blocks(
-            wh.read("checkpoint_signatures"), CFG
+            epoch_rows(wh, "sig_block"), CFG
         ).dropDuplicates(["doc_key"]).count()
         assert n_after == n_before, "verbatim cross-batch copy was re-signed"
 
         keyed = key_docs(spark.createDataFrame(copy))
         copy_key = keyed.select("doc_key").collect()[0][0]
         pairs = {(r["key_a"], r["key_b"])
-                 for r in read_stream_exact_pairs(wh).collect()}
+                 for r in read_stream_pairs(wh, CFG, "exact").collect()}
         assert any(copy_key in p for p in pairs), (
-            "cross-batch exact pair missing from stream_exact_pairs"
+            "cross-batch exact pair missing from the exact pairs"
         )
         # canonical orientation (ADVICE r2): every pair is (min, max), so the
         # same pair can never survive distinct() in both orientations
@@ -136,9 +141,9 @@ class TestStreamingIngest:
         """VERDICT r2 #7: per round, only NEW signatures are banded (band
         appends == bands x new eligible reps, work proportional to the
         batch); new-vs-old pairs come from one join against the accumulated
-        band table; the accumulated clusters equal the batch pipeline's."""
+        band rows; the accumulated clusters equal the batch pipeline's."""
         from dedup.pipeline import run_dedup
-        from dedup.streaming import BAND_TABLE, stream_clusters
+        from dedup.streaming import stream_clusters
 
         pdf, _ = make_corpus(n_base=40, seed=77)
         # no content filtering: docs that skip the signature stage must
@@ -163,14 +168,14 @@ class TestStreamingIngest:
             "append"
         ).parquet(in_dir)
         ingest_stream(spark, in_dir, wh, CFG, ckpt)
-        bands_r1 = wh.read(BAND_TABLE).count()
+        bands_r1 = epoch_rows(wh, "band").count()
         assert bands_r1 == CFG.bands * eligible_reps(pdf.iloc[:half])
 
         spark.createDataFrame(pdf.iloc[half:]).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
         ingest_stream(spark, in_dir, wh, CFG, ckpt)
-        bands_r2 = wh.read(BAND_TABLE).count()
+        bands_r2 = epoch_rows(wh, "band").count()
         # round 2 appended ONLY the new reps' bands (old ones not re-banded)
         assert bands_r2 == CFG.bands * eligible_reps(pdf)
 
@@ -185,55 +190,16 @@ class TestStreamingIngest:
         }
         assert got == want, "incremental clusters diverge from batch pipeline"
 
-    def test_recovery_rebands_signed_but_unbanded_docs(self, spark, tmp_path):
-        """Crash-ordering regression: an epoch that died AFTER appending
-        signatures but BEFORE appending pairs/bands leaves docs signed but
-        unbanded; on replay the cross-batch sha fold hides them from
-        rep_docs, so the band work-list must come from the signature
-        checkpoint itself or the pairs are lost forever."""
-        from dedup.pipeline import run_dedup
-        from dedup.streaming import BAND_TABLE, stream_clusters
-
-        pdf, _ = make_corpus(n_base=30, seed=11)
-        half = len(pdf) // 2
-        in_dir = str(tmp_path / "in4")
-        os.makedirs(in_dir)
-        wh = Warehouse(spark, str(tmp_path / "wh4"))
-        ckpt = str(tmp_path / "ck4")
-
-        spark.createDataFrame(pdf.iloc[:half]).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-        ingest_stream(spark, in_dir, wh, CFG, ckpt)
-        # simulate the crash window: signatures landed, pairs/bands did not
-        wh.drop(BAND_TABLE)
-        wh.drop("stream_verified_pairs")
-
-        spark.createDataFrame(pdf.iloc[half:]).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-        ingest_stream(spark, in_dir, wh, CFG, ckpt)
-
-        got = {
-            r["doc_key"]: r["cluster_id"]
-            for r in stream_clusters(spark, wh, CFG).collect()
-        }
-        want = {
-            r["doc_key"]: r["cluster_id"]
-            for r in run_dedup(spark, spark.createDataFrame(pdf), CFG).collect()
-        }
-        assert got == want, "recovery lost pairs for signed-but-unbanded docs"
-
-    def test_partial_crash_replay_bands_leftover_signatures(
-        self, spark, tmp_path
+    def test_half_written_epoch_replays_to_batch_labels(
+        self, spark, tmp_path, monkeypatch
     ):
-        """An epoch that dies at its band append, after its signatures and
-        pairs landed, leaves the band table behind the checkpoint while
-        every other state table is intact. The replay must detect the lag
-        from the manifest's lineage totals, band the leftover signatures
-        without signing them again, and still cluster like run_dedup."""
+        """An epoch whose one write lands only half its rows and then
+        raises leaves partial (run, epoch) partitions behind. The stream
+        replays the epoch: its reads skip its own partitions and its write
+        replaces them, so the labels equal run_dedup and no doc is signed
+        twice."""
         from dedup.pipeline import run_dedup
-        from dedup.streaming import BAND_TABLE, stream_clusters
+        from dedup.streaming import EPOCH_TABLE, stream_clusters
 
         pdf, _ = make_corpus(n_base=30, seed=13)
         half = len(pdf) // 2
@@ -242,41 +208,39 @@ class TestStreamingIngest:
         wh = Warehouse(spark, str(tmp_path / "wh_crash"))
         ckpt = str(tmp_path / "ck_crash")
 
+        def half_write_then_crash(df, name, config_hash, mode="overwrite",
+                                  partition_by=None):
+            assert name == EPOCH_TABLE
+            kept = df.where(F.pmod(F.xxhash64(*df.columns), F.lit(2)) == 0)
+            Warehouse.write(wh, kept, name, config_hash, mode, partition_by)
+            raise RuntimeError("crash in the epoch write")
+
         def signed_keys():
             return decode_signature_blocks(
-                wh.read("checkpoint_signatures"), CFG
-            ).select("doc_key")
+                epoch_rows(wh, "sig_block"), CFG).select("doc_key")
 
         spark.createDataFrame(pdf.iloc[:half]).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
         ingest_stream(spark, in_dir, wh, CFG, ckpt)
+        bands_r1 = epoch_rows(wh, "band").count()
 
         spark.createDataFrame(pdf.iloc[half:]).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
-        append = wh.append
-
-        def crashing_append(df, name):
-            if name == BAND_TABLE:
-                raise RuntimeError("crash at the band append")
-            return append(df, name)
-
-        wh.append = crashing_append
-        with pytest.raises(Exception, match="crash at the band append"):
-            ingest_stream(spark, in_dir, wh, CFG, ckpt)
-        wh.append = append
-        banded = wh.read(BAND_TABLE).select("doc_key").distinct()
-        assert signed_keys().join(banded, "doc_key", "left_anti").count() > 0, (
-            "the crash must leave signed but unbanded docs"
-        )
+        with monkeypatch.context() as m:
+            m.setattr(wh, "write", half_write_then_crash)
+            with pytest.raises(Exception, match="crash in the epoch write"):
+                ingest_stream(spark, in_dir, wh, CFG, ckpt)
+        bands_crashed = epoch_rows(wh, "band").count()
 
         # replay of the failed epoch
         ingest_stream(spark, in_dir, wh, CFG, ckpt)
+        assert bands_r1 < bands_crashed < epoch_rows(wh, "band").count(), (
+            "the crash must leave a partial epoch"
+        )
         keys = signed_keys()
         assert keys.count() == keys.distinct().count(), "a doc was signed twice"
-        banded = wh.read(BAND_TABLE).select("doc_key").distinct()
-        assert keys.join(banded, "doc_key", "left_anti").count() == 0
 
         got = {
             r["doc_key"]: r["cluster_id"]
@@ -286,7 +250,46 @@ class TestStreamingIngest:
             r["doc_key"]: r["cluster_id"]
             for r in run_dedup(spark, spark.createDataFrame(pdf), CFG).collect()
         }
-        assert got == want, "replay lost pairs of the crashed epoch"
+        assert got == want, "replay lost rows of the crashed epoch"
+
+    def test_second_query_keeps_the_first_querys_epochs(self, spark, tmp_path):
+        """A second ingest_stream over the same warehouse and config with a
+        fresh checkpoint restarts epoch ids at 0. It is another run (the
+        streaming query id), so its epochs never overwrite the first
+        query's: every earlier row stays, and the labels still equal
+        run_dedup."""
+        from dedup.streaming import EPOCH_TABLE, EPOCH_SCHEMA, stream_clusters
+
+        pdf, _ = make_corpus(n_base=20, seed=17)
+        half = len(pdf) // 2
+        in_dir = str(tmp_path / "in_runs")
+        os.makedirs(in_dir)
+        wh = Warehouse(spark, str(tmp_path / "wh_runs"))
+
+        def rows_by_run():
+            return {
+                (r["run"], r["epoch"], r["kind"]): r["n"]
+                for r in wh.read(EPOCH_TABLE, EPOCH_SCHEMA)
+                .groupBy("run", "epoch", "kind")
+                .agg(F.count("*").alias("n")).collect()
+            }
+
+        for rows in (pdf.iloc[:half], pdf.iloc[half:]):
+            spark.createDataFrame(rows).coalesce(1).write.mode(
+                "append").parquet(in_dir)
+            ingest_stream(spark, in_dir, wh, CFG, str(tmp_path / "ck_first"))
+        first = rows_by_run()
+        assert {e for _, e, _ in first} == {0, 1}
+
+        ingest_stream(spark, in_dir, wh, CFG, str(tmp_path / "ck_second"))
+        both = rows_by_run()
+        assert {k: both[k] for k in first} == first, "an earlier epoch changed"
+        assert len({run for run, _, _ in both}) == 2
+        got = {
+            r["doc_key"]: r["cluster_id"]
+            for r in stream_clusters(spark, wh, CFG).collect()
+        }
+        assert got == batch_labels(spark, pdf)
 
     def test_incremental_cluster_maintenance(self, spark, tmp_path):
         """VERDICT r3 #4: stream_clusters persists its label table and the
@@ -298,8 +301,7 @@ class TestStreamingIngest:
         from dedup.streaming import (
             LABEL_TABLE,
             _effective_edges,
-            read_stream_exact_pairs,
-            read_stream_verified_pairs,
+            read_stream_pairs,
             stream_clusters,
         )
 
@@ -316,9 +318,8 @@ class TestStreamingIngest:
         ingest_stream(spark, in_dir, wh, CFG, ckpt)
         stream_clusters(spark, wh, CFG)
         assert wh.exists(LABEL_TABLE), "label table must persist"
-        n_edges_r1 = read_stream_exact_pairs(wh).count()
-        if wh.exists("stream_verified_pairs"):
-            n_edges_r1 += read_stream_verified_pairs(wh, CFG).count()
+        n_edges_r1 = read_stream_pairs(wh, CFG, "exact").count()
+        n_edges_r1 += read_stream_pairs(wh, CFG, "verified").count()
 
         spark.createDataFrame(pdf.iloc[half:]).coalesce(1).write.mode(
             "append"
@@ -328,9 +329,8 @@ class TestStreamingIngest:
         # the quotient graph the second call will fold: already-clustered
         # edges contract to self-loops and vanish, so its size is bounded
         # by the edges the new batch introduced — not the accumulated total
-        edges = read_stream_exact_pairs(wh)
-        if wh.exists("stream_verified_pairs"):
-            edges = edges.unionByName(read_stream_verified_pairs(wh, CFG))
+        edges = read_stream_pairs(wh, CFG, "exact")
+        edges = edges.unionByName(read_stream_pairs(wh, CFG, "verified"))
         prior = wh.read(LABEL_TABLE).select("doc_key", "cluster_id").distinct()
         n_total = edges.count()
         n_quotient = _effective_edges(edges, prior).count()
@@ -452,19 +452,19 @@ class TestStreamingIngest:
         assert main(["--input", in_dir, "--output", out, "--stream",
                      "--substring"]) == 0
         wh = Warehouse(spark, out)
-        assert wh.exists("checkpoint_bands")
-        assert wh.exists("stream_verified_pairs")
+        assert epoch_rows(wh, "band").count() > 0
+        assert epoch_rows(wh, "verified").count() > 0
         assert wh.exists("clusters"), "--stream must write the clusters table"
         assert wh.exists("stream_fingerprints"), (
             "--substring must persist the incremental fingerprint state"
         )
         # second run over the same files: offsets consumed, nothing
         # re-banded, nothing re-fingerprinted
-        bands_before = wh.read("checkpoint_bands").count()
+        bands_before = epoch_rows(wh, "band").count()
         fps_before = wh.read("stream_fingerprints").count()
         assert main(["--input", in_dir, "--output", out, "--stream",
                      "--substring"]) == 0
-        assert wh.read("checkpoint_bands").count() == bands_before
+        assert epoch_rows(wh, "band").count() == bands_before
         assert wh.read("stream_fingerprints").count() == fps_before
 
     def test_watermarked_lang_counts_emit_on_window_close(self, spark, tmp_path):
@@ -562,8 +562,10 @@ class TestLabelCrash:
 
 # Spark jobs of one ingest_stream epoch on a prior state, and of the
 # stream_clusters call after it, on the fixture below (AQE stage jobs
-# included; AQE can vary identical runs by a job or two). Over four runs on
-# a 4-core host the epoch took 30 jobs and stream_clusters 12. The label
+# included; AQE can vary identical runs by a job or two). Over seven runs
+# on a 4-core host the epoch took 22 jobs and stream_clusters 11. The
+# epoch that landed its state in seven ordered appends took 30 and 12. The
+# label
 # layout that appended a delta generation per call and reconciled it on
 # read took 15; the one that also built the edge seed and the driver
 # union-find's labels from Python lists (PythonRDDs) and read the label
@@ -573,7 +575,7 @@ class TestLabelCrash:
 # 21 jobs over four runs (36 when it inferred each state table's schema
 # from Parquet footers and counted its new docs in a job of its own). The
 # pins add two jobs of headroom to the highest count seen.
-MAX_EPOCH_JOBS = 32
+MAX_EPOCH_JOBS = 24
 MAX_CLUSTER_JOBS = 14
 MAX_SUBSTRING_JOBS = 23
 
@@ -603,11 +605,11 @@ class TestStreamingJobs:
         spark.createDataFrame(pdf.iloc[-10:]).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
-        n_verified = wh.read("stream_verified_pairs").count()
+        n_verified = epoch_rows(wh, "verified").count()
         _, epoch_jobs = count_jobs(
             lambda: ingest_stream(spark, in_dir, wh, CFG, ckpt))
         # the pinned epoch runs every step: it verifies new pairs
-        assert wh.read("stream_verified_pairs").count() > n_verified
+        assert epoch_rows(wh, "verified").count() > n_verified
         labels, cluster_jobs = count_jobs(
             lambda: stream_clusters(spark, wh, CFG))
 
@@ -619,6 +621,47 @@ class TestStreamingJobs:
         assert got == want
         assert epoch_jobs <= MAX_EPOCH_JOBS, epoch_jobs
         assert cluster_jobs <= MAX_CLUSTER_JOBS, cluster_jobs
+
+
+class TestEpochWrites:
+    def test_one_warehouse_write_per_epoch(self, spark, tmp_path):
+        """An epoch on a prior state calls the Warehouse write methods
+        once: a single write of the epoch table (nested calls, such as the
+        lineage entry the write records, are not counted)."""
+        from dedup.streaming import EPOCH_TABLE
+
+        pdf, _ = make_corpus(n_base=10, seed=61)
+        # round 2 holds near and exact copies of round-1 docs
+        first = pdf.iloc[list(range(10)) + list(range(17, 25))]
+        second = pdf.iloc[list(range(10, 17)) + list(range(25, 30))]
+        in_dir = str(tmp_path / "in_one")
+        os.makedirs(in_dir)
+        wh = Warehouse(spark, str(tmp_path / "wh_one"))
+        ckpt = str(tmp_path / "ck_one")
+        spark.createDataFrame(first).coalesce(1).write.mode("append").parquet(
+            in_dir)
+        ingest_stream(spark, in_dir, wh, CFG, ckpt)
+
+        calls, depth = [], [0]
+        for name in ("write", "append", "append_metrics", "record_metrics",
+                     "record_lineage", "drop"):
+            def counted(*a, _real=getattr(wh, name), _name=name, **kw):
+                if depth[0] == 0:
+                    calls.append((_name, kw.get("name", a[1] if len(a) > 1
+                                                else None)))
+                depth[0] += 1
+                try:
+                    return _real(*a, **kw)
+                finally:
+                    depth[0] -= 1
+
+            setattr(wh, name, counted)
+        spark.createDataFrame(second).coalesce(1).write.mode(
+            "append").parquet(in_dir)
+        ingest_stream(spark, in_dir, wh, CFG, ckpt)
+        assert calls == [("write", EPOCH_TABLE)], calls
+        # the epoch ran every step: it signed, banded and verified
+        assert epoch_rows(wh, "verified").count() > 0
 
 
 class TestStreamingSoak:

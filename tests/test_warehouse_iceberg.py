@@ -6,7 +6,9 @@ create()`, `spark.table`, `spark.catalog.tableExists`, `DROP TABLE` —
 cannot run against a real catalog here (VERDICT r5 #6: it was dead-untested
 code). These tests pin the branch against a stub of exactly the Spark
 surface it touches, asserting the CONTRACT: which DataFrameWriterV2 verbs
-fire for which modes, that manifest/lineage entries are recorded with the
+fire for which modes, that a write counts its rows with an observation on
+the write itself instead of re-reading the table, that manifest/lineage
+entries are recorded with the
 catalog-qualified table name, and that resume semantics (is_complete,
 config-hash refusal) are identical to the Parquet fallback. On a cluster
 with `spark.sql.catalog.dedup` configured the same calls land on Iceberg
@@ -24,10 +26,12 @@ from dedup.warehouse import Warehouse
 
 class FakeCatalogStore:
     """In-memory stand-in for an Iceberg catalog: table name -> list of
-    (verb, rows) write events; `rows` is the fake row payload."""
+    (verb, rows) write events; `rows` is the fake row payload. Rows of a
+    partitioned table are (partition, value) tuples."""
 
     def __init__(self):
         self.tables: dict[str, list] = {}
+        self.partitioning: dict[str, tuple] = {}
         self.events: list[tuple[str, str]] = []
 
     def exists(self, name: str) -> bool:
@@ -37,6 +41,20 @@ class FakeCatalogStore:
 class FakeWriterV2:
     def __init__(self, store: FakeCatalogStore, table: str, rows: list):
         self._store, self._table, self._rows = store, table, rows
+        self._partitioning: tuple = ()
+
+    def partitionedBy(self, *cols) -> "FakeWriterV2":
+        self._partitioning = cols
+        return self
+
+    def overwritePartitions(self) -> None:
+        if not self._store.exists(self._table):
+            raise RuntimeError(f"table {self._table} not found")
+        replaced = {part for part, _ in self._rows}
+        self._store.tables[self._table] = [
+            r for r in self._store.tables[self._table] if r[0] not in replaced
+        ] + list(self._rows)
+        self._store.events.append(("overwritePartitions", self._table))
 
     def createOrReplace(self) -> None:
         self._store.tables[self._table] = list(self._rows)
@@ -46,6 +64,7 @@ class FakeWriterV2:
         if self._store.exists(self._table):
             raise RuntimeError(f"table {self._table} already exists")
         self._store.tables[self._table] = list(self._rows)
+        self._store.partitioning[self._table] = self._partitioning
         self._store.events.append(("create", self._table))
 
     def append(self) -> None:
@@ -56,9 +75,25 @@ class FakeWriterV2:
         self._store.events.append(("append", self._table))
 
 
+class FakeObservation:
+    """Stands in for pyspark's Observation: FakeDF.observe fills it with
+    the row count of the frame the write consumes."""
+
+    def __init__(self):
+        self.rows = None
+
+    @property
+    def get(self) -> dict:
+        return {"rows": self.rows}
+
+
 class FakeDF:
     def __init__(self, store: FakeCatalogStore, rows: list):
         self._store, self._rows = store, rows
+
+    def observe(self, observation: FakeObservation, *exprs) -> "FakeDF":
+        observation.rows = len(self._rows)
+        return self
 
     def writeTo(self, table: str) -> FakeWriterV2:
         return FakeWriterV2(self._store, table, self._rows)
@@ -89,8 +124,10 @@ class FakeSpark:
         self.catalog = FakeCatalog(store)
         self.conf = FakeConf(conf or {})
         self.sql_calls: list[str] = []
+        self.table_calls: list[str] = []
 
     def table(self, name: str) -> FakeDF:
+        self.table_calls.append(name)
         if not self._store.exists(name):
             raise RuntimeError(f"table {name} not found")
         return FakeDF(self._store, self._store.tables[name])
@@ -102,10 +139,13 @@ class FakeSpark:
 
 
 @pytest.fixture()
-def wh(tmp_path):
+def wh(spark, tmp_path, monkeypatch):
+    # the local session only builds the write's count Column; the fake
+    # observation takes the rows from FakeDF
+    monkeypatch.setattr("dedup.warehouse.Observation", FakeObservation)
     store = FakeCatalogStore()
-    spark = FakeSpark(store)
-    return Warehouse(spark, str(tmp_path), use_iceberg=True), store, spark
+    fake = FakeSpark(store)
+    return Warehouse(fake, str(tmp_path), use_iceberg=True), store, fake
 
 
 def test_autodetect_from_catalog_conf(tmp_path):
@@ -129,11 +169,28 @@ def test_write_overwrite_uses_create_or_replace(wh):
 
 
 def test_write_append_mode_appends(wh):
-    w, store, _ = wh
+    w, store, spark = wh
     w.write(FakeDF(store, [1]), "metrics", "cfgA")
-    w.write(FakeDF(store, [2]), "metrics", "cfgA", mode="append")
+    assert w.write(FakeDF(store, [2]), "metrics", "cfgA", mode="append") == 2
     assert store.tables["dedup.db.metrics"] == [1, 2]
     assert store.events[-1] == ("append", "dedup.db.metrics")
+    assert spark.table_calls == [], "a write must not re-read its table"
+
+
+def test_partitioned_write_overwrites_only_its_partitions(wh):
+    # the stream's epoch write: the first creates the partitioned table,
+    # later ones replace exactly the partitions they hold rows for
+    w, store, spark = wh
+    name, parts = "stream_epochs", ["config_hash", "kind", "run", "epoch"]
+    assert w.write(FakeDF(store, [("e0", 1), ("e1", 2)]), name, "cfgA",
+                   partition_by=parts) == 2
+    assert store.events == [("create", "dedup.db.stream_epochs")]
+    assert len(store.partitioning["dedup.db.stream_epochs"]) == len(parts)
+    assert w.write(FakeDF(store, [("e1", 3)]), name, "cfgA",
+                   partition_by=parts) == 1
+    assert store.events[-1] == ("overwritePartitions", "dedup.db.stream_epochs")
+    assert store.tables["dedup.db.stream_epochs"] == [("e0", 1), ("e1", 3)]
+    assert spark.table_calls == [], "a write must not re-read its table"
 
 
 def test_append_creates_missing_table_then_appends(wh):

@@ -48,6 +48,22 @@ class TestWriteRowCounts:
         assert wh.write(empty, "t", "cfg") == 0
         assert wh._load_manifest()["tables"]["t"]["rows"] == 0
 
+    def test_partitioned_table_exists(self, spark, tmp_path):
+        """A partitionBy-written table holds its files only under partition
+        directories; exists() must still see it, and a table whose only
+        files are a job's temporaries still does not exist."""
+        import os
+
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        spark.range(4).selectExpr("id", "id % 2 AS part").write.partitionBy(
+            "part").parquet(wh._path("t"))
+        assert wh.exists("t")
+        tmp = os.path.join(wh._path("u"), "_temporary", "0")
+        os.makedirs(tmp)
+        open(os.path.join(tmp, "part-0.parquet"), "w").close()
+        assert not wh.exists("u")
+        assert not wh.exists("missing")
+
     def test_append_records_table_total(self, spark, tmp_path):
         wh = Warehouse(spark, str(tmp_path / "wh"))
         assert wh.write(spark.range(7), "t", "cfg") == 7
