@@ -137,13 +137,15 @@ class Warehouse:
         if self.use_iceberg:
             table = self._iceberg_table(name)
             writer = df.writeTo(table)
-            if partition_by is None:
-                (writer.createOrReplace() if mode == "overwrite"
-                 else writer.append())
-            elif self.spark.catalog.tableExists(table):
-                writer.overwritePartitions()
+            if partition_by is not None:
+                if self.spark.catalog.tableExists(table):
+                    writer.overwritePartitions()
+                else:
+                    writer.partitionedBy(*map(F.col, partition_by)).create()
+            elif mode == "overwrite":
+                writer.createOrReplace()
             else:
-                writer.partitionedBy(*map(F.col, partition_by)).create()
+                writer.append()
             snapshot = "iceberg"
         else:
             table = name

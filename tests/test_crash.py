@@ -51,7 +51,7 @@ CFG = DedupConfig()
 OTHER = DedupConfig(jaccard_threshold=0.5)
 CRASHING = ("write", "append", "record_lineage", "_save_manifest")
 # the matrix never needs more points than this; reaching it means the
-# scenario stopped crashing at any k, i.e. the fixture lost its hook
+# scenario crashed at every k so far, and the loop would not end
 MAX_POINTS = 40
 
 

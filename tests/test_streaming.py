@@ -562,12 +562,11 @@ class TestLabelCrash:
 
 # Spark jobs of one ingest_stream epoch on a prior state, and of the
 # stream_clusters call after it, on the fixture below (AQE stage jobs
-# included; AQE can vary identical runs by a job or two). Over seven runs
+# included; AQE can vary identical runs by a job or two). Over four runs
 # on a 4-core host the epoch took 22 jobs and stream_clusters 11. The
 # epoch that landed its state in seven ordered appends took 30 and 12. The
-# label
-# layout that appended a delta generation per call and reconciled it on
-# read took 15; the one that also built the edge seed and the driver
+# label layout that appended a delta generation per call and reconciled it
+# on read took 15; the one that also built the edge seed and the driver
 # union-find's labels from Python lists (PythonRDDs) and read the label
 # generation with a max(ver) collect took 19-20; the one that re-ran the
 # micro-batch per consumer and decoded the checkpoint three times took
@@ -576,7 +575,7 @@ class TestLabelCrash:
 # from Parquet footers and counted its new docs in a job of its own). The
 # pins add two jobs of headroom to the highest count seen.
 MAX_EPOCH_JOBS = 24
-MAX_CLUSTER_JOBS = 14
+MAX_CLUSTER_JOBS = 13
 MAX_SUBSTRING_JOBS = 23
 
 
