@@ -49,6 +49,21 @@ def batch_labels(spark, pdf, cfg=CFG) -> dict:
             for r in run_dedup(spark, spark.createDataFrame(pdf), cfg).collect()}
 
 
+def crash_after_writing(wh: Warehouse, keep):
+    """A stand-in for `wh.write` that writes only the epoch rows where
+    `keep(df)` holds and then raises, as a crash partway through the
+    epoch's one write would leave the table."""
+    from dedup.streaming import EPOCH_TABLE
+
+    def write(df, name, config_hash, mode="overwrite", partition_by=None):
+        assert name == EPOCH_TABLE
+        Warehouse.write(wh, df.where(keep(df)), name, config_hash, mode,
+                        partition_by)
+        raise RuntimeError("crash in the epoch write")
+
+    return write
+
+
 class TestStreamingIngest:
     def test_incremental_ingest_matches_batch(self, spark, tmp_path):
         """Two arrival rounds through the stream == one batch run: same
@@ -199,7 +214,7 @@ class TestStreamingIngest:
         replaces them, so the labels equal run_dedup and no doc is signed
         twice."""
         from dedup.pipeline import run_dedup
-        from dedup.streaming import EPOCH_TABLE, stream_clusters
+        from dedup.streaming import stream_clusters
 
         pdf, _ = make_corpus(n_base=30, seed=13)
         half = len(pdf) // 2
@@ -207,13 +222,6 @@ class TestStreamingIngest:
         os.makedirs(in_dir)
         wh = Warehouse(spark, str(tmp_path / "wh_crash"))
         ckpt = str(tmp_path / "ck_crash")
-
-        def half_write_then_crash(df, name, config_hash, mode="overwrite",
-                                  partition_by=None):
-            assert name == EPOCH_TABLE
-            kept = df.where(F.pmod(F.xxhash64(*df.columns), F.lit(2)) == 0)
-            Warehouse.write(wh, kept, name, config_hash, mode, partition_by)
-            raise RuntimeError("crash in the epoch write")
 
         def signed_keys():
             return decode_signature_blocks(
@@ -229,7 +237,8 @@ class TestStreamingIngest:
             "append"
         ).parquet(in_dir)
         with monkeypatch.context() as m:
-            m.setattr(wh, "write", half_write_then_crash)
+            m.setattr(wh, "write", crash_after_writing(
+                wh, lambda df: F.pmod(F.xxhash64(*df.columns), F.lit(2)) == 0))
             with pytest.raises(Exception, match="crash in the epoch write"):
                 ingest_stream(spark, in_dir, wh, CFG, ckpt)
         bands_crashed = epoch_rows(wh, "band").count()
@@ -251,6 +260,113 @@ class TestStreamingIngest:
             for r in run_dedup(spark, spark.createDataFrame(pdf), CFG).collect()
         }
         assert got == want, "replay lost rows of the crashed epoch"
+
+    def test_recovery_rebands_signed_but_unbanded_docs(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Crash-ordering regression: an epoch whose write lands its
+        signature blocks and nothing else leaves docs signed but unbanded
+        and unpaired. The replay must not take its own landed signature
+        rows for prior state (that would hide the docs from the band
+        work-list and lose their pairs for good): its labels equal
+        run_dedup and no doc is signed twice."""
+        from dedup.streaming import stream_clusters
+
+        pdf, _ = make_corpus(n_base=30, seed=11)
+        half = len(pdf) // 2
+        in_dir = str(tmp_path / "in4")
+        os.makedirs(in_dir)
+        wh = Warehouse(spark, str(tmp_path / "wh4"))
+        ckpt = str(tmp_path / "ck4")
+
+        spark.createDataFrame(pdf.iloc[:half]).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        ingest_stream(spark, in_dir, wh, CFG, ckpt)
+        signed_r1 = epoch_rows(wh, "sig_block").count()
+        bands_r1 = epoch_rows(wh, "band").count()
+        verified_r1 = epoch_rows(wh, "verified").count()
+
+        spark.createDataFrame(pdf.iloc[half:]).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        with monkeypatch.context() as m:
+            m.setattr(wh, "write", crash_after_writing(
+                wh, lambda df: df["kind"] == "sig_block"))
+            with pytest.raises(Exception, match="crash in the epoch write"):
+                ingest_stream(spark, in_dir, wh, CFG, ckpt)
+        # the crash window: signatures landed, pairs and bands did not
+        assert epoch_rows(wh, "sig_block").count() > signed_r1
+        assert epoch_rows(wh, "band").count() == bands_r1
+        assert epoch_rows(wh, "verified").count() == verified_r1
+
+        # replay of the failed epoch
+        ingest_stream(spark, in_dir, wh, CFG, ckpt)
+        keys = decode_signature_blocks(
+            epoch_rows(wh, "sig_block"), CFG).select("doc_key")
+        assert keys.count() == keys.distinct().count(), "a doc was signed twice"
+
+        got = {
+            r["doc_key"]: r["cluster_id"]
+            for r in stream_clusters(spark, wh, CFG).collect()
+        }
+        assert got == batch_labels(spark, pdf), (
+            "recovery lost pairs for signed-but-unbanded docs"
+        )
+
+    def test_partial_crash_replay_bands_leftover_signatures(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """An epoch whose write lands every row but its bands (signatures,
+        pairs, doc keys, sha reps, metrics) leaves the band rows behind the
+        signature rows while every other kind is intact. The replay must
+        band the leftover signatures without signing them again, leave no
+        signed doc unbanded, and still cluster like run_dedup."""
+        from dedup.streaming import stream_clusters
+
+        pdf, _ = make_corpus(n_base=30, seed=13)
+        half = len(pdf) // 2
+        in_dir = str(tmp_path / "in_crash")
+        os.makedirs(in_dir)
+        wh = Warehouse(spark, str(tmp_path / "wh_crash"))
+        ckpt = str(tmp_path / "ck_crash")
+
+        def signed_keys():
+            return decode_signature_blocks(
+                epoch_rows(wh, "sig_block"), CFG).select("doc_key")
+
+        def unbanded():
+            banded = epoch_rows(wh, "band").select("doc_key").distinct()
+            return signed_keys().join(banded, "doc_key", "left_anti").count()
+
+        spark.createDataFrame(pdf.iloc[:half]).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        ingest_stream(spark, in_dir, wh, CFG, ckpt)
+
+        spark.createDataFrame(pdf.iloc[half:]).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        with monkeypatch.context() as m:
+            m.setattr(wh, "write", crash_after_writing(
+                wh, lambda df: df["kind"] != "band"))
+            with pytest.raises(Exception, match="crash in the epoch write"):
+                ingest_stream(spark, in_dir, wh, CFG, ckpt)
+        assert unbanded() > 0, "the crash must leave signed but unbanded docs"
+
+        # replay of the failed epoch
+        ingest_stream(spark, in_dir, wh, CFG, ckpt)
+        keys = signed_keys()
+        assert keys.count() == keys.distinct().count(), "a doc was signed twice"
+        assert unbanded() == 0
+
+        got = {
+            r["doc_key"]: r["cluster_id"]
+            for r in stream_clusters(spark, wh, CFG).collect()
+        }
+        assert got == batch_labels(spark, pdf), (
+            "replay lost pairs of the crashed epoch"
+        )
 
     def test_second_query_keeps_the_first_querys_epochs(self, spark, tmp_path):
         """A second ingest_stream over the same warehouse and config with a
