@@ -100,6 +100,15 @@ def get_spark(
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local"):
+        # a sort or aggregate task claims a whole Tungsten page on its first
+        # row, and Spark's default page (heap / cores / 16, 32 MB at
+        # local[4] on 4g) is a G1 humongous object spanning 16 contiguous
+        # regions. A stream epoch sorts many tasks of a few rows each;
+        # measured on a 4-core host over 4 stream runs each, 1 MB pages cut
+        # the humongous-allocation GCs from 24-37 to 10-15 a run and the
+        # JVM's peak resident memory from 1.5-2.1 GB to 1.0-1.2 GB
+        b = b.config("spark.buffer.pageSize", str(page_bytes(mem)))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
@@ -235,6 +244,13 @@ def kernel_partitions(df, task_bytes: int = 64 << 10) -> int | None:
     if est // max_pb + 1 >= par:
         return None
     return max(min(4 * par, est // task_bytes), 1)
+
+
+def page_bytes(heap: str) -> int:
+    """The smallest power-of-two Tungsten page, and at least Spark's 1 MB
+    floor, with which one task can still address a whole `heap`-sized JVM
+    heap through the 8192-entry page table."""
+    return max(1 << 20, 1 << (_parse_bytes(heap) // 8192 - 1).bit_length())
 
 
 def _parallelism(master: str) -> int:

@@ -333,10 +333,19 @@ def ingest_stream(
             lambda a, b: a.unionByName(b, allowMissingColumns=True),
             [df.withColumn("kind", F.lit(kind)) for kind, df in parts.items()],
         )
+        # rebalanced by kind, the write is a stage of its own after the
+        # verify and banding tasks, and a small epoch lands one file per
+        # kind (AQE splits a large kind by the advisory size). Without it
+        # the tasks that computed the union wrote it, one file per task,
+        # while the verify kernel held every core; each file the local
+        # filesystem creates forks a chmod off the JVM, and a fork that
+        # waits for a core before its exec still maps the JVM's memory, so
+        # a process-tree RSS sample could count the JVM two or three times
         wh.write(
             rows.withColumn("config_hash", F.lit(cfg_hash))
             .withColumn("run", F.lit(run))
-            .withColumn("epoch", F.lit(epoch).cast("long")),
+            .withColumn("epoch", F.lit(epoch).cast("long"))
+            .hint("rebalance", "kind"),
             EPOCH_TABLE, cfg_hash, partition_by=EPOCH_PARTS,
         )
 

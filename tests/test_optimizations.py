@@ -8,6 +8,8 @@ Covered:
 - hyperplane_buckets carry_vec vector ≡ the as_double join it replaced
 - session.kernel_partitions scale policy (small scan → even partitions,
   wide input → keep upstream partitioning)
+- session.page_bytes: 1 MB Tungsten pages up to an 8 GB heap, larger only
+  where the page table could not address the heap
 - the jaccard_clusters single-evaluation restructure (intersection size
   behind a lineage cut + arithmetic union) ≡ the direct formulation
 """
@@ -149,6 +151,17 @@ class TestKernelPartitions:
             assert kernel_partitions(docs) is None
         finally:
             spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+
+
+class TestPageBytes:
+    def test_small_pages_that_still_address_the_heap(self):
+        from dedup.session import _parse_bytes, page_bytes
+
+        assert page_bytes("4g") == page_bytes("8g") == 1 << 20
+        assert page_bytes("16g") == 2 << 20
+        assert page_bytes("48g") == 8 << 20
+        for heap in ("4g", "16g", "48g", "3000m"):
+            assert 8192 * page_bytes(heap) >= _parse_bytes(heap)
 
 
 class TestJaccardRestructure:

@@ -778,6 +778,27 @@ class TestEpochWrites:
         # the epoch ran every step: it signed, banded and verified
         assert epoch_rows(wh, "verified").count() > 0
 
+    def test_small_epoch_writes_one_file_per_kind(self, spark, tmp_path):
+        """The epoch write is rebalanced by kind: a micro-batch read from
+        four input files still lands one file in each (kind, run, epoch)
+        partition, not one per upstream task."""
+        from dedup.streaming import EPOCH_TABLE
+
+        pdf, _ = make_corpus(n_base=10, seed=62)
+        in_dir = str(tmp_path / "in_files")
+        spark.createDataFrame(pdf).repartition(4).write.parquet(in_dir)
+        wh = Warehouse(spark, str(tmp_path / "wh_files"))
+        ingest_stream(spark, in_dir, wh, CFG, str(tmp_path / "ck_files"))
+
+        files = {}
+        for d, _, names in os.walk(os.path.join(wh.root, EPOCH_TABLE)):
+            if os.path.basename(d).startswith("epoch="):
+                files[os.path.relpath(d, wh.root)] = sum(
+                    n.endswith(".parquet") for n in names)
+        kinds = {p.split("kind=")[1].split(os.sep)[0] for p in files}
+        assert {"doc_key", "sig_block", "band", "verified"} <= kinds, files
+        assert set(files.values()) == {1}, files
+
 
 class TestStreamingSoak:
     def test_fifty_batch_soak_bounded_log_and_batch_parity(
